@@ -8038,8 +8038,8 @@ def q_cms_join_size(spark, sf_dir):
     est = cms_join_size(
         cms_build(counts, "k", depth=_CMS_DEPTH, width=_CMS_WIDTH,
                   weight_col="na"),
-        cms_build(counts.filter(F.col("nb") > 0), "k", depth=_CMS_DEPTH,
-                  width=_CMS_WIDTH, weight_col="nb"),
+        cms_build(counts, "k", depth=_CMS_DEPTH, width=_CMS_WIDTH,
+                  weight_col="nb"),
         depth=_CMS_DEPTH,
     )
     true_ip = counts.filter(F.col("nb") > 0).agg(

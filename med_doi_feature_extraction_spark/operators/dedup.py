@@ -255,79 +255,6 @@ def with_minhash(df: DataFrame, text_col: str, sig_col: str = "minhash_sig") -> 
     return df.withColumn(sig_col, _sig_udf(text_col))
 
 
-#: Vocabulary cap for the bitmask Jaccard-verify fast path: one long
-#: holds one bit per distinct token.
-_MASK_VOCAB_CAP = 64
-
-
-def _small_vocab(
-    dfs: Sequence[DataFrame], text_col: str, cap: int = _MASK_VOCAB_CAP
-) -> list[str] | None:
-    """All distinct ``tokens_col`` tokens across the inputs when there
-    are at most ``cap`` of them, else None (templated/boilerplate
-    corpora and tag-set columns routinely fit; open-vocabulary text
-    does not and falls back to the array path).
-
-    ONE bounded plan-time job returning ≤ cap+1 driver rows — the same
-    index-build convention as ``similarity.train_ivf_centroids`` /
-    ``bm25_score``'s corpus stats: building the dictionary is part of
-    constructing the verify operator, not corpus dataflow."""
-    u = dfs[0].select(tokens_col(text_col).alias("_t"))
-    for d in dfs[1:]:
-        u = u.unionByName(d.select(tokens_col(text_col).alias("_t")))
-    rows = (
-        u.select(F.explode("_t").alias("_tok"))
-        .distinct()
-        .limit(cap + 1)
-        .collect()
-    )
-    if not rows or len(rows) > cap:
-        return None
-    return sorted(r["_tok"] for r in rows)
-
-
-def token_mask_col(text_col: str, vocab: list[str]) -> F.Column:
-    """64-bit token-SET bitmask under the injective token→bit map
-    ``vocab[i] → 1<<i`` (requires ``len(vocab) ≤ 64`` and vocab
-    covering every token of the column, both guaranteed by
-    :func:`_small_vocab` over the same input). Because the map is
-    injective and total, ``bit_count(ma & mb)`` / ``bit_count(ma | mb)``
-    are EXACTLY ``|A∩B|`` / ``|A∪B|`` of the token sets — bit-identical
-    Jaccard to the array path at a fraction of the per-pair cost (two
-    long ops instead of hashing every token of both arrays). NULL text
-    (null token array) keeps a NULL mask, mirroring the array path."""
-    m = F.create_map(
-        *[
-            c
-            for i, t in enumerate(vocab)
-            for c in (F.lit(t), F.lit(1 << i).cast("long"))
-        ]
-    )
-    toks = tokens_col(text_col)
-    agg = F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: acc.bitwiseOR(F.element_at(m, t)),
-    )
-    return F.when(toks.isNotNull(), agg)
-
-
-def _jaccard_from_masks(pairs: DataFrame) -> DataFrame:
-    """``jaccard`` from ``_ma``/``_mb`` bitmasks — same
-    when(union>0)/otherwise(0.0)/round(6) ladder as
-    :func:`jaccard_pairs`, so the two verify paths agree bitwise."""
-    inter = F.bit_count(F.col("_ma").bitwiseAND(F.col("_mb")))
-    union = F.bit_count(F.col("_ma").bitwiseOR(F.col("_mb")))
-    return pairs.withColumn(
-        "jaccard",
-        F.round(
-            F.when(union > 0, inter.cast("double") / union.cast("double"))
-            .otherwise(F.lit(0.0)),
-            6,
-        ),
-    )
-
-
 def minhash_bands(
     sigs: DataFrame,
     id_col: str,
@@ -391,29 +318,14 @@ def minhash_dedup(
     max_bucket: int | None = DEFAULT_MAX_BAND_BUCKET,
 ) -> DataFrame:
     """Verified near-dup pairs: LSH candidates filtered by exact
-    token-set Jaccard ≥ threshold.
-
-    Verify-stage fast path: when the corpus vocabulary fits in 64
-    distinct tokens (templated corpora, tag sets) each doc's token SET
-    is a long bitmask and the per-pair intersect is two bit ops —
-    bit-identical jaccard (injective total token→bit map), pinned by a
-    parity test. Open-vocabulary corpora use the array path."""
+    token-set Jaccard ≥ threshold."""
     cands = minhash_lsh_candidates(
         df, id_col, text_col, n_bands, rows_per_band, max_bucket
     )
-    vocab = _small_vocab([df], text_col)
-    if vocab is not None:
-        masks = spread_scan(
-            df.select(F.col(id_col), token_mask_col(text_col, vocab).alias("_m"))
-        )
-        a = masks.select(F.col(id_col).alias("id_a"), F.col("_m").alias("_ma"))
-        b = masks.select(F.col(id_col).alias("id_b"), F.col("_m").alias("_mb"))
-        verified = _jaccard_from_masks(cands.join(a, "id_a").join(b, "id_b"))
-    else:
-        toks = spread_scan(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
-        a = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("tokens_a"))
-        b = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("tokens_b"))
-        verified = jaccard_pairs(cands.join(a, "id_a"), b, ["id_b"])
+    toks = spread_scan(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
+    a = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("tokens_a"))
+    b = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("tokens_b"))
+    verified = jaccard_pairs(cands.join(a, "id_a"), b, ["id_b"])
     return verified.filter(F.col("jaccard") >= threshold).select(
         "id_a", "id_b", "jaccard"
     )
@@ -711,26 +623,13 @@ def incremental_minhash_dedup(
         F.col(id_col).alias("dup_of"), "band", "band_hash"
     )
     cands = incremental_band_candidates(bands_new, bands_corp, max_bucket)
-    # same bitmask verify fast path as minhash_dedup — vocab probed
-    # over BOTH sides so the token→bit map is total for every pair
-    vocab = _small_vocab([new_df, corpus_df], text_col)
-    if vocab is not None:
-        mc = token_mask_col(text_col, vocab)
-        m_new = new_df.select(F.col(id_col).alias("id_new"), mc.alias("_ma"))
-        m_corp = spread_scan(
-            corpus_df.select(F.col(id_col).alias("dup_of"), mc.alias("_mb"))
-        )
-        verified = _jaccard_from_masks(
-            cands.join(m_new, "id_new").join(m_corp, "dup_of")
-        )
-    else:
-        toks_new = new_df.select(
-            F.col(id_col).alias("id_new"), tokens_col(text_col).alias("tokens_a")
-        )
-        toks_corp = corpus_df.select(
-            F.col(id_col).alias("dup_of"), tokens_col(text_col).alias("tokens_b")
-        )
-        verified = jaccard_pairs(cands.join(toks_new, "id_new"), toks_corp, ["dup_of"])
+    toks_new = new_df.select(
+        F.col(id_col).alias("id_new"), tokens_col(text_col).alias("tokens_a")
+    )
+    toks_corp = corpus_df.select(
+        F.col(id_col).alias("dup_of"), tokens_col(text_col).alias("tokens_b")
+    )
+    verified = jaccard_pairs(cands.join(toks_new, "id_new"), toks_corp, ["dup_of"])
     verified = verified.filter(F.col("jaccard") >= threshold)
     from pyspark.sql import Window
 

@@ -140,7 +140,9 @@ def cms_build(
     bit-identical to counting the raw rows, but the (sha-based,
     engine-portable ⇒ expensive) bucket hash runs once per DISTINCT
     key rather than once per occurrence. The cheap "aggregate before
-    you compute" form for callers that already need per-key counts."""
+    you compute" form for callers that already need per-key counts.
+    Rows whose weight is NULL or ≤ 0 stand for no occurrence and are
+    dropped, so they cannot materialize an ``n = 0`` cell."""
     coords = F.explode(
         F.array(
             *[
@@ -152,8 +154,11 @@ def cms_build(
             ]
         )
     ).alias("c")
-    w = F.lit(1) if weight_col is None else F.col("_w")
-    keep = [] if weight_col is None else [F.col(weight_col).alias("_w")]
+    if weight_col is None:
+        w, keep = F.lit(1), []
+    else:
+        df = df.filter(F.col(weight_col) > 0)
+        w, keep = F.col("_w"), [F.col(weight_col).alias("_w")]
     return (
         df.select(coords, *keep)
         .select(F.col("c.row").alias("row"), F.col("c.pos").alias("pos"), w.alias("_n1"))

@@ -67,6 +67,23 @@ def test_cms_absent_key_estimates_zero_when_sparse(spark, keys):
     assert row.est == 0
 
 
+def test_cms_weighted_build_matches_raw_rows(spark, keys):
+    """``weight_col`` build from per-key counts is bit-identical to
+    counting the raw rows, also when the weighted table carries keys
+    with a zero or NULL weight (no occurrence: no cell, not n = 0)."""
+    raw = cms_build(keys, "k", depth=DEPTH, width=WIDTH)
+    counts = keys.groupBy("k").agg(F.count(F.lit(1)).cast("long").alias("w"))
+    ghosts = spark.createDataFrame(
+        [(10**9, 0), (10**9 + 1, None)], "k long, w long"
+    )
+    weighted = cms_build(
+        counts.unionByName(ghosts), "k", depth=DEPTH, width=WIDTH, weight_col="w"
+    )
+    assert sorted(map(tuple, weighted.collect())) == sorted(
+        map(tuple, raw.collect())
+    )
+
+
 def test_cms_join_size_bounds(spark):
     """Inner-product estimate obeys the one-sided CMS guarantee:
     true ≤ est ≤ true + (e/width)·|A|·|B| (Cormode-Muthukrishnan)."""

@@ -307,26 +307,48 @@ def test_hot_band_bucket_cap(spark):
     assert sim_cap.count() < sim_un.count()
 
 
-def test_lsh_plan_construction_launches_no_jobs(spark, emb_df):
-    """VERDICT r1 #4: building the lsh_topk / embedding_near_dup plans
-    must not trigger a driver-side action (dim inference happens inside
-    the udf from the first Arrow batch)."""
+def test_lsh_plan_construction_launches_no_jobs(spark, emb_df, docs_df):
+    """VERDICT r1 #4: building the lsh_topk / embedding_near_dup /
+    minhash_dedup / incremental_minhash_dedup plans must not trigger a
+    driver-side action (dim inference happens inside the udf from the
+    first Arrow batch; the Jaccard verify needs no vocabulary probe).
+    Besides the patched DataFrame actions, the status tracker must see
+    no job at all in the construction block's job group."""
     from unittest.mock import patch
     from pyspark.sql import DataFrame
 
     def boom(*a, **k):
         raise AssertionError("driver action during plan construction")
 
-    with patch.object(DataFrame, "first", boom), patch.object(
-        DataFrame, "head", boom
-    ), patch.object(DataFrame, "collect", boom), patch.object(
-        DataFrame, "count", boom
-    ):
-        plan1 = similarity.lsh_topk(emb_df, emb_df.filter(F.col("vec_id") < 4), k=3)
-        plan2 = similarity.embedding_near_dup(emb_df, threshold=0.99)
+    sc = spark.sparkContext
+    group = "test_lsh_plan_construction_launches_no_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        with patch.object(DataFrame, "first", boom), patch.object(
+            DataFrame, "head", boom
+        ), patch.object(DataFrame, "collect", boom), patch.object(
+            DataFrame, "count", boom
+        ):
+            plan1 = similarity.lsh_topk(emb_df, emb_df.filter(F.col("vec_id") < 4), k=3)
+            plan2 = similarity.embedding_near_dup(emb_df, threshold=0.99)
+            plan3 = dedup.minhash_dedup(docs_df, "doc_id", "text", threshold=0.5)
+            plan4 = dedup.incremental_minhash_dedup(
+                docs_df.filter(F.col("doc_id") >= 100),
+                docs_df.filter(F.col("doc_id") < 100),
+                "doc_id", "text", threshold=0.5,
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the async
+    # listener bus: drain it so a job launched above cannot be missed
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
     # the plans still execute correctly afterwards
     assert plan1.count() > 0
     assert plan2.count() >= 0
+    assert {(r.id_a, r.id_b) for r in plan3.collect()} >= {(0, 100), (1, 101)}
+    assert {r.id_new for r in plan4.collect()} == {100, 101}
 
 
 def _union_find_oracle(pairs_pdf, all_ids):
@@ -495,38 +517,47 @@ def test_containment_join_exact_where_lsh_misses(spark):
     assert (0, 12) not in {(a, b) for a, b in zip(lsh.id_a, lsh.id_b)}
 
 
-def test_mask_verify_parity_small_vocab(spark):
-    """The ≤64-token bitmask Jaccard-verify fast path must be
-    bit-identical to the array path: same pairs, same rounded jaccard,
-    on a corpus that triggers it (small vocab, heavy overlap), and the
-    vocab probe must decline open vocabularies."""
+def test_minhash_dedup_verify_matches_python_jaccard(spark):
+    """Verify-stage oracle on an open vocabulary (> 64 distinct
+    tokens): ``minhash_dedup`` returns exactly the LSH candidates whose
+    plain-Python token-set Jaccard, rounded to 6 places, reaches the
+    threshold. Empty-token ``""``/``"   "`` and NULL text ride along:
+    the two blank docs share the one-token set {""}; NULL never
+    verifies."""
+    import re
+
     rng = np.random.default_rng(7)
-    vocab = [f"w{i}" for i in range(20)]
+    vocab = [f"w{i}" for i in range(200)]
     texts = [
-        " ".join(rng.choice(vocab, size=rng.integers(5, 15)))
+        " ".join(rng.choice(vocab, size=rng.integers(8, 20)))
         for _ in range(60)
     ]
-    texts += ["", "   ", None]  # empty-token "" and NULL semantics ride along
+    for src in range(0, 40, 2):  # near-dups: swap 1-3 tokens of a base doc
+        words = texts[src].split()
+        for pos in rng.choice(len(words), size=rng.integers(1, 4), replace=False):
+            words[pos] = str(rng.choice(vocab))
+        texts.append(" ".join(words))
+    texts += ["", "   ", None]
     df = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts})
     )
-    probed = dedup._small_vocab([df], "text")
-    assert probed is not None and len(probed) <= 64
+    sets = [
+        None if t is None else set(re.split(r"\s+", t.strip().lower()))
+        for t in texts
+    ]
+    assert len(set().union(*[s for s in sets if s])) > 64
+    t = 0.7
 
-    got = dedup.minhash_dedup(df, "doc_id", "text", threshold=0.5).toPandas()
+    def jac(i, j):
+        if sets[i] is None or sets[j] is None:
+            return 0.0
+        return round(len(sets[i] & sets[j]) / len(sets[i] | sets[j]), 6)
 
-    # array-path reference: identical pipeline with the mask path
-    # disabled via a cap of 0 (probe declines)
-    cands = dedup.minhash_lsh_candidates(df, "doc_id", "text")
-    toks = df.select(F.col("doc_id"), dedup.tokens_col("text").alias("toks"))
-    a = toks.select(F.col("doc_id").alias("id_a"), F.col("toks").alias("tokens_a"))
-    b = toks.select(F.col("doc_id").alias("id_b"), F.col("toks").alias("tokens_b"))
-    ref = (
-        dedup.jaccard_pairs(cands.join(a, "id_a"), b, ["id_b"])
-        .filter(F.col("jaccard") >= 0.5)
-        .select("id_a", "id_b", "jaccard")
-        .toPandas()
-    )
-    key = lambda d: sorted(map(tuple, d[["id_a", "id_b", "jaccard"]].values.tolist()))
-    assert key(got) == key(ref)
-    assert dedup._small_vocab([df], "text", cap=3) is None  # open vocab declines
+    cands = dedup.minhash_lsh_candidates(df, "doc_id", "text").collect()
+    scored = {(r.id_a, r.id_b): jac(r.id_a, r.id_b) for r in cands}
+    assert any(j < t for j in scored.values())  # the filter has work to do
+    expected = {(a, b, j) for (a, b), j in scored.items() if j >= t}
+    got = dedup.minhash_dedup(df, "doc_id", "text", threshold=t).collect()
+    assert {(r.id_a, r.id_b, r.jaccard) for r in got} == expected
+    n = len(texts)
+    assert (n - 3, n - 2, 1.0) in expected  # "" and "   " share {""}
