@@ -37,6 +37,7 @@ from med_doi_feature_extraction_spark.operators.quality import (
     validate,
 )
 from med_doi_feature_extraction_spark.operators.upsert import upsert
+from med_doi_feature_extraction_spark.session import spread
 from med_doi_feature_extraction_spark.operators.windows import (
     dedupe_latest,
     forward_fill,
@@ -68,50 +69,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ensure_package_on_workers(spark)
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Parallelism floor for CPU-bound kernel stages (optimization
-    guide §2.5, "input skew: one huge unsplittable file ... otherwise
-    repartition immediately after the read").
-
-    The fixture tables are single-row-group parquet files, so the scan
-    yields ONE productive task no matter how small the split config
-    makes maxSplitBytes — every downstream codegen/Arrow span then runs
-    on 1 of N cores. One round-robin exchange of the (column-pruned)
-    input costs a few MB and unlocks the whole cluster.
-
-    Scale-adaptive via input BYTES, not split count: split count
-    over-reports parallelism for a file whose row groups are far
-    bigger than maxSplitBytes (only splits containing a row-group
-    midpoint produce rows — orders.parquet plans 25 splits but only 2
-    productive tasks). When the whole input is smaller than one
-    configured split per core the exchange is bounded by that same
-    small size, so it is cheap insurance; for anything bigger (any
-    production-sized table) the scan's own splits provide the
-    parallelism and this is a no-op."""
-    import os
-
-    sc = df.sparkSession.sparkContext
-    want = sc.defaultParallelism
-    try:
-        max_split = int(
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes")
-        )
-    except Exception:
-        max_split = 128 * 1024 * 1024
-    try:
-        total = 0
-        for f in df.inputFiles():
-            p = f[7:] if f.startswith("file:") else f
-            total += os.path.getsize(p)
-    except OSError:
-        from med_doi_feature_extraction_spark.operators.dedup import spread_scan
-
-        return spread_scan(df)
-    if total >= want * max_split:
-        return df
-    return df.repartition(want)
 
 
 # ---------------------------------------------------------------- events: windows
@@ -754,7 +711,7 @@ def _snapshot_fixture(spark, sf_dir):
     ``max(1, n − k·⌊n/4⌋)`` whitespace tokens — graded shrinkage so
     consecutive-snapshot similarity varies with document length.
     Mirrored verbatim by the ``snap`` CTE in the oracles."""
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     ks = spark.range(3).select(F.col("id").cast("int").alias("k"))
     toks = F.split(F.col("text"), r"\s+")
     keep = F.greatest(
@@ -912,7 +869,7 @@ def q_funnel_audit(spark, sf_dir):
         funnel_audit,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     stages = [(n, mk()) for n, mk, _ in _funnel_stages()]
     return funnel_audit(docs, stages).select(
         "doc_id", "first_failed", "kept"
@@ -936,7 +893,7 @@ def q_funnel_summary(spark, sf_dir):
         funnel_summary,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     stages = [(n, mk()) for n, mk, _ in _funnel_stages()]
     return funnel_summary(docs, stages)
 
@@ -983,7 +940,7 @@ def q_pmi(spark, sf_dir):
         pmi_collocations,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return pmi_collocations(docs, "text", min_count=5, k=100)
 
 
@@ -1534,7 +1491,7 @@ def q_fd_check(spark, sf_dir):
         fd_violations,
     )
 
-    orders = _spread(_read(spark, sf_dir, "orders"))
+    orders = spread(_read(spark, sf_dir, "orders"))
     return fd_violations(orders, "o_custkey", "o_orderpriority", sample=3)
 
 
@@ -1979,7 +1936,7 @@ def q_doc_chunks(spark, sf_dir):
         chunk_documents,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return chunk_documents(
         docs, "doc_id", "text", chunk_tokens=40, overlap=10
     ).select("doc_id", "chunk_id", "chunk_start", "chunk_len", "chunk_text")
@@ -2090,7 +2047,7 @@ FROM a
 
 
 def q_lang_id(spark, sf_dir):
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", "lang",
         feat.lang_id(F.col("text")).alias("lang_pred"),
@@ -2133,7 +2090,7 @@ def q_lang_confusion(spark, sf_dir):
         classification_report,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     pred = docs.select(
         "lang", feat.lang_id(F.col("text")).alias("lang_pred")
     )
@@ -2281,7 +2238,7 @@ FROM c
 
 
 def q_exact_dedup(spark, sf_dir):
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     out = dedup.exact_dedup(docs, "doc_id", "text")
     return out.select(
         "text_hash",
@@ -2784,7 +2741,7 @@ def q_pca_whiten(spark, sf_dir):
 
 
 def q_cosine_topk(spark, sf_dir):
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = spread(_read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     out = similarity.cosine_topk(emb, queries, k=5)
     return out.select(
@@ -4529,7 +4486,7 @@ def _dsir_weights_df(spark, sf_dir):
         dsir_logweights_fused,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     # fused fit+score: one combined per-bucket broadcast, 3 gram-pass
     # derivations instead of 6 — bit-identical to the compositional
     # fit+score path (dsir parity tests)
@@ -4665,7 +4622,7 @@ def q_token_mixture(spark, sf_dir):
         token_budget_sample,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return token_budget_sample(
         docs, "doc_id", "lang", _ntok_col(), _MIX_BUDGETS
     ).select("doc_id", "lang")
@@ -4722,7 +4679,7 @@ def q_script_profile(spark, sf_dir):
         script_count,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     t = _script_text_col()
     return docs.select(
         "doc_id",
@@ -4797,7 +4754,7 @@ def q_c4_filters(spark, sf_dir):
         c4_line_stats,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).withColumn(
+    docs = spread(_read(spark, sf_dir, "documents")).withColumn(
         "text", _c4_text_col()
     )
     stats = c4_line_stats(F.col("text"))
@@ -4850,7 +4807,7 @@ def q_token_ids(spark, sf_dir):
     )
 
     base = _token_ids_base()
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     tok = tokenize_ids_udf(default_merges(120))
     docs.select("doc_id", tok("text").alias("ids")).write.mode(
         "overwrite"
@@ -5066,7 +5023,7 @@ def q_zipf_fit(spark, sf_dir):
         zipf_fit,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return zipf_fit(docs, "text", group_col="lang")
 
 
@@ -5087,7 +5044,7 @@ def q_corpus_card(spark, sf_dir):
         corpus_card,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return corpus_card(docs, "text", "lang", **_CARD_BOUNDS)
 
 
@@ -5200,7 +5157,7 @@ def q_gopher_rules(spark, sf_dir):
         gopher_gate,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).withColumn(
+    docs = spread(_read(spark, sf_dir, "documents")).withColumn(
         "text", _gopher_text_col()
     )
     return gopher_gate(docs, "text", **_GOPHER_BOUNDS).select(
@@ -5226,7 +5183,7 @@ FROM src"""
 def _synth_urls(spark, sf_dir):
     # orders is a 2-row-group file: spread before the URL regex surface
     # downstream so host parsing runs cluster-wide (guide §2.5).
-    o = _spread(_read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"))
+    o = spread(_read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"))
     ck = (F.col("o_custkey") % 50).cast("string")
     tld = (F.col("o_custkey") % 7).cast("string")
     ok = F.col("o_orderkey")
@@ -6856,7 +6813,7 @@ def q_phrase_search(spark, sf_dir):
         phrase_search,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return phrase_search(docs, "doc_id", "text", "order fast")
 
 
@@ -6947,7 +6904,7 @@ def q_trending(spark, sf_dir):
         trending_tokens,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).withColumn(
+    docs = spread(_read(spark, sf_dir, "documents")).withColumn(
         "day", F.col("doc_id") % 7
     )
     return trending_tokens(docs, "text", "day", trail=3, min_count=3)
@@ -6985,7 +6942,7 @@ def q_postings(spark, sf_dir):
         build_postings,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return build_postings(docs, "doc_id", "text", cap=7, n_salts=4)
 
 
@@ -7008,7 +6965,7 @@ def q_tfidf_topk(spark, sf_dir):
     """Top-3 tokens per doc by smoothed tf·idf."""
     from med_doi_feature_extraction_spark.operators.corpus_stats import tfidf_topk
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     out = tfidf_topk(docs, "doc_id", "text", k=3, min_df=2)
     return out.select(
         "doc_id", "token",
@@ -8106,7 +8063,7 @@ def q_encoding_quality(spark, sf_dir):
         encoding_features,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).select(
+    docs = spread(_read(spark, sf_dir, "documents")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -8412,7 +8369,7 @@ def q_kn_score(spark, sf_dir):
         train_kn_bigram_lm,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     bg, cx, co = train_kn_bigram_lm(docs, "text")
     out = kn_quality_score(docs, bg, cx, co, "doc_id", "text")
     return out.select(
@@ -8441,7 +8398,7 @@ def q_lm_quality(spark, sf_dir):
         train_unigram_lm,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     lm = train_unigram_lm(docs, "text")
     out = lm_quality_score(docs, lm, "doc_id", "text")
     return out.select(
@@ -9432,7 +9389,7 @@ def q_hard_negatives(spark, sf_dir):
         hard_negatives,
     )
 
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = spread(_read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     pos = (
         queries.select(
@@ -9495,7 +9452,7 @@ def q_hybrid_rrf(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = spread(_read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     sys_a = cosine_topk(emb, queries, k=10).select(
         "query_id", "neighbor_id", "rank"
@@ -9567,7 +9524,7 @@ def q_sq_topk(spark, sf_dir):
     scaling cancels in the cosine ratio and int8 dots/norms are small
     exact integers, so — unlike float ANN — the oracle can replicate
     quantize + score + rank hash-exact."""
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = spread(_read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     out = similarity.sq_topk(emb, queries, k=5)
     return out.select(
@@ -9608,7 +9565,7 @@ def q_sq_rerank(spark, sf_dir):
     (similarity.sq_rerank_topk): pass 1 over int8 codes picks
     k·expand candidates, pass 2 rescores only those at full float
     precision. Oracle replicates both stages."""
-    emb = _spread(_read(spark, sf_dir, "embeddings"))
+    emb = spread(_read(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 8)
     out = similarity.sq_rerank_topk(emb, queries, k=5, expand=4)
     return out.select(
@@ -9764,7 +9721,7 @@ def q_bm25(spark, sf_dir):
         bm25_score,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return bm25_score(docs, "doc_id", "text", ["spark", "merge", "window", "batch"])
 
 
@@ -9824,7 +9781,7 @@ def q_nb_classify(spark, sf_dir):
         train_nb,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     model = train_nb(docs.filter(F.col("doc_id") % 5 != 0), "text", "lang")
     assert [c.label for c in model.classes] == _NB_LABELS
     out = nb_score(docs, model, "doc_id", "text")
@@ -9932,7 +9889,7 @@ def q_warc_roundtrip(spark, sf_dir):
         write_warc,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     pages = docs.select(
         F.concat(F.lit("https://example.org/doc/"), F.col("doc_id")).alias("url"),
         F.expr(
@@ -9980,7 +9937,7 @@ def q_readability(spark, sf_dir):
         readability_gate,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).select("doc_id", "text")
+    docs = spread(_read(spark, sf_dir, "documents")).select("doc_id", "text")
     return readability_gate(docs).select(
         "doc_id",
         "n_words",
@@ -10092,7 +10049,7 @@ def q_chi2_tokens(spark, sf_dir):
         chi2_tokens,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).select(
+    docs = spread(_read(spark, sf_dir, "documents")).select(
         "text", (F.col("lang") == "en").cast("int").alias("y")
     )
     return chi2_tokens(docs, "text", "y", top_k=50, min_df=5)
@@ -10223,7 +10180,7 @@ def q_cohens_kappa(spark, sf_dir):
         cohens_kappa,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents")).select(
+    docs = spread(_read(spark, sf_dir, "documents")).select(
         (F.col("n_chars") > 300).cast("string").alias("rater_a"),
         (
             (
@@ -10289,7 +10246,7 @@ def q_bootstrap_ci(spark, sf_dir):
         bootstrap_ci,
     )
 
-    docs = _spread(_read(spark, sf_dir, "documents"))
+    docs = spread(_read(spark, sf_dir, "documents"))
     return bootstrap_ci(
         docs, "doc_id", "n_chars", n_boot=40, alpha=0.1, salt="cq"
     )

@@ -70,17 +70,14 @@ def tfidf_topk(
     text_col: str,
     k: int = 5,
     min_df: int = 1,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Top-k tokens per document by tf·idf (ties → token asc).
 
-    ``n_docs``: pass the known corpus size to keep planning job-free;
-    None computes it (one count job — fine interactively, pass it in
-    inside pipelines). Returns (id, token, tf, df, tfidf) with tfidf
-    rounded to 6 dp for cross-engine comparability.
+    The corpus size N is a scalar subquery inside the plan, so building
+    the operator starts no Spark job. Returns (id, token, tf, df,
+    tfidf) with tfidf rounded to 6 dp for cross-engine comparability.
     """
-    if n_docs is None:
-        n_docs = docs.count()
+    n_docs = docs.select(F.count(F.lit(1))).scalar()
     # per-doc term frequency: doc-id-prefixed keys, no skew.
     # tokenization = ngrams_all_col(n=1): the ONE normalization shared
     # with the dedup tier and document_frequency — tf and df must
@@ -95,7 +92,7 @@ def tfidf_topk(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = document_frequency(docs, text_col, min_df=min_df)
-    idf = F.log((F.lit(float(n_docs + 1))) / (F.col("df") + 1).cast("double"))
+    idf = F.log((n_docs + 1).cast("double") / (F.col("df") + 1).cast("double"))
     scored = tf.join(dfreq, "token").withColumn(
         "tfidf", F.round(F.col("tf") * idf, 6)
     )
@@ -224,8 +221,6 @@ def bm25_score(
     query_terms: list[str],
     k1: float = 1.2,
     b: float = 0.75,
-    n_docs: int | None = None,
-    avgdl: float | None = None,
 ) -> DataFrame:
     """Okapi BM25 of every document against a bounded query-term set
     (Robertson/Sparck Jones; the Lucene always-positive idf form
@@ -240,9 +235,9 @@ def bm25_score(
     |Q|-bounded broadcasts. Doc length comes from the same scan (no
     second pass over text), and the only corpus-sized exchange is the
     final per-doc sum, keyed by document id — no skew by
-    construction. ``n_docs``/``avgdl``: pass known corpus stats to
-    keep planning job-free; None computes them in ONE bounded
-    aggregate job (count + mean doc length together).
+    construction. The corpus stats N and avgdl come from ONE struct-
+    valued scalar subquery (count + mean doc length together) inside
+    the plan, so building the operator starts no Spark job.
     """
     terms = sorted(set(query_terms))
     qarr = F.array(*[F.lit(t) for t in terms])
@@ -256,25 +251,29 @@ def bm25_score(
         F.size("_toks").alias("dl"),
         F.filter("_toks", lambda t: F.array_contains(qarr, t)).alias("_q"),
     )
-    if n_docs is None or avgdl is None:
-        row = base.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a")
-        ).first()
-        n_docs = int(row["n"]) if n_docs is None else n_docs
-        avgdl = float(row["a"] or 0.0) if avgdl is None else avgdl
+    stats = base.select(
+        F.struct(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a"))
+    ).scalar()
     tf = (
         base.select(id_col, "dl", F.explode("_q").alias("token"))
         .groupBy(id_col, "dl", "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
+    # the |Q|-row df table carries the stats: one subquery in the plan
+    dfreq = (
+        tf.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .select("token", "df", stats.alias("_st"))
+    )
+    n_docs = F.col("_st.n").cast("double")
+    avgdl = F.greatest(F.coalesce("_st.a", F.lit(0.0)), F.lit(1e-12))
     idf = F.log(
         F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
     denom_len = F.lit(k1) * (
         F.lit(1.0 - b)
-        + F.lit(b) * F.col("dl").cast("double") / F.lit(max(avgdl, 1e-12))
+        + F.lit(b) * F.col("dl").cast("double") / avgdl
     )
     contrib = idf * (
         F.col("tf") * (k1 + 1.0) / (F.col("tf") + denom_len)

@@ -39,10 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from med_doi_feature_extraction_spark.operators.dedup import (
-    ngrams_col,
-    spread_scan,
-)
+from med_doi_feature_extraction_spark.operators.dedup import ngrams_col
+from med_doi_feature_extraction_spark.session import spread
 
 
 def doc_ngrams(
@@ -138,10 +136,10 @@ def decontaminate(
     # explode_outer keeps a null-gram row for docs with no n-grams
     # (short or NULL text) — they must appear in the report with
     # total 0, not vanish or need a second corpus scan to recover.
-    # spread_scan: gram generation is the CPU stage; a few-partition
+    # spread: gram generation is the CPU stage; a few-partition
     # scan (single local file) must fan out first (no-op at corpus
     # scale; measured 1.39→0.82 s at sf0.1 on 32 cores)
-    grams = spread_scan(corpus.select(id_col, text_col)).select(
+    grams = spread(corpus.select(id_col, text_col)).select(
         F.col(id_col),
         F.explode_outer(ngrams_col(text_col, n)).alias("gram"),
     )

@@ -33,6 +33,7 @@ from med_doi_feature_extraction_spark.kernels.hashing import (
     minhash_signatures,
     simhash64,
 )
+from med_doi_feature_extraction_spark.session import spread
 
 _sig_udf = F.pandas_udf(
     lambda s: minhash_signatures(s), T.ArrayType(T.LongType())
@@ -81,16 +82,14 @@ def _bucket_pairs(
     grouped = grouped.filter(F.size("_members") >= 2)
     if max_bucket is not None:
         grouped = grouped.filter(F.size("_members") <= max_bucket)
-    # The bucket table is BYTES-small (one row per bucket), so AQE
-    # coalesces it to a handful of post-shuffle partitions — and the
-    # C(B,2) Generate expansion below then runs on those few tasks
-    # (measured: 7.3M pairs generated by 4 of 32 cores). An explicit
-    # round-robin repartition is exempt from AQE coalescing and pins
-    # the expansion stage at cluster parallelism; pair-set output is
-    # partitioning-insensitive (distinct + keyed downstream).
-    grouped = grouped.repartition(
-        int(bands.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    )
+    # A bytes-small bucket table (one row per bucket) is coalesced by
+    # AQE to a handful of post-shuffle partitions, and the C(B,2)
+    # Generate expansion below would run on those few tasks (measured:
+    # 7.3M pairs generated by 4 of 32 cores). ``spread`` pins the
+    # expansion at cluster parallelism for such a table and is a no-op
+    # at corpus scale; pair-set output is partitioning-insensitive
+    # (distinct + keyed downstream).
+    grouped = spread(grouped)
     # STREAMED two-stage expansion: posexplode each member first, then
     # explode that member's suffix slice. Per-row state stays O(B) —
     # one member plus one suffix array — so a cap-sized bucket streams
@@ -139,18 +138,6 @@ def candidate_pairs(
     return out.filter(F.col("id_a") < F.col("id_b")).distinct()
 
 
-def spread_scan(df: DataFrame, min_factor: int = 2) -> DataFrame:
-    """Ensure enough input partitions that the signature UDF fans out
-    across the cluster: a small single-file parquet scan arrives as 1
-    partition and would run the Arrow kernel single-threaded. At
-    corpus scale the scan already has thousands of partitions and this
-    is a no-op (plan-time check only — no job)."""
-    n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if df.rdd.getNumPartitions() * min_factor <= n_shuffle:
-        return df.repartition(n_shuffle)
-    return df
-
-
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """One row per distinct normalized text: (text_hash, keep_id,
     dup_count). keep_id = min id (deterministic survivor).
@@ -186,7 +173,7 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     dedup grouping — keep sha256 where auditability of the key
     matters)."""
     return (
-        with_fingerprint(spread_scan(df.select(id_col, text_col)), text_col)
+        with_fingerprint(spread(df.select(id_col, text_col)), text_col)
         .groupBy("fingerprint")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -303,7 +290,7 @@ def minhash_lsh_candidates(
     Buckets above ``max_bucket`` are dropped before pair expansion
     (see ``DEFAULT_MAX_BAND_BUCKET``).
     """
-    sigs = with_minhash(spread_scan(df.select(id_col, text_col)), text_col)
+    sigs = with_minhash(spread(df.select(id_col, text_col)), text_col)
     bands = minhash_bands(sigs, id_col, n_bands, rows_per_band)
     return candidate_pairs(bands, id_col, ["band", "band_hash"], max_bucket)
 
@@ -322,7 +309,7 @@ def minhash_dedup(
     cands = minhash_lsh_candidates(
         df, id_col, text_col, n_bands, rows_per_band, max_bucket
     )
-    toks = spread_scan(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
+    toks = spread(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
     a = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("tokens_a"))
     b = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("tokens_b"))
     verified = jaccard_pairs(cands.join(a, "id_a"), b, ["id_b"])
@@ -396,7 +383,7 @@ def simhash_candidates(
     """Near-dup pairs by SimHash: block on 4 × 16-bit bands, verify
     exact Hamming distance ≤ max_hamming JVM-side via bit_count(xor).
     Buckets above ``max_bucket`` are dropped before pair expansion."""
-    sh = with_simhash(spread_scan(df.select(id_col, text_col)), text_col)
+    sh = with_simhash(spread(df.select(id_col, text_col)), text_col)
     return simhash_pairs_from_sigs(sh, id_col, "simhash", max_hamming, max_bucket)
 
 
@@ -608,7 +595,7 @@ def incremental_minhash_dedup(
     ``max_bucket`` on the corpus bucket size. No corpus×corpus pairs
     are ever generated.
     """
-    new_sel = spread_scan(new_df.select(id_col, text_col))
+    new_sel = spread(new_df.select(id_col, text_col))
     sigs_new = with_minhash(new_sel, text_col)
     bands_new = minhash_bands(sigs_new, id_col, n_bands, rows_per_band).select(
         F.col(id_col).alias("id_new"), "band", "band_hash"
@@ -617,7 +604,7 @@ def incremental_minhash_dedup(
     # row-group parallelism, which would serialize the corpus-side
     # numpy kernel on a handful of tasks (measured 2.3x on the bench)
     sigs_corp = with_minhash(
-        spread_scan(corpus_df.select(id_col, text_col)), text_col
+        spread(corpus_df.select(id_col, text_col)), text_col
     )
     bands_corp = minhash_bands(sigs_corp, id_col, n_bands, rows_per_band).select(
         F.col(id_col).alias("dup_of"), "band", "band_hash"
@@ -671,7 +658,7 @@ def containment_pairs(
     cands = minhash_lsh_candidates(
         df, id_col, text_col, n_bands, rows_per_band, max_bucket
     )
-    toks = spread_scan(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
+    toks = spread(df.select(F.col(id_col), tokens_col(text_col).alias("toks")))
     a = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("tokens_a"))
     b = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("tokens_b"))
     joined = cands.join(a, "id_a").join(b, "id_b")

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from med_doi_feature_extraction_spark.operators.dedup import spread_scan
+from med_doi_feature_extraction_spark.session import spread
 
 DEFAULT_PARA_DELIM = r"\r?\n\s*\r?\n"
 
@@ -63,7 +63,7 @@ def explode_paragraphs(
 ) -> DataFrame:
     """(id, para_idx, para) — non-empty trimmed paragraphs in document
     order."""
-    return spread_scan(df.select(id_col, text_col)).select(
+    return spread(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.posexplode(paras_array(text_col, delim)).alias("para_idx", "para"),
     )

@@ -28,10 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from med_doi_feature_extraction_spark.operators.dedup import (
-    ngrams_all_col,
-    spread_scan,
-)
+from med_doi_feature_extraction_spark.operators.dedup import ngrams_all_col
+from med_doi_feature_extraction_spark.session import spread
 
 
 DEFAULT_LINE_DELIM = r"\r?\n"
@@ -108,12 +106,12 @@ def top_ngram_stats(
     map-side combine) → per-id max via window rank — two exchanges
     total, both on id-prefixed keys, no data-dependent blowup.
     """
-    # spread_scan: gram generation dominates; fan a few-partition scan
-    # out first (no-op at corpus scale; measured 1.87→0.76 s at sf0.1.
+    # spread: gram generation dominates; fan a small scan out first
+    # (no-op at corpus scale; measured 1.87→0.76 s at sf0.1.
     # tfidf_topk deliberately does NOT spread — its explode feeds a
     # groupBy that redistributes anyway and the extra exchange
     # measured slower, 0.80→1.27 s)
-    grams = spread_scan(df.select(id_col, text_col)).select(
+    grams = spread(df.select(id_col, text_col)).select(
         F.col(id_col),
         F.length(F.lower(F.trim(F.col(text_col)))).alias("_text_chars"),
         F.explode(ngrams_all_col(text_col, n)).alias("gram"),

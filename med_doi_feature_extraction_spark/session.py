@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Arrow batches carry whole HTML blobs (rows can be MBs); cap records
 #: per batch so a batch stays well under executor memory even at 100 TB
@@ -76,3 +76,29 @@ def get_spark(
 
     ensure_package_on_workers(spark)
     return spark
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Parallelism floor for a CPU-bound stage: one round-robin
+    exchange to ``defaultParallelism`` when ``df`` is smaller than one
+    ``maxPartitionBytes`` split per core, else ``df`` unchanged.
+
+    A small single-file parquet scan arrives as one or two productive
+    tasks (only splits holding a row-group midpoint produce rows), so the
+    Arrow/codegen kernel above it would run on 1 of N cores; the
+    exchange is bounded by that same small size. Anything bigger gets
+    its parallelism from the scan's own splits, or from AQE after a
+    shuffle. The size is Catalyst's plan estimate, so the check starts
+    no Spark job; a round-robin exchange is never coalesced by AQE. A
+    second ``spread`` separated from the first only by column pruning
+    and filters collapses into the same exchange; one over computed
+    columns does not (``tools/plan_lint.py`` flags that shape).
+    """
+    spark = df.sparkSession
+    want = spark.sparkContext.defaultParallelism
+    # the parsed long ("64m" -> 67108864), not the raw conf string
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= want * split:
+        return df
+    return df.repartition(want)

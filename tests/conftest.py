@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from med_doi_feature_extraction_spark.session import get_spark
@@ -20,6 +22,29 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture
+def no_jobs(spark, request):
+    """``with no_jobs(): ...`` asserts the block starts no Spark job
+    (status tracker, under a job group named after the test)."""
+
+    @contextlib.contextmanager
+    def check():
+        sc = spark.sparkContext
+        group = request.node.name
+        sc.setJobGroup(group, group)
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status tracker through the async
+        # listener bus: drain it so a job launched above cannot be missed
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    return check
 
 
 @pytest.fixture(scope="session")

@@ -1,5 +1,5 @@
 """Okapi BM25: hand-computed golden + edge paths (zero-match docs,
-empty docs, known-stats planning short-circuit)."""
+empty docs) and job-free construction of the corpus-stats operators."""
 
 from __future__ import annotations
 
@@ -48,16 +48,27 @@ def test_bm25_zero_match_and_empty(scored):
     assert scored[4] == {"doc_id": 4, "dl": 2, "terms_matched": 0, "bm25": 0.0}
 
 
-def test_bm25_known_stats_matches_computed(spark):
+def test_corpus_stats_build_starts_no_jobs(spark, no_jobs):
+    """N and avgdl are scalar subqueries inside the plan: building
+    bm25_score and tfidf_topk must start no Spark job, and the plans
+    still score correctly afterwards."""
+    from med_doi_feature_extraction_spark.operators.corpus_stats import (
+        tfidf_topk,
+    )
+
     docs = spark.createDataFrame(
         [(1, "a b a c"), (2, "b b"), (3, ""), (4, "zzz yyy")],
         "doc_id long, text string",
     )
-    auto = bm25_score(docs, "doc_id", "text", ["a", "b"]).collect()
-    fixed = bm25_score(
-        docs, "doc_id", "text", ["a", "b"], n_docs=4, avgdl=2.0
-    ).collect()
-    assert sorted(map(tuple, auto)) == sorted(map(tuple, fixed))
+    with no_jobs():
+        bm = bm25_score(docs, "doc_id", "text", ["a", "b"])
+        tf = tfidf_topk(docs, "doc_id", "text", k=2, min_df=1)
+    assert {r["doc_id"]: r["terms_matched"] for r in bm.collect()} == {
+        1: 2, 2: 1, 3: 0, 4: 0,
+    }
+    # N=4: "a" (tf 2, df 1) tops doc 1 at 2·ln(5/2)
+    top1 = [r for r in tf.collect() if r["doc_id"] == 1][0]
+    assert (top1["token"], top1["tfidf"]) == ("a", round(2 * math.log(2.5), 6))
 
 
 class TestTrendingTokens:

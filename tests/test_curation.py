@@ -549,7 +549,7 @@ def test_document_frequency_no_phantom_empty_token(spark):
 
 
 def test_tfidf_topk_ranks_distinctive_tokens(spark, docs):
-    out = tfidf_topk(docs, "doc_id", "text", k=2, min_df=1, n_docs=7)
+    out = tfidf_topk(docs, "doc_id", "text", k=2, min_df=1)
     per_doc = {}
     for r in out.collect():
         per_doc.setdefault(r["doc_id"], []).append(r)

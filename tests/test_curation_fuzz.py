@@ -195,7 +195,7 @@ def test_tfidf_fuzz_oracle(spark, fuzz_df):
 
     df, texts = fuzz_df
     n_docs = len(texts)
-    out = tfidf_topk(df, "doc_id", "text", k=2, min_df=2, n_docs=n_docs)
+    out = tfidf_topk(df, "doc_id", "text", k=2, min_df=2)
     got: dict[int, list] = {}
     for r in out.collect():
         got.setdefault(r["doc_id"], []).append(r)

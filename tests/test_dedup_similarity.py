@@ -307,7 +307,7 @@ def test_hot_band_bucket_cap(spark):
     assert sim_cap.count() < sim_un.count()
 
 
-def test_lsh_plan_construction_launches_no_jobs(spark, emb_df, docs_df):
+def test_lsh_plan_construction_launches_no_jobs(spark, emb_df, docs_df, no_jobs):
     """VERDICT r1 #4: building the lsh_topk / embedding_near_dup /
     minhash_dedup / incremental_minhash_dedup plans must not trigger a
     driver-side action (dim inference happens inside the udf from the
@@ -320,30 +320,19 @@ def test_lsh_plan_construction_launches_no_jobs(spark, emb_df, docs_df):
     def boom(*a, **k):
         raise AssertionError("driver action during plan construction")
 
-    sc = spark.sparkContext
-    group = "test_lsh_plan_construction_launches_no_jobs"
-    sc.setJobGroup(group, group)
-    try:
-        with patch.object(DataFrame, "first", boom), patch.object(
-            DataFrame, "head", boom
-        ), patch.object(DataFrame, "collect", boom), patch.object(
-            DataFrame, "count", boom
-        ):
-            plan1 = similarity.lsh_topk(emb_df, emb_df.filter(F.col("vec_id") < 4), k=3)
-            plan2 = similarity.embedding_near_dup(emb_df, threshold=0.99)
-            plan3 = dedup.minhash_dedup(docs_df, "doc_id", "text", threshold=0.5)
-            plan4 = dedup.incremental_minhash_dedup(
-                docs_df.filter(F.col("doc_id") >= 100),
-                docs_df.filter(F.col("doc_id") < 100),
-                "doc_id", "text", threshold=0.5,
-            )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status tracker through the async
-    # listener bus: drain it so a job launched above cannot be missed
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    with no_jobs(), patch.object(DataFrame, "first", boom), patch.object(
+        DataFrame, "head", boom
+    ), patch.object(DataFrame, "collect", boom), patch.object(
+        DataFrame, "count", boom
+    ):
+        plan1 = similarity.lsh_topk(emb_df, emb_df.filter(F.col("vec_id") < 4), k=3)
+        plan2 = similarity.embedding_near_dup(emb_df, threshold=0.99)
+        plan3 = dedup.minhash_dedup(docs_df, "doc_id", "text", threshold=0.5)
+        plan4 = dedup.incremental_minhash_dedup(
+            docs_df.filter(F.col("doc_id") >= 100),
+            docs_df.filter(F.col("doc_id") < 100),
+            "doc_id", "text", threshold=0.5,
+        )
     # the plans still execute correctly afterwards
     assert plan1.count() > 0
     assert plan2.count() >= 0

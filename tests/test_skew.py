@@ -121,7 +121,7 @@ def test_tfidf_join_skew_non_broadcast(spark):
 
     def run():
         return (
-            tfidf_topk(docs, "doc_id", "text", k=3, n_docs=n_docs)
+            tfidf_topk(docs, "doc_id", "text", k=3)
             .toPandas()
             .sort_values(["doc_id", "token"])
             .reset_index(drop=True)
@@ -166,3 +166,79 @@ def test_salted_asof_on_hot_keys(spark, hot_pdf):
     pd.testing.assert_series_equal(
         base.rank_score.round(9), salted.rank_score.round(9), check_names=False
     )
+
+
+def _round_robin(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [ln for ln in plan.splitlines() if "RoundRobinPartitioning" in ln]
+
+
+@pytest.fixture(scope="module")
+def small_parquet(spark, tmp_path_factory):
+    """One single-file parquet of ~0.7 MB: below one 32 MB split per
+    core, above one 1 KB split per core."""
+    path = str(tmp_path_factory.mktemp("spread") / "t.parquet")
+    spark.range(20_000).selectExpr(
+        "id", "sha2(cast(id AS string), 256) AS s"
+    ).coalesce(1).write.parquet(path)
+    return path
+
+
+def test_spread_small_input_gets_one_round_robin_exchange(spark, small_parquet):
+    from med_doi_feature_extraction_spark.session import spread
+
+    n = spark.sparkContext.defaultParallelism
+    df = spark.read.parquet(small_parquet)
+    once = spread(df)
+    lines = _round_robin(once)
+    assert len(lines) == 1 and f"RoundRobinPartitioning({n})" in lines[0]
+    # stacking collapses: a second floor over the same rows is free
+    assert len(_round_robin(spread(once))) == 1
+    assert len(_round_robin(spread(once.filter("id > 5").select("s")))) == 1
+    assert sorted(r.id for r in once.collect()) == list(range(20_000))
+
+
+def test_spread_large_input_is_unchanged(spark):
+    from med_doi_feature_extraction_spark.session import spread
+
+    big = spark.range(10**9)  # estimated at 8 GB, over the threshold
+    assert spread(big) is big
+
+
+def test_spread_parses_max_partition_bytes(spark, small_parquet):
+    """"1k" is a valid byte string: the threshold becomes 1 KB per
+    core and the 0.7 MB input no longer gets the floor."""
+    from med_doi_feature_extraction_spark.session import spread
+
+    df = spark.read.parquet(small_parquet)
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    try:
+        assert spread(df) is df
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def test_spread_starts_no_jobs(spark, small_parquet, no_jobs):
+    from med_doi_feature_extraction_spark.session import spread
+
+    df = spark.read.parquet(small_parquet)
+    with no_jobs():
+        spread(spread(df).select("s"))
+
+
+def test_plan_lint_flags_double_spread(spark, small_parquet):
+    """A floor over computed columns of already-spread rows plans a
+    second round-robin exchange; the lint names it. An aggregate in
+    between (the bucket-table case) is a legitimate second floor."""
+    from med_doi_feature_extraction_spark.session import spread
+    from tools.plan_lint import lint_plan
+
+    def flags(df):
+        return lint_plan("t", df._jdf.queryExecution().executedPlan().toString())
+
+    once = spread(spark.read.parquet(small_parquet))
+    computed = once.selectExpr("id", "sha2(s, 256) AS h")
+    assert flags(once) == []
+    assert flags(spread(computed)) == ["RoundRobin->RoundRobin(double spread)"]
+    assert flags(spread(once.groupBy("s").count())) == []

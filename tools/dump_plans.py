@@ -1,11 +1,12 @@
 """Dump .explain("formatted") for named queries to a directory.
 
-Usage: python tools/dump_plans.py <repo_root> <out_dir> q1 q2 ...
+Usage: python tools/dump_plans.py [--sf SF_DIR] <repo_root> <out_dir> q1 q2 ...
 
 <repo_root> is prepended to sys.path so the dump can run against a
-checked-out historical tree (git worktree) for before/after plan
-evidence. Plan-only — no noop execution (builders that run bounded
-plan-time jobs still run them).
+second checkout of a historical tree (``git archive``) for before/after
+plan evidence. ``--sf`` is the fixture directory (default sf0.1, as
+``bench.py``). Plan-only — no noop execution (builders that run
+bounded plan-time jobs still run them).
 """
 
 from __future__ import annotations
@@ -15,12 +16,15 @@ from pathlib import Path
 
 
 def main() -> None:
-    repo, out_dir, names = sys.argv[1], sys.argv[2], sys.argv[3:]
+    args = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.1"
+    if args[:1] == ["--sf"]:
+        sf_dir, args = args[1], args[2:]
+    repo, out_dir, names = args[0], args[1], args[2:]
     sys.path.insert(0, str(Path(repo).resolve()))
     import __spark_entry__ as entrymod
     from med_doi_feature_extraction_spark.session import get_spark
 
-    sf_dir = "/root/testdata/sf1.0"
     qs = entrymod.queries()
     spark = get_spark("dump_plans")
     Path(out_dir).mkdir(parents=True, exist_ok=True)

@@ -82,7 +82,7 @@ def main() -> None:
         ("cosine_topk", "broadcast query side; corpus never replicated."),
         ("decontam", "bench n-gram set broadcast — the corpus gram stream "
          "itself never shuffles before the per-doc count agg (the "
-         "round-robin repartition under Generate is spread_scan fanning "
+         "round-robin repartition under Generate is session.spread fanning "
          "out the single-file LOCAL fixture; plan-time no-op on a real "
          "multi-file corpus scan)."),
         ("paragraph_dedup", "doc-prefixed posexplode → 8-byte-hash groupBy "

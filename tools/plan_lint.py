@@ -12,6 +12,9 @@ checks the arguable parts mechanically so the claims can't rot:
 - ``BatchEvalPython``: row-at-a-time Python UDF in the plan (Arrow
   variants — ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas /
   FlatMapGroupsInPandasWithState — are the sanctioned slow path).
+- round-robin ``Exchange`` whose nearest ``Exchange`` below it is also
+  round-robin: a second parallelism floor (``session.spread``) over
+  rows that already got one — a whole extra shuffle for nothing.
 
 Usage: ``python tools/plan_lint.py [sf_dir] [names...]`` — defaults to
 /root/testdata/sf0.01 and all queries. Exit 1 on any violation.
@@ -187,6 +190,31 @@ ALLOW_SINGLE = {
 }
 
 
+def _double_spread(plan: str) -> bool:
+    """True when a round-robin Exchange's nearest Exchange on some path
+    below it is round-robin too. Tree depth is the width of the
+    ``:``/``+-`` prefix Spark prints before each node."""
+    nodes = []
+    for ln in plan.splitlines():
+        node = ln.lstrip(" :+-")
+        nodes.append((len(ln) - len(node), node))
+    for i, (depth, node) in enumerate(nodes):
+        if not node.startswith("Exchange RoundRobinPartitioning"):
+            continue
+        below = None  # depth of the nearest Exchange being skipped
+        for d, n in nodes[i + 1:]:
+            if d <= depth:
+                break
+            if below is not None and d > below:
+                continue
+            below = None
+            if re.match(r"(Broadcast|Reused)?Exchange\b", n):
+                if n.startswith("Exchange RoundRobinPartitioning"):
+                    return True
+                below = d
+    return False
+
+
 def lint_plan(name: str, plan: str) -> list[str]:
     flags: list[str] = []
     if "CartesianProduct" in plan:
@@ -195,6 +223,8 @@ def lint_plan(name: str, plan: str) -> list[str]:
         flags.append("BroadcastNestedLoopJoin")
     if "BatchEvalPython" in plan:
         flags.append("BatchEvalPython(row-at-a-time UDF)")
+    if _double_spread(plan):
+        flags.append("RoundRobin->RoundRobin(double spread)")
     if name not in ALLOW_SINGLE:
         # SinglePartition exchange feeding a Sort/Window over data-sized
         # input. A global 1-row HashAggregate partial->final also goes
