@@ -23,8 +23,8 @@ runs today, composed from the engine's operators:
                  BPE token ids → packed sequences + span table,
                  optional proportional-interleave pack order.
 - ``pages``    — the flagship resumable pages→features pipeline
-                 (delegates to manifest.run_partitioned; also exposed
-                 as tools/run_pipeline.py for spark-submit).
+                 (delegates to manifest.run_partitioned;
+                 tools/run_pipeline.py is its spark-submit shim).
 
 Config files are reference-shaped YAML (column_map, fields with
 choices/synonyms, input_signals, retry_plan) with include/env-var
@@ -240,8 +240,11 @@ def cmd_validate(args) -> dict:
 
 
 def cmd_pages(args) -> dict:
-    """Flagship resumable pages→features pipeline (same engine path as
-    tools/run_pipeline.py; see manifest.run_partitioned)."""
+    """Flagship resumable pages→features pipeline (see
+    manifest.run_partitioned; tools/run_pipeline.py is the spark-submit
+    shim over this command). Completed buckets in the manifest are
+    skipped; ``--no-resume`` wipes the manifest first."""
+    from med_doi_feature_extraction_spark import fsutil
     from med_doi_feature_extraction_spark.manifest import run_partitioned
     from med_doi_feature_extraction_spark.pipeline import FeatureConfig
     from med_doi_feature_extraction_spark.plans.config import (
@@ -259,6 +262,8 @@ def cmd_pages(args) -> dict:
         cfg = FeatureConfig(run_id=args.run_id)
         n_buckets, chunk = args.n_buckets, args.n_buckets
     spark = get_spark(f"pages_{args.run_id}", master=args.master)
+    if args.no_resume:
+        fsutil.delete(spark, args.manifest, recursive=True)
     pages = spark.read.parquet(args.input)
     dim = spark.read.parquet(args.dim) if args.dim else None
     records = run_partitioned(
@@ -579,6 +584,7 @@ def build_parser() -> argparse.ArgumentParser:
     pages.add_argument("--manifest", required=True)
     pages.add_argument("--run-id", default="cli-pages")
     pages.add_argument("--n-buckets", type=int, default=64)
+    pages.add_argument("--no-resume", action="store_true")
     pages.set_defaults(fn=cmd_pages)
 
     cur = sub.add_parser(

@@ -15,7 +15,7 @@ multi-MB blobs (SURVEY.md §4.2/§7.3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +41,9 @@ class FeatureConfig:
     """The declarative "query" — successor of the reference's YAML
     pipeline config (``ConfigSchema``, reference ``src/config/
     schema.py:93-110``): a frozen spec that compiles to a DataFrame
-    expression tree."""
+    expression tree. Every field shapes the produced values and feeds
+    ``config_hash`` (``semantic_config_json``); the physical plan has
+    one shape and no knob here selects another."""
 
     session_gap_seconds: int = 3600
     lag_k: int = 1
@@ -50,16 +52,12 @@ class FeatureConfig:
     dim_value_cols: tuple[str, ...] = ("rank_score", "category")
     dim_tiebreak: tuple[str, ...] = ("rank_score", "category")
     run_id: str = "adhoc"
-    #: window features on SLIM rows + shuffled-hash rejoin of the
-    #: text payload — skips sorting the wide rows (see page_features)
-    slim_window: bool = False
-    extra: dict = field(default_factory=dict, compare=False)
 
 
 _text_udf = F.pandas_udf(extract_text_series, T.StringType())
 
 
-def extract_stage(pages: DataFrame, bucket: str | None = None) -> DataFrame:
+def extract_stage(pages: DataFrame) -> DataFrame:
     """Scan-side stage: decode html → canonical text, regex feature
     maps, then PRUNE the blob column.
 
@@ -81,43 +79,31 @@ def extract_stage(pages: DataFrame, bucket: str | None = None) -> DataFrame:
     )
 
 
-def window_stage(
-    df: DataFrame, cfg: FeatureConfig, bucket: str | None = None
-) -> DataFrame:
+def window_stage(df: DataFrame, cfg: FeatureConfig) -> DataFrame:
     """All per-url temporal features over ONE shuffle — of the SLIM
-    post-extract columns (html already pruned).
-
-    With ``bucket`` set the window entity is (bucket, url) —
-    semantically identical to url (url determines bucket) — for
-    callers that pre-partitioned on the bucket."""
-    entity = [bucket, "url"] if bucket else "url"
+    post-extract columns (html already pruned)."""
     df = with_lag_lead(
-        df, entity, "warc_ts", {"text_len": "text_len"},
+        df, "url", "warc_ts", {"text_len": "text_len"},
         k=cfg.lag_k, include_lead=cfg.include_labels,
     )
-    df = forward_fill(df, entity, "warc_ts", ["lang"])
-    df = sessionize(df, entity, "warc_ts", cfg.session_gap_seconds)
+    df = forward_fill(df, "url", "warc_ts", ["lang"])
+    df = sessionize(df, "url", "warc_ts", cfg.session_gap_seconds)
     if cfg.rolling_rows:
         from med_doi_feature_extraction_spark.operators.windows import rolling
 
-        df = rolling(df, entity, "warc_ts", "text_len", n_rows=cfg.rolling_rows)
+        df = rolling(df, "url", "warc_ts", "text_len", n_rows=cfg.rolling_rows)
     return df
 
 
 def semantic_config_json(cfg: FeatureConfig) -> str:
-    """Canonical JSON of the SEMANTIC config only: physical-plan knobs
-    (slim_window) and free-form extras don't change the produced
-    values, and two value-identical runs must share a config_hash
-    (pinned by the slim-window parity test). Single source of truth
-    for the transparency hash — the DuckDB oracle derives its expected
-    literal from this same function."""
+    """Canonical JSON of the config — every ``FeatureConfig`` field
+    shapes the produced values. Single source of truth for the
+    transparency hash — the DuckDB oracle derives its expected literal
+    from this same function."""
     import dataclasses
     import json
 
-    cfg_dict = dataclasses.asdict(cfg)
-    cfg_dict.pop("slim_window", None)
-    cfg_dict.pop("extra", None)
-    return json.dumps(cfg_dict, sort_keys=True, default=str)
+    return json.dumps(dataclasses.asdict(cfg), sort_keys=True, default=str)
 
 
 def transparency_struct(
@@ -213,7 +199,8 @@ def features_from_extracted(
 ) -> DataFrame:
     """Window + point-in-time + transparency + lineage over an
     ALREADY-extracted (html-free) pages table — the downstream half of
-    ``page_features`` for pipelines that materialize the extract stage
+    ``page_features``, which composes it with ``extract_stage`` in one
+    plan; pipelines that materialize the extract stage call it directly
     (the production shape at 10^12 docs: extract once, write bucketed
     by url, run feature passes off the bucketed table).
 
@@ -243,95 +230,29 @@ def page_features(
     pages: DataFrame,
     dim: DataFrame | None = None,
     cfg: FeatureConfig = FeatureConfig(),
-    pre_partitioned: bool = False,
 ) -> DataFrame:
-    """Full flagship pipeline. ``dim`` (FIXTURES.md F3) is optional;
-    when present, point-in-time join on (domain, obs_ts <= warc_ts).
-
-    ``pre_partitioned=True``: the input is a url-bucketed table
-    (Catalog.save_bucketed / Iceberg bucket transform) whose scan
-    already exposes HashPartitioning(url) — skip the repartition and
-    the whole window stack runs with ZERO exchanges (the production
-    layout at 10^12 docs; proven in tests/test_catalog.py).
+    """Full flagship pipeline: ``extract_stage`` composed with
+    ``features_from_extracted`` in one plan. ``dim`` (FIXTURES.md F3)
+    is optional; when present, point-in-time join on (domain,
+    obs_ts <= warc_ts).
 
     Shuffle budget (the 100 TB concern — measured, see BASELINE.md):
     1. html is decoded IN the scan stage and pruned — raw payload
-       never crosses a shuffle;
+       never crosses a shuffle; the stored ground-truth ``text`` is
+       dropped before the exchange too (it duplicates
+       ``text_extracted`` byte-for-byte and would double the wide
+       shuffle's payload);
     2. ONE full-width (post-extract) hash exchange on url feeds every
        window feature (their clustering requirement is satisfied, so
        Catalyst adds no further exchange);
-    3. the as-of join runs on a 3-column projection taken from the RAW
-       source (url, warc_ts, parse_url(url)) — column pruning keeps
-       that scan narrow, no UDF, and crucially it is NOT a second
-       evaluation of the extract+window subtree (deriving it from the
-       window output made Spark recompute the whole expensive DAG
-       twice — measured via event logs); its union-window exchange
-       moves ~1% of the bytes, then it rejoins co-partitioned on url
-       (both sides HashPartitioning(url, n) ⇒ sort-merge join without
-       exchanging the wide side).
+    3. the as-of join runs on a 3-column projection (url, warc_ts,
+       parse_url(url)) — Catalyst prunes the unused UDF column, so
+       that side's scan reads only url and warc_ts, runs no UDF, and
+       is NOT a second evaluation of the extract+window subtree
+       (deriving it from the window output made Spark recompute the
+       whole expensive DAG twice — measured via event logs); its
+       union-window exchange moves ~1% of the bytes, then it rejoins
+       co-partitioned on url (both sides HashPartitioning(url, n) ⇒
+       join without exchanging the wide side again).
     """
-    if cfg.slim_window and pre_partitioned:
-        # the slim plan exists to avoid a sort the bucketed layout
-        # already avoids — silently ignoring the flag would hide a
-        # misconfiguration, so refuse loudly
-        raise ValueError(
-            "slim_window has no effect on a pre-partitioned (bucketed) "
-            "input — its window stack already runs without an exchange; "
-            "unset one of the two"
-        )
-    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    # drop the stored ground-truth text BEFORE the exchange — it
-    # duplicates text_extracted byte-for-byte and would double the
-    # wide shuffle's payload
-    df = extract_stage(pages).drop("text")
-    if cfg.slim_window and not pre_partitioned:
-        # Alternative plan shape for bandwidth-bound clusters: the
-        # window sort only needs the slim feature columns, but the
-        # default plan sorts the FULL rows (text payload included) —
-        # at ~2.5 KB/row that sort is the stage that degrades first
-        # when memory bandwidth, not CPU, is the binding resource.
-        # Here the windows run over slim rows (~100 B/row sort) and
-        # the text payload is re-attached by a SHUFFLED-HASH join on
-        # (url, warc_ts): the wide side still crosses its one
-        # exchange (unavoidable — output must co-locate) but is never
-        # sorted. Trade-off: the slim side is hash-built per
-        # partition (rows_per_partition × ~100 B memory), so size
-        # shuffle_partitions accordingly; with SMJ fallback the plan
-        # degenerates to two wide sorts — keep the hint.
-        #
-        # MEASURED (7.7M rows, 8 pinned cores, tmpfs shuffle): this
-        # variant ran 562 s vs 397-416 s for the default — the extra
-        # slim exchange + 7.7M hash probes cost MORE than the wide
-        # sort saves on that box. Kept opt-in (value-parity pinned in
-        # tests) for clusters where the bandwidth:CPU ratio differs;
-        # the default plan stays the sorted one.
-        #
-        # PRECONDITION: (url, warc_ts) uniquely identifies a page row
-        # (the crawl-snapshot grain — guaranteed by the generator and
-        # by any dedup'd crawl table). The inner rejoin below would
-        # multiply duplicate keys; the default plan would not.
-        slim = window_stage(
-            df.drop("text_extracted").repartition(n, "url"), cfg
-        )
-        wide = df.select("url", "warc_ts", "text_extracted").repartition(
-            n, "url"
-        )
-        # hint on the SLIM side: the hinted relation becomes the hash
-        # BUILD side — the wide text rows must stream, never build
-        df = wide.join(slim.hint("shuffle_hash"), ["url", "warc_ts"])
-    else:
-        if not pre_partitioned:
-            df = df.repartition(n, "url")
-        df = window_stage(df, cfg)
-    if dim is not None:
-        slim = pages.select(
-            "url", "warc_ts", F.parse_url("url", F.lit("HOST")).alias("domain")
-        )
-        res = asof_join_window(
-            slim, dim, "domain", "warc_ts", "obs_ts",
-            list(cfg.dim_value_cols), right_tiebreak=list(cfg.dim_tiebreak),
-        ).drop("domain")
-        if not pre_partitioned:
-            res = res.repartition(n, "url")
-        df = df.join(res, ["url", "warc_ts"], "left")
-    return lineage_stage(transparency_stage(df.drop("text"), cfg), cfg)
+    return features_from_extracted(extract_stage(pages).drop("text"), dim=dim, cfg=cfg)

@@ -84,7 +84,6 @@ class WindowSpec(BaseModel):
 
 class AsofSpec(BaseModel):
     model_config = ConfigDict(frozen=True, extra="forbid")
-    enabled: bool = True
     value_cols: tuple[str, ...] = ("rank_score", "category")
     tiebreak: tuple[str, ...] = ("rank_score", "category")
 
@@ -93,7 +92,6 @@ class ExecutionSpec(BaseModel):
     model_config = ConfigDict(frozen=True, extra="forbid")
     n_buckets: int = 64
     buckets_per_chunk: int = 64
-    shuffle_partitions: int | None = None
 
 
 class PipelineSpec(BaseModel):

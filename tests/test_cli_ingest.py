@@ -184,6 +184,25 @@ def test_cli_pages_subcommand(spark, tmp_path):
     assert res2["buckets_processed"] == 0
 
 
+def test_cli_pages_no_resume_reruns_every_bucket(spark, tmp_path):
+    from med_doi_feature_extraction_spark.sources.pages import generate_pages
+
+    pdf = generate_pages(n_urls=20, seed=9)
+    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "pages"))
+    argv = [
+        "pages", "--input", str(tmp_path / "pages"),
+        "--output", str(tmp_path / "feat"),
+        "--manifest", str(tmp_path / "mf"),
+        "--n-buckets", "2",
+    ]
+    assert cli_main(argv)["buckets_processed"] == 2
+    assert cli_main(argv)["buckets_processed"] == 0
+    res = cli_main([*argv, "--no-resume"])
+    assert res["buckets_processed"] == 2
+    assert res["rows_out"] == len(pdf)
+    assert spark.read.parquet(str(tmp_path / "feat")).count() == len(pdf)
+
+
 def test_cli_curate_subcommand(spark, tmp_path):
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),

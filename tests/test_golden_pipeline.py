@@ -116,21 +116,3 @@ def test_flagship_row_count_is_input_keys(spark, pages_df, dim_df, pages_pdf):
     out = page_features(pages_df, dim=dim_df, cfg=FeatureConfig())
     assert out.count() == len(pages_pdf)
     assert out.select("url", "warc_ts").distinct().count() == len(pages_pdf)
-
-
-def test_slim_window_variant_matches_default(spark, pages_df, dim_df):
-    """cfg.slim_window (slim-row window sort + shuffled-hash rejoin of
-    the text payload) must be value-identical to the default plan —
-    it is a physical-plan choice, not a semantic one. Also pin that
-    the rejoin really is a shuffled-hash join (SMJ fallback would
-    silently reintroduce the wide sort)."""
-    base = page_features(pages_df, dim=dim_df, cfg=FeatureConfig())
-    slim = page_features(
-        pages_df, dim=dim_df, cfg=FeatureConfig(slim_window=True)
-    )
-    cols = sorted(set(base.columns) - {"lineage"})  # partition ids differ
-    b, s = base.select(*cols), slim.select(*cols)
-    assert b.exceptAll(s).count() == 0
-    assert s.exceptAll(b).count() == 0
-    plan = slim._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan

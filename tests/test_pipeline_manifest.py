@@ -42,15 +42,6 @@ def _run(spark, pages_df, dim_df, tmp, **kw):
     )
 
 
-def test_slim_window_with_pre_partitioned_raises(spark, pages_df):
-    """ADVICE r2: slim_window was silently ignored on bucketed inputs —
-    the conflict must refuse loudly."""
-    with pytest.raises(ValueError, match="slim_window"):
-        page_features(
-            pages_df, cfg=FeatureConfig(slim_window=True), pre_partitioned=True
-        )
-
-
 def test_kill_and_resume_equals_clean_run(spark, pages_df, dim_df, tmp_path):
     clean = str(tmp_path / "clean")
     run_partitioned(

@@ -52,17 +52,37 @@ def test_window_stack_single_exchange(spark, pages_df):
     assert _plan(out).count("Exchange") == 1
 
 
-def test_pipeline_blob_never_shuffles(spark, pages_df, dim_df):
-    """html bytes stay in the scan stage: no Exchange below the UDF."""
+def test_pipeline_blob_never_shuffles(spark, pages_df, dim_df, tmp_path):
+    """html bytes stay in the scan stage: no Exchange below the UDF —
+    over the cached fixture and over parquet-backed pages, where the
+    FileScan ReadSchema shows which side of the plan reads the blob."""
     from med_doi_feature_extraction_spark.pipeline import FeatureConfig, page_features
 
-    plan = _plan(page_features(pages_df, dim=dim_df, cfg=FeatureConfig()))
-    # the UDF (ArrowEvalPython) appears exactly once, and no Exchange
-    # line mentions the html column
-    assert plan.count("ArrowEvalPython") == 1
-    for line in plan.splitlines():
-        if "Exchange" in line:
-            assert "html" not in line, line
+    pages_df.write.parquet(str(tmp_path / "pages"))
+    dim_df.write.parquet(str(tmp_path / "dim"))
+    on_disk = (
+        spark.read.parquet(str(tmp_path / "pages")),
+        spark.read.parquet(str(tmp_path / "dim")),
+    )
+    cached, parquet = (
+        _plan(page_features(pages, dim=dim, cfg=FeatureConfig()))
+        for pages, dim in ((pages_df, dim_df), on_disk)
+    )
+    for plan in (cached, parquet):
+        # the UDF (ArrowEvalPython) appears exactly once, and no
+        # Exchange line mentions the html column
+        assert plan.count("ArrowEvalPython") == 1
+        for line in plan.splitlines():
+            if "Exchange" in line:
+                assert "html" not in line, line
+    # only the extract side scans the blob: the as-of side's scan is
+    # pruned to its key columns
+    schemas = [
+        line.split("ReadSchema: ", 1)[1]
+        for line in parquet.splitlines()
+        if "FileScan" in line
+    ]
+    assert sum("html:" in s for s in schemas) == 1, schemas
 
 
 def test_anti_join_is_join_not_subquery_scan(spark):

@@ -6,6 +6,7 @@ import os
 
 import pandas as pd
 import pytest
+from pydantic import ValidationError
 from pyspark.sql import functions as F
 
 from med_doi_feature_extraction_spark.multimodal.binary_ops import (
@@ -191,6 +192,11 @@ def test_config_layer(tmp_path):
     assert cfg.session_gap_seconds == 900 and cfg.lag_k == 2 and cfg.run_id == "r42"
     with pytest.raises(Exception):
         spec.window = None  # frozen
+    # keys no code reads are refused, not silently ignored
+    for stale in ("asof:\n  enabled: false\n", "execution:\n  shuffle_partitions: 8\n"):
+        (tmp_path / "stale.yaml").write_text("include: base.yaml\n" + stale)
+        with pytest.raises(ValidationError):
+            load_pipeline_spec(tmp_path / "stale.yaml")
 
 
 def test_deep_merge_and_env():

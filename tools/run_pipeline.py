@@ -1,4 +1,5 @@
-"""spark-submit entry point for the flagship pipeline.
+"""spark-submit entry point for the flagship pipeline: a shim over
+``python -m med_doi_feature_extraction_spark pages`` (same flags).
 
 Cluster usage (the north-rule packaging contract):
 
@@ -10,7 +11,7 @@ Cluster usage (the north-rule packaging contract):
     spark-submit --py-files /tmp/med_doi_feature_extraction_spark.zip \
         tools/run_pipeline.py --config config/pipelines/pages_features.yaml \
         --input /data/pages --dim /data/dim_snapshots --output /data/features \
-        --manifest /data/manifest [--resume]
+        --manifest /data/manifest [--no-resume]
 
 Local mode works without --py-files (the session factory ships the
 zip itself). Resume is the default behavior: completed buckets in the
@@ -19,69 +20,12 @@ manifest are skipped; pass --no-resume to wipe the manifest first.
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import uuid
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--config", default=None, help="pipeline YAML (PipelineSpec)")
-    ap.add_argument("--input", required=True, help="pages parquet path/table")
-    ap.add_argument("--dim", default=None, help="dim_snapshots parquet path")
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--manifest", required=True)
-    ap.add_argument("--run-id", default=None)
-    ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    from med_doi_feature_extraction_spark.audit import SessionAudit
-    from med_doi_feature_extraction_spark.manifest import run_partitioned
-    from med_doi_feature_extraction_spark.pipeline import FeatureConfig
-    from med_doi_feature_extraction_spark.plans.config import (
-        load_pipeline_spec,
-        to_feature_config,
-    )
-    from med_doi_feature_extraction_spark.session import get_spark
-
-    run_id = args.run_id or uuid.uuid4().hex[:8]
-    if args.config:
-        spec = load_pipeline_spec(args.config, overrides={"run_id": run_id})
-        cfg = to_feature_config(spec)
-        n_buckets = spec.execution.n_buckets
-        chunk = spec.execution.buckets_per_chunk
-    else:
-        cfg = FeatureConfig(run_id=run_id)
-        n_buckets, chunk = 64, 64
-
-    spark = get_spark(f"pages_features_{run_id}", master=args.master)
-    if args.no_resume:
-        from med_doi_feature_extraction_spark import fsutil
-
-        fsutil.delete(spark, args.manifest, recursive=True)
-    audit = SessionAudit(run_id)
-    pages = spark.read.parquet(args.input)
-    dim = spark.read.parquet(args.dim) if args.dim else None
-    records = run_partitioned(
-        spark, pages, args.output, args.manifest,
-        dim=dim, cfg=cfg, n_buckets=n_buckets, buckets_per_chunk=chunk,
-    )
-    summary = {
-        "run_id": run_id,
-        "buckets_processed": len(records),
-        "rows_out": sum(r.rows_out for r in records),
-        "bytes_out": sum(r.bytes_out for r in records),
-        "manifest": args.manifest,
-        "output": args.output,
-    }
-    print(json.dumps(summary))
-    spark.stop()
-
-
 if __name__ == "__main__":
-    main()
+    from med_doi_feature_extraction_spark.__main__ import main
+
+    main(["pages", *sys.argv[1:]])

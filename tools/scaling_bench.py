@@ -135,9 +135,6 @@ def _measure(pages_dir: str, cores: int) -> dict:
         extra_conf={"spark.local.dir": f"/dev/shm/spark_scaling_{cores}"},
     )
     membw_pre = _membw_probe()
-    cfg_kwargs = {}
-    if os.environ.get("SPARK_GRAFT_SLIM_WINDOW"):
-        cfg_kwargs["slim_window"] = True
     pages = spark.read.parquet(f"{pages_dir}/pages.parquet")
     dim = spark.read.parquet(f"{pages_dir}/dim_snapshots.parquet")
     # full-table warmup (html included): page cache + JIT, untimed
@@ -150,7 +147,7 @@ def _measure(pages_dir: str, cores: int) -> dict:
         f"{out}/features",
         f"{out}/manifest",
         dim=dim,
-        cfg=FeatureConfig(run_id=f"scaling-{cores}", **cfg_kwargs),
+        cfg=FeatureConfig(run_id=f"scaling-{cores}"),
         n_buckets=64,
         buckets_per_chunk=64,
     )
