@@ -24,6 +24,11 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from med_doi_feature_extraction_spark.kernels import features as feat
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs_sql,
+    fixed_sql,
+)
 from med_doi_feature_extraction_spark.operators import dedup, similarity
 from med_doi_feature_extraction_spark.operators.asof import (
     asof_join_sorted,
@@ -530,29 +535,22 @@ def q_target_encode(spark, sf_dir):
         ev, "user_id", "ts", "value", smoothing=10.0,
         tiebreak=["event_id"],
     )
-    # portable 6-dp HALF_UP (readability.py:_round4 pattern): native
-    # round() diverges between the engines by 1 ulp at x.xxxxxx5
+    # portable 6-dp HALF_UP (kernels.fixed): native round() diverges
+    # between the engines by 1 ulp at x.xxxxxx5
     enc = F.col("target_enc") / F.lit(1e6)
-    r6 = F.floor(F.abs(enc) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
     return out.select(
-        "user_id", "event_id", "ts",
-        (F.when(enc < 0, -r6).otherwise(r6) + F.lit(0.0)).alias(
-            "target_enc"
-        ),
+        "user_id", "event_id", "ts", (fixed(enc) / 1e6).alias("target_enc")
     )
 
 
-SQL_TARGET_ENCODE = """
+SQL_TARGET_ENCODE = f"""
 WITH qe AS (
   SELECT user_id, event_id, ts,
          CAST(round(value * 1e6) AS BIGINT) AS q
   FROM events
 )
 SELECT user_id, event_id, ts,
-       (CASE WHEN enc < 0
-             THEN -(floor(abs(enc) * 1e6 + 0.5) / 1e6)
-             ELSE floor(abs(enc) * 1e6 + 0.5) / 1e6 END + 0.0)
-           AS target_enc
+       {fixed_sql('enc')} / 1000000.0 AS target_enc
 FROM (
   SELECT user_id, event_id, ts,
          ((CAST(coalesce(sum(q) OVER w, 0) AS DOUBLE)
@@ -11527,24 +11525,24 @@ dep AS (
 )
 SELECT * FROM (
   SELECT CAST(1 AS INTEGER) AS stage_idx, 'click' AS stage, n1 AS n_reached,
-         CASE WHEN n0 > 0 THEN CAST(floor(abs((n1)::DOUBLE / (n0)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END AS conv_from_start,
-         CASE WHEN n0 > 0 THEN CAST(floor(abs((n1)::DOUBLE / (n0)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END AS conv_from_prev
+         CASE WHEN n0 > 0 THEN {fixed_abs_sql('(n1)::DOUBLE / (n0)::DOUBLE')}
+           / 1000000.0 END AS conv_from_start,
+         CASE WHEN n0 > 0 THEN {fixed_abs_sql('(n1)::DOUBLE / (n0)::DOUBLE')}
+           / 1000000.0 END AS conv_from_prev
   FROM agg
   UNION ALL
   SELECT 2, 'signup', n2,
-         CASE WHEN n0 > 0 THEN CAST(floor(abs((n2)::DOUBLE / (n0)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END,
-         CASE WHEN n1 > 0 THEN CAST(floor(abs((n2)::DOUBLE / (n1)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END
+         CASE WHEN n0 > 0 THEN {fixed_abs_sql('(n2)::DOUBLE / (n0)::DOUBLE')}
+           / 1000000.0 END,
+         CASE WHEN n1 > 0 THEN {fixed_abs_sql('(n2)::DOUBLE / (n1)::DOUBLE')}
+           / 1000000.0 END
   FROM agg
   UNION ALL
   SELECT 3, 'purchase', n3,
-         CASE WHEN n0 > 0 THEN CAST(floor(abs((n3)::DOUBLE / (n0)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END,
-         CASE WHEN n2 > 0 THEN CAST(floor(abs((n3)::DOUBLE / (n2)::DOUBLE)
-           * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 END
+         CASE WHEN n0 > 0 THEN {fixed_abs_sql('(n3)::DOUBLE / (n0)::DOUBLE')}
+           / 1000000.0 END,
+         CASE WHEN n2 > 0 THEN {fixed_abs_sql('(n3)::DOUBLE / (n2)::DOUBLE')}
+           / 1000000.0 END
   FROM agg
 )
 """
@@ -11615,16 +11613,11 @@ def q_spearman(spark, sf_dir):
     from med_doi_feature_extraction_spark.operators.assoc import spearman
 
     ev = _read(spark, sf_dir, "events")
-    milli = F.floor(F.abs(F.col("value")) * 1000 + F.lit(0.5)).cast(
-        "long"
-    )
     prep = ev.filter(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     ).select(
         F.col("ts").cast("timestamp").cast("long").alias("t_sec"),
-        F.when(F.col("value") < 0, -milli)
-        .otherwise(milli)
-        .alias("v_milli"),
+        fixed(F.col("value"), 1e3).alias("v_milli"),
     )
     return spearman(prep, "t_sec", "v_milli")
 
@@ -11634,9 +11627,8 @@ def _sql_spearman() -> str:
         oracle_spearman_sql,
     )
 
-    m = "CAST(floor(abs(value) * 1000.0 + 0.5) AS BIGINT)"
     rel = f"""(SELECT CAST(floor(epoch(ts)) AS BIGINT) AS t_sec,
-  (CASE WHEN value < 0 THEN -{m} ELSE {m} END) AS v_milli
+  {fixed_sql('value', 1e3)} AS v_milli
   FROM events WHERE ts IS NOT NULL AND value IS NOT NULL) r"""
     return oracle_spearman_sql(rel, "t_sec", "v_milli")
 

@@ -248,6 +248,7 @@ def cmd_pages(args) -> dict:
     from med_doi_feature_extraction_spark.manifest import run_partitioned
     from med_doi_feature_extraction_spark.pipeline import FeatureConfig
     from med_doi_feature_extraction_spark.plans.config import (
+        ExecutionSpec,
         load_pipeline_spec,
         to_feature_config,
     )
@@ -256,11 +257,14 @@ def cmd_pages(args) -> dict:
     if args.config:
         spec = load_pipeline_spec(args.config, overrides={"run_id": args.run_id})
         cfg = to_feature_config(spec)
-        n_buckets = spec.execution.n_buckets
-        chunk = spec.execution.buckets_per_chunk
+        execution = spec.execution
     else:
         cfg = FeatureConfig(run_id=args.run_id)
-        n_buckets, chunk = args.n_buckets, args.n_buckets
+        execution = ExecutionSpec()
+    n_buckets = (
+        execution.n_buckets if args.n_buckets is None else args.n_buckets
+    )
+    chunk = execution.buckets_per_chunk
     spark = get_spark(f"pages_{args.run_id}", master=args.master)
     if args.no_resume:
         fsutil.delete(spark, args.manifest, recursive=True)
@@ -583,7 +587,10 @@ def build_parser() -> argparse.ArgumentParser:
     pages.add_argument("--output", required=True)
     pages.add_argument("--manifest", required=True)
     pages.add_argument("--run-id", default="cli-pages")
-    pages.add_argument("--n-buckets", type=int, default=64)
+    pages.add_argument(
+        "--n-buckets", type=int, default=None,
+        help="overrides execution.n_buckets (default 64)",
+    )
     pages.add_argument("--no-resume", action="store_true")
     pages.set_defaults(fn=cmd_pages)
 

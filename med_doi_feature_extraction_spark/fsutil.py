@@ -11,6 +11,8 @@ file per flush (see ``CheckpointManifest``).
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 from pyspark.sql import SparkSession
 
 
@@ -69,24 +71,21 @@ def write_text(
 
 
 def _is_local(dir_str: str) -> bool:
-    """Scheme-less paths only: an explicit ``file://`` URI is routed
-    through the Hadoop FileSystem like any other scheme (that keeps
-    the kill/resume file:-URI test exercising the JVM path)."""
-    return "://" not in dir_str
-
-
-def _strip_file_scheme(dir_str: str) -> str:
-    return dir_str[7:] if dir_str.startswith("file://") else dir_str
+    """Scheme-less paths only: any URI, ``file:/x`` and ``file:///x``
+    included, is routed through the Hadoop FileSystem like any other
+    scheme (that keeps the kill/resume file:-URI test exercising the
+    JVM path)."""
+    return urlparse(dir_str).scheme == ""
 
 
 def parquet_rows_and_bytes(spark: SparkSession, dir_str: str) -> tuple[int, int]:
     """(row_count, byte_size) of all parquet files directly under
     ``dir_str`` — footer metadata only, no Spark job.
 
-    Two paths with identical semantics: local schemes use
+    Two paths with identical semantics: scheme-less local paths use
     os.scandir + pyarrow directly (py4j round-trips cost ~25 ms EACH;
     a 64-bucket chunk commit through the JVM reader measured 14 s of
-    pure gateway latency); remote schemes (hdfs/s3a/…) go through the
+    pure gateway latency); URIs (file:/hdfs/s3a/…) go through the
     JVM parquet-hadoop reader, whose per-call latency is dwarfed by
     the store's own round-trips. (A third design — Observation
     conditional sums on the write job — costs interpreted expression
@@ -96,11 +95,10 @@ def parquet_rows_and_bytes(spark: SparkSession, dir_str: str) -> tuple[int, int]
 
         import pyarrow.parquet as pq
 
-        local = _strip_file_scheme(dir_str)
         rows = 0
         size = 0
-        if os.path.isdir(local):
-            for entry in os.scandir(local):
+        if os.path.isdir(dir_str):
+            for entry in os.scandir(dir_str):
                 if entry.is_file() and entry.name.endswith(".parquet"):
                     size += entry.stat().st_size
                     rows += pq.ParquetFile(entry.path).metadata.num_rows

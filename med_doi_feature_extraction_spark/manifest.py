@@ -150,9 +150,10 @@ def run_partitioned(
     for chunk_id, chunk in enumerate(chunks):
         t_start = time.time()
         part = src.filter(F.col("url_bucket").isin(chunk))
-        # bucket-aligned execution: one repartition on url_bucket feeds
-        # the UDF stage, the window stage (clustering satisfied) AND
-        # the bucketed sink (≈1 file per bucket) — a single shuffle.
+        # the html UDF runs in the scan stage, before any exchange;
+        # features_from_extracted then hash-repartitions on url once
+        # for the window stage, and the sink splits that url-partitioned
+        # output into one directory per url_bucket (partitionBy).
         feats = page_features(part, dim=dim, cfg=cfg)
         (
             feats.write.mode("overwrite")

@@ -186,7 +186,7 @@ def align_pairs(
         F.col("eff_lang").alias("tgt_lang"),
         F.col("tlen").alias("tgt_len"),
     )
-    # portable 6-dp round (readability.py:_round4 pattern; ratio ≥ 0
+    # portable 6-dp round (the kernels.fixed rule; ratio ≥ 0
     # so no sign branch): native round() is engine-divergent at exact
     # half boundaries
     ratio = F.col("tgt_len") / F.col("src_len")

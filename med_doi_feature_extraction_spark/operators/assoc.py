@@ -39,15 +39,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs,
+    fixed_abs_sql,
+    fixed_sql,
+)
 
 
 def pearson_matrix(
@@ -110,7 +107,7 @@ def pearson_matrix(
                 F.lit(cx).alias("col_x"),
                 F.lit(cy).alias("col_y"),
                 F.coalesce(n, F.lit(0)).cast("long").alias("n_pairs"),
-                (_micro(r) / 1e6).alias("r"),
+                (fixed(r) / 1e6).alias("r"),
             )
         )
     return row.select(
@@ -153,7 +150,7 @@ def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         * F.col("_ct").cast("double")
         / F.col("_n").cast("double")
     )
-    term_u = _micro((o - e) * (o - e) / e - e)
+    term_u = fixed((o - e) * (o - e) / e - e)
     agg = j.groupBy("_n", "n_a", "n_b").agg(
         F.sum(term_u).cast("long").alias("_sum_u")
     )
@@ -169,8 +166,8 @@ def cramers_v(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         F.col("_n").alias("n"),
         "n_a",
         "n_b",
-        (_micro(chi2) / 1e6).alias("chi2"),
-        (_micro(v) / 1e6).alias("v"),
+        (fixed(chi2) / 1e6).alias("chi2"),
+        (fixed(v) / 1e6).alias("v"),
     )
 
 
@@ -189,7 +186,7 @@ def oracle_pearson_sql(rel_sql: str, columns: Sequence[str]) -> str:
 SELECT '{cx}' AS col_x, '{cy}' AS col_y,
        CAST(coalesce(n, 0) AS BIGINT) AS n_pairs,
        CASE WHEN vx > 0 AND vy > 0
-            THEN {_oracle_micro(r)} / 1000000.0 END AS r
+            THEN {fixed_sql(r)} / 1000000.0 END AS r
 FROM (
   SELECT n, sx, sy,
          (n * sxy - sx * sy)::DOUBLE AS cov,
@@ -237,15 +234,15 @@ tot AS (
 ),
 summed AS (
   SELECT n, n_a, n_b,
-         CAST(sum({_oracle_micro(term)}) AS BIGINT) AS sum_u
+         CAST(sum({fixed_sql(term)}) AS BIGINT) AS sum_u
   FROM cells
   JOIN rt USING (a) JOIN ct USING (b) CROSS JOIN tot
   GROUP BY n, n_a, n_b
 )
 SELECT '{col_a}' AS col_a, '{col_b}' AS col_b, n, n_a, n_b,
-       {_oracle_micro(chi2)} / 1000000.0 AS chi2,
+       {fixed_sql(chi2)} / 1000000.0 AS chi2,
        CASE WHEN least(n_a, n_b) >= 2
-            THEN {_oracle_micro(v)} / 1000000.0 END AS v
+            THEN {fixed_sql(v)} / 1000000.0 END AS v
 FROM summed
 """
 
@@ -302,9 +299,9 @@ def cohens_kappa(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         F.lit(col_a).alias("col_a"),
         F.lit(col_b).alias("col_b"),
         n.alias("n"),
-        (_micro(po) / 1e6).alias("po"),
-        (_micro(pe) / 1e6).alias("pe"),
-        (_micro(kappa) / 1e6).alias("kappa"),
+        (fixed(po) / 1e6).alias("po"),
+        (fixed(pe) / 1e6).alias("pe"),
+        (fixed(kappa) / 1e6).alias("kappa"),
     )
 
 
@@ -328,10 +325,10 @@ parts AS (
           FROM rt JOIN ct USING (lvl)) AS s
 )
 SELECT '{col_a}' AS col_a, '{col_b}' AS col_b, n,
-       {_oracle_micro('(d)::DOUBLE / (n)::DOUBLE')} / 1000000.0 AS po,
-       {_oracle_micro('(s)::DOUBLE / (n * n)::DOUBLE')} / 1000000.0 AS pe,
+       {fixed_sql('(d)::DOUBLE / (n)::DOUBLE')} / 1000000.0 AS po,
+       {fixed_sql('(s)::DOUBLE / (n * n)::DOUBLE')} / 1000000.0 AS pe,
        CASE WHEN n * n - s > 0 THEN
-         {_oracle_micro('(d * n - s)::DOUBLE / (n * n - s)::DOUBLE')}
+         {fixed_sql('(d * n - s)::DOUBLE / (n * n - s)::DOUBLE')}
            / 1000000.0
        END AS kappa
 FROM parts
@@ -367,9 +364,7 @@ def theils_u(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
 
     def ent_u(cnt: Column) -> Column:
         p = cnt.cast("double") / nd
-        return F.floor(F.abs(-(p * F.log(p))) * F.lit(1e6) + F.lit(0.5)).cast(
-            "long"
-        )
+        return fixed_abs(-(p * F.log(p)))
 
     h_a = (
         rt.crossJoin(F.broadcast(tot))
@@ -388,8 +383,7 @@ def theils_u(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     o = F.col("_o").cast("double")
 
     def cond_u(margin: Column) -> Column:
-        t = -(o / nd * F.log(o / margin.cast("double")))
-        return F.floor(F.abs(t) * F.lit(1e6) + F.lit(0.5)).cast("long")
+        return fixed_abs(-(o / nd * F.log(o / margin.cast("double"))))
 
     conds = j.agg(
         F.sum(cond_u(F.col("_ct"))).cast("long").alias("_hab_u"),
@@ -405,8 +399,7 @@ def theils_u(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
         val = F.when(
             h_u > 0, (h_u - cond).cast("double") / h_u.cast("double")
         )
-        m = F.floor(F.abs(val) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(val < 0, -m).otherwise(m) / 1e6
+        return fixed(val) / 1e6
 
     return out.select(
         F.lit(col_a).alias("col_a"),
@@ -424,23 +417,17 @@ def oracle_theils_u_sql(rel_sql: str, col_a: str, col_b: str) -> str:
 
     def ent(cnt: str) -> str:
         p = f"(({cnt})::DOUBLE / (n)::DOUBLE)"
-        return (
-            f"CAST(floor(abs(-({p} * ln({p}))) * 1000000.0 + 0.5)"
-            f" AS BIGINT)"
-        )
+        return fixed_abs_sql(f"-({p} * ln({p}))")
 
     def cond(margin: str) -> str:
-        t = (
+        return fixed_abs_sql(
             f"(-((o)::DOUBLE / (n)::DOUBLE"
             f" * ln((o)::DOUBLE / ({margin})::DOUBLE)))"
         )
-        return f"CAST(floor(abs({t}) * 1000000.0 + 0.5) AS BIGINT)"
 
     def u(h: str, c: str) -> str:
         val = f"(({h} - {c})::DOUBLE / ({h})::DOUBLE)"
-        m = f"CAST(floor(abs({val}) * 1000000.0 + 0.5) AS BIGINT)"
-        signed = f"(CASE WHEN {val} < 0 THEN -{m} ELSE {m} END)"
-        return f"CASE WHEN {h} > 0 THEN {signed} / 1000000.0 END"
+        return f"CASE WHEN {h} > 0 THEN {fixed_sql(val)} / 1000000.0 END"
 
     return f"""
 WITH cells AS (
@@ -558,7 +545,7 @@ def spearman(
         F.lit(col_x).alias("col_x"),
         F.lit(col_y).alias("col_y"),
         F.col("_n2").alias("n"),
-        (_micro(rho) / 1e6).alias("rho"),
+        (fixed(rho) / 1e6).alias("rho"),
     )
 
 
@@ -607,6 +594,6 @@ s AS (
 )
 SELECT '{col_x}' AS col_x, '{col_y}' AS col_y, n,
        CASE WHEN sxx > 0 AND syy > 0
-            THEN {_oracle_micro(rho)} / 1000000.0 END AS rho
+            THEN {fixed_sql(rho)} / 1000000.0 END AS rho
 FROM s
 """

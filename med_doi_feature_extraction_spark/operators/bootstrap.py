@@ -34,6 +34,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
+
 #: Poisson(1) CDF, cumulative; weights cap at ``len(_CDF)`` (the
 #: residual mass beyond k=12 is < 1e-12 — unreachable from a 32-bit
 #: uniform anyway).
@@ -41,11 +43,6 @@ _CDF = [
     sum(math.exp(-1.0) / math.factorial(j) for j in range(k + 1))
     for k in range(13)
 ]
-
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
 
 
 def _poisson_weight(u: Column) -> Column:
@@ -112,7 +109,7 @@ def poisson_bootstrap_means(
             F.struct(
                 F.lit(i).alias("boot_id"),
                 F.coalesce(w, F.lit(0)).cast("long").alias("n_eff"),
-                (_micro(mean) / 1e6).alias("mean"),
+                (fixed(mean) / 1e6).alias("mean"),
             )
         )
     return row.select(F.explode(F.array(*outs)).alias("_b")).select("_b.*")
@@ -143,20 +140,15 @@ def bootstrap_ci(
     j = full.crossJoin(F.broadcast(ci))
     mean = F.col("_sx").cast("double") / F.col("n").cast("double")
     return j.select(
-        (_micro(mean) / 1e6).alias("mean"),
-        (_micro(F.col("_ci")[0]) / 1e6).alias("ci_lo"),
-        (_micro(F.col("_ci")[1]) / 1e6).alias("ci_hi"),
+        (fixed(mean) / 1e6).alias("mean"),
+        (fixed(F.col("_ci")[0]) / 1e6).alias("ci_lo"),
+        (fixed(F.col("_ci")[1]) / 1e6).alias("ci_hi"),
         "n",
         F.lit(n_boot).cast("long").alias("n_boot"),
     )
 
 
 # --- DuckDB twins -----------------------------------------------------
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
-
 
 def oracle_bootstrap_means_sql(
     rel_sql: str,
@@ -179,7 +171,7 @@ def oracle_bootstrap_means_sql(
 SELECT {i} AS boot_id,
        CAST(coalesce(sum(w), 0) AS BIGINT) AS n_eff,
        CASE WHEN coalesce(sum(w), 0) > 0 THEN
-         {_oracle_micro('(sum(w * x))::DOUBLE / (sum(w))::DOUBLE')}
+         {fixed_sql('(sum(w * x))::DOUBLE / (sum(w))::DOUBLE')}
            / 1000000.0
        END AS mean
 FROM (
@@ -216,9 +208,9 @@ ci AS (
          quantile_cont(mean, {1.0 - alpha / 2.0!r}) AS hi
   FROM reps
 )
-SELECT {_oracle_micro(mean)} / 1000000.0 AS mean,
-       {_oracle_micro('lo')} / 1000000.0 AS ci_lo,
-       {_oracle_micro('hi')} / 1000000.0 AS ci_hi,
+SELECT {fixed_sql(mean)} / 1000000.0 AS mean,
+       {fixed_sql('lo')} / 1000000.0 AS ci_lo,
+       {fixed_sql('hi')} / 1000000.0 AS ci_hi,
        n, CAST({n_boot} AS BIGINT) AS n_boot
 FROM full_agg, ci
 """

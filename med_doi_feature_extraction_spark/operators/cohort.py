@@ -27,13 +27,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_abs_sql
 
 
 def cohort_retention(
@@ -78,7 +75,7 @@ def cohort_retention(
         "day_offset",
         "n_active",
         "cohort_size",
-        (_micro(ret) / 1e6).alias("retention"),
+        (fixed(ret) / 1e6).alias("retention"),
     )
 
 
@@ -111,7 +108,7 @@ sizes AS (
   FROM first_ GROUP BY cohort_day
 )
 SELECT c.cohort_day, c.day_offset, c.n_active, s.cohort_size,
-       CAST(floor(abs((c.n_active)::DOUBLE / (s.cohort_size)::DOUBLE)
-         * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS retention
+       {fixed_abs_sql('(c.n_active)::DOUBLE / (s.cohort_size)::DOUBLE')}
+         / 1000000.0 AS retention
 FROM cells c JOIN sizes s USING (cohort_day)
 """

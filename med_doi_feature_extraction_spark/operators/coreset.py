@@ -21,13 +21,13 @@ Lineage is truncated per round with a lazy ``localCheckpoint`` (the
 kcore/pagerank guard) so the unrolled plan stays linear in k.
 
 Cross-engine exactness: vectors are quantized to integer units
-(``floor(|x|·scale + 0.5)·sign``, the repo-wide µ discipline of
-operators/pca) BEFORE any arithmetic, so every squared distance is
-an exact BIGINT and every argmax/tie-break (max distance, then min
-id) is exact in both engines — the oracle unrolls the identical
-greedy recursion as nested CTEs. Envelope: |x| ≤ 8 at scale 1e3 ⇒
-per-coordinate squares ≤ 6.4e7, dim 64 ⇒ dist² ≤ 4.1e9 — exact in
-BIGINT and in DuckDB's float64 list math alike.
+(``sign · floor(|x|·scale + 0.5)``, ``kernels.fixed``) BEFORE any
+arithmetic, so every squared distance is an exact BIGINT and every
+argmax/tie-break (max distance, then min id) is exact in both
+engines — the oracle unrolls the identical greedy recursion as
+nested CTEs. Envelope: |x| ≤ 8 at scale 1e3 ⇒ per-coordinate
+squares ≤ 6.4e7, dim 64 ⇒ dist² ≤ 4.1e9 — exact in BIGINT and in
+DuckDB's float64 list math alike.
 """
 
 from __future__ import annotations
@@ -35,16 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _quant_col(vec: F.Column, scale: float) -> F.Column:
-    """array<long> quantization: floor(|x|·scale + 0.5)·sign(x)."""
-    return F.transform(
-        vec,
-        lambda x: (
-            F.floor(F.abs(x.cast("double")) * F.lit(scale) + F.lit(0.5))
-            * F.signum(x.cast("double"))
-        ).cast("long"),
-    )
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
 
 
 def _dist2(a: F.Column, b: F.Column) -> F.Column:
@@ -79,7 +70,9 @@ def kcenter_select(
         raise ValueError("k must be >= 1")
     pts = df.select(
         F.col(id_col).cast("long").alias("_id"),
-        _quant_col(F.col(vec_col), scale).alias("_q"),
+        F.transform(
+            F.col(vec_col), lambda x: fixed(x.cast("double"), scale)
+        ).alias("_q"),
     ).filter(F.col("_id").isNotNull())
     seed = pts.agg(F.min("_id").alias("_sid"))
     sel = (
@@ -158,7 +151,7 @@ def oracle_kcenter_sql(
 pts AS (
   SELECT CAST("{id_col}" AS BIGINT) AS id,
          list_transform("{vec_col}"::DOUBLE[],
-             x -> CAST(floor(abs(x)*{scale!r} + 0.5)*sign(x) AS BIGINT)
+             x -> {fixed_sql('x', scale)}
          ) AS q
   FROM {rel_sql}
   WHERE "{id_col}" IS NOT NULL

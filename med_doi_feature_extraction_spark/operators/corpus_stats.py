@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
+
 from med_doi_feature_extraction_spark.operators.dedup import (
     ngrams_all_col,
     tokens_col,
@@ -513,13 +515,9 @@ def vocab_growth(
     lx = F.log(F.col("cum_tokens").cast("double"))
     ly = F.log(F.col("cum_types").cast("double"))
 
-    def _u(c):
-        m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(c < 0, -m).otherwise(m)
-
     pts = cum.filter(
         (F.col("cum_tokens") > 0) & (F.col("cum_types") > 0)
-    ).select(_u(lx).alias("_ux"), _u(ly).alias("_uy"))
+    ).select(fixed(lx).alias("_ux"), fixed(ly).alias("_uy"))
     fit = pts.agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
         F.sum("_ux").cast("long").alias("_sx"),
@@ -545,8 +543,8 @@ def vocab_growth(
         / F.lit(1e6),
     )
     fit_row = fit.select(
-        (_u(beta) / 1e6).alias("heaps_beta"),
-        (_u(logk) / 1e6).alias("heaps_log_k"),
+        (fixed(beta) / 1e6).alias("heaps_beta"),
+        (fixed(logk) / 1e6).alias("heaps_log_k"),
     )
     return (
         cum.crossJoin(F.broadcast(fit_row))
@@ -568,10 +566,6 @@ def oracle_vocab_growth_sql(
     rel_sql: str, bucket_expr: str, text_col: str
 ) -> str:
     """DuckDB twin of :func:`vocab_growth`."""
-
-    def u(expr: str) -> str:
-        m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
 
     num = "(n * sxy - sx * sy)::DOUBLE"
     den = "(n * sxx - sx * sx)::DOUBLE"
@@ -615,8 +609,8 @@ cum AS (
   FROM base
 ),
 pts AS (
-  SELECT {u('ln((cum_tokens)::DOUBLE)')} AS ux,
-         {u('ln((cum_types)::DOUBLE)')} AS uy
+  SELECT {fixed_sql('ln((cum_tokens)::DOUBLE)')} AS ux,
+         {fixed_sql('ln((cum_types)::DOUBLE)')} AS uy
   FROM cum WHERE cum_tokens > 0 AND cum_types > 0
 ),
 fit AS (
@@ -628,9 +622,9 @@ fit AS (
 ),
 fitted AS (
   SELECT CASE WHEN n >= 2 AND {den} > 0
-              THEN {u(beta)} / 1000000.0 END AS heaps_beta,
+              THEN {fixed_sql(beta)} / 1000000.0 END AS heaps_beta,
          CASE WHEN n >= 2 AND {den} > 0
-              THEN {u(logk)} / 1000000.0 END AS heaps_log_k
+              THEN {fixed_sql(logk)} / 1000000.0 END AS heaps_log_k
   FROM fit
 )
 SELECT b AS bucket, n_docs, n_tokens, new_types,
@@ -685,17 +679,13 @@ def zipf_fit(
         F.count(F.lit(1)).cast("long").alias("_f")
     )
 
-    def _u(c):
-        m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(c < 0, -m).otherwise(m)
-
     tail = F.col("_f") >= F.lit(fmin)
     lterm = F.log(F.col("_f").cast("double") / F.lit(fmin - 0.5))
     per = freq.groupBy("grp").agg(
         F.count(F.lit(1)).cast("long").alias("n_types"),
         F.sum(tail.cast("long")).cast("long").alias("tail_types"),
         F.sum("_f").cast("long").alias("n_tokens"),
-        F.sum(F.when(tail, _u(lterm)).otherwise(F.lit(0)))
+        F.sum(F.when(tail, fixed(lterm)).otherwise(F.lit(0)))
         .cast("long")
         .alias("_s"),
     )
@@ -708,7 +698,7 @@ def zipf_fit(
         "tail_types",
         "n_tokens",
         F.when(
-            (F.col("tail_types") > 0) & (F.col("_s") > 0), _u(alpha) / 1e6
+            (F.col("tail_types") > 0) & (F.col("_s") > 0), fixed(alpha) / 1e6
         ).alias("zipf_alpha"),
     )
 
@@ -720,10 +710,6 @@ def oracle_zipf_fit_sql(
     fmin: int = 2,
 ) -> str:
     """DuckDB twin of :func:`zipf_fit` (same micro-quantized terms)."""
-
-    def u(expr: str) -> str:
-        m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
 
     grp = f"CAST({group_expr} AS VARCHAR)" if group_expr else "'all'"
     lterm = f"ln((f)::DOUBLE / {fmin - 0.5})"
@@ -746,12 +732,12 @@ per AS (
               AS BIGINT) AS tail_types,
          CAST(sum(f) AS BIGINT) AS n_tokens,
          CAST(coalesce(sum(CASE WHEN f >= {fmin}
-                                THEN {u(lterm)} ELSE 0 END), 0)
+                                THEN {fixed_sql(lterm)} ELSE 0 END), 0)
               AS BIGINT) AS s
   FROM freq GROUP BY grp
 )
 SELECT grp AS "group", n_types, tail_types, n_tokens,
        CASE WHEN tail_types > 0 AND s > 0
-            THEN {u(alpha)} / 1000000.0 END AS zipf_alpha
+            THEN {fixed_sql(alpha)} / 1000000.0 END AS zipf_alpha
 FROM per
 """

@@ -24,18 +24,10 @@ key, which leaves G invariant (equal counts commute in the sum).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
 
 
 def concentration(
@@ -78,9 +70,9 @@ def concentration(
     return agg.select(
         n.alias("n_groups"),
         tot.alias("n_rows"),
-        (_micro(top) / 1e6).alias("top_share"),
-        (_micro(hhi) / 1e6).alias("hhi"),
-        (_micro(gini) / 1e6).alias("gini"),
+        (fixed(top) / 1e6).alias("top_share"),
+        (fixed(hhi) / 1e6).alias("hhi"),
+        (fixed(gini) / 1e6).alias("gini"),
     )
 
 
@@ -110,8 +102,8 @@ agg AS (
   FROM ranked
 )
 SELECT n AS n_groups, tot AS n_rows,
-       {_oracle_micro(top)} / 1000000.0 AS top_share,
-       {_oracle_micro(hhi)} / 1000000.0 AS hhi,
-       {_oracle_micro(gini)} / 1000000.0 AS gini
+       {fixed_sql(top)} / 1000000.0 AS top_share,
+       {fixed_sql(hhi)} / 1000000.0 AS hhi,
+       {fixed_sql(gini)} / 1000000.0 AS gini
 FROM agg
 """

@@ -36,7 +36,7 @@ _ANCHOR_RE = r"(?i)<a[\s>]"
 
 def _round6(c: Column) -> Column:
     """Portable 6-dp HALF_UP for non-negative inputs
-    (readability.py:_round4 pattern)."""
+    (the kernels.fixed rule without the sign branch)."""
     return F.floor(c * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6) + F.lit(0.0)
 
 

@@ -36,25 +36,19 @@ matches hash-for-hash with no boundary class.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs,
+    fixed_abs_sql,
+    fixed_sql,
+)
 
 #: PSI per-bin probability floor (standard practice: empty bins
 #: contribute a large-but-finite term instead of ±inf).
 PSI_EPS = 1e-6
-
-
-def _micro(c: Column) -> Column:
-    """``round(x, 6)`` as an exact integer micro-unit count — the
-    identical IEEE sequence the oracle runs (readability.py
-    precedent), summable without float-order sensitivity."""
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
 
 
 def psi_table(
@@ -117,13 +111,13 @@ def psi_table(
     eps = F.lit(PSI_EPS)
     pb = F.greatest(F.col("n_base") / F.col("_tb"), eps)
     pn = F.greatest(F.col("n_new") / F.col("_tn"), eps)
-    term_u = _micro((pb - pn) * F.log(pb / pn))
+    term_u = fixed((pb - pn) * F.log(pb / pn))
     with_term = counts.crossJoin(F.broadcast(totals)).select(
         "bin",
         "n_base",
         "n_new",
-        (_micro(F.col("n_base") / F.col("_tb")) / 1e6).alias("frac_base"),
-        (_micro(F.col("n_new") / F.col("_tn")) / 1e6).alias("frac_new"),
+        (fixed(F.col("n_base") / F.col("_tb")) / 1e6).alias("frac_base"),
+        (fixed(F.col("n_new") / F.col("_tn")) / 1e6).alias("frac_new"),
         term_u.alias("_term_u"),
     )
     total_u = with_term.agg(
@@ -192,7 +186,7 @@ def ks_2samp(
         F.max("ca_cum").cast("double").alias("na"),
         F.max("cb_cum").cast("double").alias("nb"),
     )
-    diff_u = _micro(
+    diff_u = fixed(
         F.abs(
             F.col("ca_cum") / F.col("na") - F.col("cb_cum") / F.col("nb")
         )
@@ -254,9 +248,9 @@ totals AS (
 ),
 terms AS (
   SELECT bin, n_base, n_new,
-         {_oracle_micro('n_base / tb')} AS fb_u,
-         {_oracle_micro('n_new / tn')} AS fn_u,
-         {_oracle_micro(term)} AS term_u
+         {fixed_sql('n_base / tb')} AS fb_u,
+         {fixed_sql('n_new / tn')} AS fn_u,
+         {fixed_sql(term)} AS term_u
   FROM counts, totals
 )
 SELECT bin, n_base, n_new,
@@ -296,7 +290,7 @@ tot AS (
   FROM cum
 ),
 scored AS (
-  SELECT v, {_oracle_micro(f'abs({diff})')} AS du,
+  SELECT v, {fixed_sql(f'abs({diff})')} AS du,
          CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b
   FROM cum, tot
 )
@@ -380,8 +374,7 @@ def mannwhitney_u(
         )
     )
     z = F.when(var > 0, (u_a - mu) / F.sqrt(var))
-    zm = F.floor(F.abs(z) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    z6 = F.when(z < 0, -zm).otherwise(zm) / 1e6
+    z6 = fixed(z) / 1e6
     return sums.select(
         u_a.alias("u_a"),
         u_b.alias("u_b"),
@@ -441,10 +434,7 @@ vard AS (
 SELECT u2a::DOUBLE / 2.0 AS u_a,
        (na * nb)::DOUBLE - u2a::DOUBLE / 2.0 AS u_b,
        CASE WHEN var > 0 THEN
-         (CASE WHEN ({z}) < 0
-               THEN -CAST(floor(abs({z}) * 1000000.0 + 0.5) AS BIGINT)
-               ELSE CAST(floor(abs({z}) * 1000000.0 + 0.5) AS BIGINT)
-          END) / 1000000.0
+         {fixed_sql(z)} / 1000000.0
        END AS z,
        na AS n_a, nb AS n_b
 FROM vard
@@ -520,7 +510,7 @@ def psi_by_group(
         F.col("_tn") > 0,
         F.greatest(F.col("_nn") / F.col("_tn"), eps),
     ).otherwise(eps)
-    term_u = _micro((pb - pn) * F.log(pb / pn))
+    term_u = fixed((pb - pn) * F.log(pb / pn))
     agg = j.groupBy("_g").agg(
         F.sum(term_u).cast("long").alias("_psi_u"),
         F.sum("_nb").cast("long").alias("n_base"),
@@ -582,7 +572,7 @@ totals AS (
 SELECT counts.g AS "group",
        CAST(sum(nb) AS BIGINT) AS n_base,
        CAST(sum(nn) AS BIGINT) AS n_new,
-       CAST(sum({_oracle_micro(term)}) AS BIGINT) / 1000000.0 AS psi
+       CAST(sum({fixed_sql(term)}) AS BIGINT) / 1000000.0 AS psi
 FROM counts JOIN totals ON counts.g = totals.g
 GROUP BY counts.g
 """
@@ -621,9 +611,7 @@ def benford_digits(
     digit; the table totals sum the micro-unit BIGINTs (order-free),
     never raw doubles.
     """
-    m = F.floor(F.abs(F.col(col)) * F.lit(float(scale)) + F.lit(0.5)).cast(
-        "long"
-    )
+    m = fixed_abs(F.col(col), scale)
     digit = F.substring(m.cast("string"), 1, 1).cast("int")
     counts = (
         df.filter(F.col(col).isNotNull())
@@ -652,18 +640,14 @@ def benford_digits(
         / e_cnt
     )
 
-    def _q(c: Column) -> Column:
-        qq = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(c < 0, -qq).otherwise(qq)
-
     per = full.crossJoin(F.broadcast(tot)).select(
         "digit",
         "n_digit",
         F.col("_n"),
-        _q(obs_share).alias("_obs_u"),
-        _q(exp_share).alias("_exp_u"),
-        _q(chi2_term).alias("_chi_u"),
-        _q(F.abs(obs_share - exp_share)).alias("_dev_u"),
+        fixed(obs_share).alias("_obs_u"),
+        fixed(exp_share).alias("_exp_u"),
+        fixed(chi2_term).alias("_chi_u"),
+        fixed(F.abs(obs_share - exp_share)).alias("_dev_u"),
     )
     tots = per.agg(
         F.sum("_chi_u").cast("long").alias("_chi_sum"),
@@ -690,10 +674,6 @@ def oracle_benford_sql(rel_sql: str, col: str, scale: int = 100) -> str:
     """DuckDB twin of :func:`benford_digits` — identical quantization,
     string-head digit, micro-unit terms and BIGINT totals."""
 
-    def q(expr: str) -> str:
-        qq = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{qq} ELSE {qq} END)"
-
     obs = "((n_digit)::DOUBLE / (n)::DOUBLE)"
     exp_ = "log10(1.0 + 1.0 / digit)"
     ec = f"((n)::DOUBLE * {exp_})"
@@ -703,7 +683,7 @@ def oracle_benford_sql(rel_sql: str, col: str, scale: int = 100) -> str:
     )
     return f"""
 WITH vals AS (
-  SELECT CAST(floor(abs("{col}") * {scale}.0 + 0.5) AS BIGINT) AS m
+  SELECT {fixed_abs_sql(f'"{col}"', scale)} AS m
   FROM {rel_sql}
   WHERE "{col}" IS NOT NULL
 ),
@@ -720,10 +700,10 @@ full_ AS (
 tot AS (SELECT CAST(sum(n_digit) AS BIGINT) AS n FROM full_),
 per AS (
   SELECT digit, n_digit, n,
-         {q(obs)} AS obs_u,
-         {q(exp_)} AS exp_u,
-         {q(chi)} AS chi_u,
-         {q(f'abs({obs} - {exp_})')} AS dev_u
+         {fixed_sql(obs)} AS obs_u,
+         {fixed_sql(exp_)} AS exp_u,
+         {fixed_sql(chi)} AS chi_u,
+         {fixed_sql(f'abs({obs} - {exp_})')} AS dev_u
   FROM full_ CROSS JOIN tot
 ),
 tots AS (

@@ -107,80 +107,6 @@ def _floor_row(dist: DataFrame, name: str) -> DataFrame:
     return dist.agg(F.first("floor_logp").alias(name))
 
 
-def fit_hashed_dist_pair(
-    corpus: DataFrame,
-    text_col: str,
-    target_cond: Column,
-    dim: int = DEFAULT_DIM,
-    salt: str = "dsir",
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(target_dist, raw_dist, floors) from ONE gram pass: bit-identical to
-    ``(fit_hashed_dist(corpus.filter(target_cond)),
-    fit_hashed_dist(corpus))`` — per-bucket counts come from one
-    explode+hash-agg with a conditional count for the target subset
-    (count_if ≡ count over the filtered frame), target buckets with
-    zero target occurrences are dropped to match the ABSENT-row
-    contract, and the logp algebra is the same expression tree. The
-    expensive part (one sha256 per gram occurrence, engine-portable by
-    design) runs once instead of twice; pinned by a parity test.
-    ``floors`` is the 1-row ``(_ft, _fq)`` floor-logp frame derived
-    straight from the totals — hand it to :func:`dsir_logweights` so
-    the scorer's OOV floors don't re-derive the whole dist lineage
-    twice more (a lazy diamond recomputes every consumer)."""
-    counts = (
-        hashed_grams(
-            corpus.select(target_cond.alias("_is_t"), F.col(text_col)),
-            text_col,
-            "_is_t",
-            dim=dim,
-            salt=salt,
-        )
-        .groupBy("idx")
-        .agg(
-            F.count(F.lit(1)).alias("_cq"),
-            F.count(F.when(F.col("_is_t"), 1)).alias("_ct"),
-        )
-    )
-    totals = counts.agg(
-        F.sum("_cq").alias("_totq"), F.sum("_ct").alias("_tott")
-    )
-    both = counts.crossJoin(F.broadcast(totals))
-
-    def dist(c: str, tot: str) -> DataFrame:
-        denom = (F.col(tot) + F.lit(dim)).cast("double")
-        return both.filter(F.col(c) > 0).select(
-            "idx",
-            F.round(
-                F.log((F.col(c) + 1).cast("double") / denom), 6
-            ).alias("logp"),
-            F.round(F.log(F.lit(1.0) / denom), 6).alias("floor_logp"),
-        )
-
-    # a side with zero gram occurrences has an EMPTY dist, whose
-    # _floor_row would be NULL — mirror that exactly
-    floors = totals.select(
-        F.when(
-            F.col("_tott") > 0,
-            F.round(
-                F.log(
-                    F.lit(1.0) / (F.col("_tott") + F.lit(dim)).cast("double")
-                ),
-                6,
-            ),
-        ).alias("_ft"),
-        F.when(
-            F.col("_totq") > 0,
-            F.round(
-                F.log(
-                    F.lit(1.0) / (F.col("_totq") + F.lit(dim)).cast("double")
-                ),
-                6,
-            ),
-        ).alias("_fq"),
-    )
-    return dist("_ct", "_tott"), dist("_cq", "_totq"), floors
-
-
 def dsir_logweights_fused(
     corpus: DataFrame,
     id_col: str,
@@ -191,9 +117,11 @@ def dsir_logweights_fused(
 ) -> DataFrame:
     """Fused self-selection DSIR weights (target ⊆ scored corpus):
     bit-identical to ``dsir_logweights(corpus, …,
-    *fit_hashed_dist_pair(corpus, …))`` — parity-pinned — but the
-    scorer joins ONE combined per-bucket broadcast instead of two
-    dists plus a floors frame.
+    fit_hashed_dist(corpus.filter(target_cond), …),
+    fit_hashed_dist(corpus, …))`` — parity-pinned — but ONE gram pass
+    feeds both counts (a conditional count for the target subset) and
+    the scorer joins ONE combined per-bucket broadcast instead of two
+    dists plus two floor rows.
 
     Why this is the cheap shape: every gram the scorer emits was BY
     CONSTRUCTION counted into the raw distribution (same corpus, same
@@ -261,7 +189,6 @@ def dsir_logweights(
     raw_dist: DataFrame,
     dim: int = DEFAULT_DIM,
     salt: str = "dsir",
-    floors: DataFrame | None = None,
 ) -> DataFrame:
     """(id, n_grams, logw): per-document importance log-weight
     Σ_grams (logp_target − logp_raw), 6 dp. Docs with no grams keep
@@ -277,12 +204,9 @@ def dsir_logweights(
         .join(F.broadcast(t), "idx", "left")
         .join(F.broadcast(q), "idx", "left")
     )
-    if floors is not None:
-        ex = ex.crossJoin(F.broadcast(floors))
-    else:
-        ex = ex.crossJoin(
-            F.broadcast(_floor_row(target_dist, "_ft"))
-        ).crossJoin(F.broadcast(_floor_row(raw_dist, "_fq")))
+    ex = ex.crossJoin(
+        F.broadcast(_floor_row(target_dist, "_ft"))
+    ).crossJoin(F.broadcast(_floor_row(raw_dist, "_fq")))
     llr = F.coalesce(F.col("_lt"), F.col("_ft")) - F.coalesce(
         F.col("_lq"), F.col("_fq")
     )

@@ -25,18 +25,10 @@ fixed-order double expression micro-rounded — the house discipline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
 
 
 def classification_report(
@@ -88,9 +80,9 @@ def classification_report(
         "tp",
         "fp",
         "fn",
-        (_micro(precision) / 1e6).alias("precision"),
-        (_micro(recall) / 1e6).alias("recall"),
-        (_micro(f1) / 1e6).alias("f1"),
+        (fixed(precision) / 1e6).alias("precision"),
+        (fixed(recall) / 1e6).alias("recall"),
+        (fixed(f1) / 1e6).alias("f1"),
     )
 
 
@@ -115,7 +107,7 @@ def calibration_table(
             F.floor(s * F.lit(float(n_bins))).cast("long"),
             F.lit(n_bins - 1),
         ).alias("bin"),
-        _micro(s).alias("_s_u"),
+        fixed(s).alias("_s_u"),
         y.alias("_y"),
     )
     agg = rows.groupBy("bin").agg(
@@ -130,8 +122,8 @@ def calibration_table(
     return agg.select(
         "bin",
         "n",
-        (_micro(mean_score) / 1e6).alias("mean_score"),
-        (_micro(frac_pos) / 1e6).alias("frac_pos"),
+        (fixed(mean_score) / 1e6).alias("mean_score"),
+        (fixed(frac_pos) / 1e6).alias("frac_pos"),
     )
 
 
@@ -143,7 +135,7 @@ def brier_score(
     micro-unit BIGINTs before the sum (order-free)."""
     s = F.col(score_col).cast("double")
     y = F.col(label_col).cast("long")
-    term_u = _micro((s - y.cast("double")) * (s - y.cast("double")))
+    term_u = fixed((s - y.cast("double")) * (s - y.cast("double")))
     agg = df.filter(s.isNotNull() & y.isNotNull()).agg(
         F.sum(term_u).cast("long").alias("_sum_u"),
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -152,7 +144,7 @@ def brier_score(
         F.col("n").cast("double") * F.lit(1e6)
     )
     return agg.select(
-        (_micro(brier) / 1e6).alias("brier"),
+        (fixed(brier) / 1e6).alias("brier"),
         "n",
     )
 
@@ -189,12 +181,12 @@ m AS (
 )
 SELECT class, support, tp, fp, fn,
        CASE WHEN tp + fp > 0 THEN
-         {_oracle_micro('(tp)::DOUBLE / (tp + fp)::DOUBLE')} / 1000000.0
+         {fixed_sql('(tp)::DOUBLE / (tp + fp)::DOUBLE')} / 1000000.0
        END AS precision,
-       {_oracle_micro('(tp)::DOUBLE / (support)::DOUBLE')} / 1000000.0
+       {fixed_sql('(tp)::DOUBLE / (support)::DOUBLE')} / 1000000.0
          AS recall,
        CASE WHEN 2 * tp + fp + fn > 0 THEN
-         {_oracle_micro('(2 * tp)::DOUBLE / (2 * tp + fp + fn)::DOUBLE')}
+         {fixed_sql('(2 * tp)::DOUBLE / (2 * tp + fp + fn)::DOUBLE')}
            / 1000000.0
        END AS f1
 FROM m
@@ -211,7 +203,7 @@ def oracle_calibration_sql(
 WITH rows_ AS (
   SELECT least(CAST(floor(({score_expr})::DOUBLE * {float(n_bins)!r})
                AS BIGINT), {n_bins - 1}) AS bin,
-         {_oracle_micro(f'({score_expr})::DOUBLE')} AS s_u,
+         {fixed_sql(f'({score_expr})::DOUBLE')} AS s_u,
          CAST({label_expr} AS BIGINT) AS y
   FROM {rel_sql}
   WHERE {score_expr} IS NOT NULL AND {label_expr} IS NOT NULL
@@ -223,8 +215,8 @@ agg AS (
   FROM rows_ GROUP BY bin
 )
 SELECT bin, n,
-       {_oracle_micro(mean_score)} / 1000000.0 AS mean_score,
-       {_oracle_micro(frac_pos)} / 1000000.0 AS frac_pos
+       {fixed_sql(mean_score)} / 1000000.0 AS mean_score,
+       {fixed_sql(frac_pos)} / 1000000.0 AS frac_pos
 FROM agg
 """
 
@@ -240,12 +232,12 @@ def oracle_brier_sql(
     brier = "(sum_u)::DOUBLE / ((n)::DOUBLE * 1000000.0)"
     return f"""
 WITH agg AS (
-  SELECT CAST(sum({_oracle_micro(term)}) AS BIGINT) AS sum_u,
+  SELECT CAST(sum({fixed_sql(term)}) AS BIGINT) AS sum_u,
          CAST(count(*) AS BIGINT) AS n
   FROM {rel_sql}
   WHERE {score_expr} IS NOT NULL AND {label_expr} IS NOT NULL
 )
-SELECT {_oracle_micro(brier)} / 1000000.0 AS brier, n
+SELECT {fixed_sql(brier)} / 1000000.0 AS brier, n
 FROM agg
 """
 
@@ -274,7 +266,7 @@ def roc_auc(
     denom = (F.col("n_a") * F.col("n_b")).cast("double")
     auc = F.when(denom > 0, F.col("u_a") / denom)
     return mw.select(
-        (_micro(auc) / 1e6).alias("auc"),
+        (fixed(auc) / 1e6).alias("auc"),
         F.col("n_a").alias("n_pos"),
         F.col("n_b").alias("n_neg"),
     )
@@ -302,7 +294,7 @@ def oracle_roc_auc_sql(
     return f"""
 WITH mw AS ({mw})
 SELECT CASE WHEN n_a * n_b > 0 THEN
-         {_oracle_micro(auc)} / 1000000.0
+         {fixed_sql(auc)} / 1000000.0
        END AS auc,
        n_a AS n_pos, n_b AS n_neg
 FROM mw

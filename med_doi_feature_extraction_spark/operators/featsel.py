@@ -29,12 +29,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
+
 _TOKEN = "[a-z]+"
-
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
 
 
 def _doc_tokens(text: Column) -> Column:
@@ -108,8 +105,8 @@ def chi2_tokens(
         "token",
         "df_pos",
         "df_neg",
-        _micro(chi2).alias("_chi2_u"),
-        _micro(mi).alias("_mi_u"),
+        fixed(chi2).alias("_chi2_u"),
+        fixed(mi).alias("_mi_u"),
     )
     return (
         scored.orderBy(F.col("_chi2_u").desc(), F.col("token").asc())
@@ -137,10 +134,6 @@ def oracle_chi2_sql(
     rule, identical fixed-order double arithmetic, identical
     micro-unit rounding and tiebreak. ``rel_sql`` is a relation
     expression exposing ``text_expr`` and ``label_expr``."""
-
-    def micro(expr: str) -> str:
-        m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
 
     toks = (
         f"list_distinct(regexp_extract_all(lower(coalesce({text_expr},"
@@ -194,8 +187,8 @@ cells AS (
 ),
 scored AS (
   SELECT token, df_pos, df_neg,
-         {micro(chi2)} AS chi2_u,
-         {micro(mi)} AS mi_u
+         {fixed_sql(chi2)} AS chi2_u,
+         {fixed_sql(mi)} AS mi_u
   FROM cells
 )
 SELECT token, df_pos, df_neg,

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed_abs
+
 def _first_failed(stages: Sequence[tuple[str, Column]]) -> Column:
     """First-match CASE over the ordered gates (engine-portable: the
     DuckDB twin is the identical ``CASE WHEN NOT coalesce(p, false)``
@@ -223,8 +225,7 @@ def session_funnel_summary(
         r = F.when(
             den > 0, num.cast("double") / den.cast("double")
         )
-        m = F.floor(F.abs(r) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(r.isNull(), F.lit(None)).otherwise(m / 1e6)
+        return F.when(r.isNull(), F.lit(None)).otherwise(fixed_abs(r) / 1e6)
 
     structs = [
         F.struct(

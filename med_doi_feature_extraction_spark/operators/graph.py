@@ -38,6 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs,
+    fixed_abs_sql,
+    fixed_sql,
+)
+
 DEFAULT_DAMPING = 0.85
 
 
@@ -450,14 +457,13 @@ def triangle_count(
         * F.col("n_triangles").cast("double")
         / F.col("n_wedges").cast("double"),
     )
-    cc_u = F.floor(F.abs(cc) * F.lit(1e6) + F.lit(0.5)).cast("long")
     return out.select(
         "n_nodes",
         "n_edges",
         "n_wedges",
         "n_triangles",
         F.when(cc.isNull(), F.lit(None))
-        .otherwise(cc_u / 1e6)
+        .otherwise(fixed_abs(cc) / 1e6)
         .alias("global_clustering"),
     )
 
@@ -497,8 +503,7 @@ stats AS (
 )
 SELECT n_nodes, n_edges, n_wedges, n_triangles,
        CASE WHEN n_wedges > 0 THEN
-         CAST(floor(abs(3.0 * (n_triangles)::DOUBLE
-           / (n_wedges)::DOUBLE) * 1000000.0 + 0.5) AS BIGINT)
+         {fixed_abs_sql('3.0 * (n_triangles)::DOUBLE / (n_wedges)::DOUBLE')}
            / 1000000.0 END AS global_clustering
 FROM stats
 """
@@ -578,12 +583,10 @@ def degree_assortativity(
         "double"
     )
     r = F.when((vx > 0) & (vy > 0), cov / (F.sqrt(vx) * F.sqrt(vy)))
-    r_u = F.floor(F.abs(r) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    r_signed = F.when(r < 0, -r_u).otherwise(r_u)
     return agg.select(
         (n / 2).cast("long").alias("n_edges"),
         F.when(r.isNull(), F.lit(None))
-        .otherwise(r_signed / 1e6)
+        .otherwise(fixed(r) / 1e6)
         .alias("r"),
     )
 
@@ -593,11 +596,6 @@ def oracle_assortativity_sql(
 ) -> str:
     """DuckDB twin of :func:`degree_assortativity`."""
     rr = "(cov)::DOUBLE / (sqrt((vx)::DOUBLE) * sqrt((vy)::DOUBLE))"
-    micro = (
-        f"(CASE WHEN ({rr}) < 0 THEN -CAST(floor(abs({rr})"
-        f" * 1000000.0 + 0.5) AS BIGINT) ELSE CAST(floor(abs({rr})"
-        f" * 1000000.0 + 0.5) AS BIGINT) END)"
-    )
     return f"""
 WITH e AS (
   SELECT DISTINCT least(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS u,
@@ -632,7 +630,7 @@ fin AS (
   FROM agg
 )
 SELECT CAST(n / 2 AS BIGINT) AS n_edges,
-       CASE WHEN vx > 0 AND vy > 0 THEN {micro} / 1000000.0 END AS r
+       CASE WHEN vx > 0 AND vy > 0 THEN {fixed_sql(rr)} / 1000000.0 END AS r
 FROM fin
 """
 
@@ -726,13 +724,12 @@ def local_clustering(
         * F.col("n_triangles").cast("double")
         / (F.col("_d2") * (F.col("_d2") - 1)).cast("double"),
     )
-    cc_u = F.floor(F.abs(cc) * F.lit(1e6) + F.lit(0.5)).cast("long")
     return out.select(
         "node",
         "degree",
         "n_triangles",
         F.when(cc.isNull(), F.lit(None))
-        .otherwise(cc_u / 1e6)
+        .otherwise(fixed_abs(cc) / 1e6)
         .alias("local_cc"),
     )
 
@@ -771,9 +768,10 @@ tri AS (
 SELECT deg.n AS node, deg.d AS degree,
        CAST(coalesce(tri.t3, 0) AS BIGINT) AS n_triangles,
        CASE WHEN deg.d >= 2 THEN
-         CAST(floor(abs(2.0 * (coalesce(tri.t3, 0))::DOUBLE
-           / (deg.d * (deg.d - 1))::DOUBLE) * 1000000.0 + 0.5)
-           AS BIGINT) / 1000000.0 END AS local_cc
+         {fixed_abs_sql(
+             '2.0 * (coalesce(tri.t3, 0))::DOUBLE'
+             ' / (deg.d * (deg.d - 1))::DOUBLE'
+         )} / 1000000.0 END AS local_cc
 FROM deg LEFT JOIN tri ON tri.n = deg.n
 """
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
+
 from med_doi_feature_extraction_spark.operators.dedup import ngrams_all_col
 
 
@@ -388,18 +390,14 @@ def js_divergence(
     ).cast("double")
     m = (p_a + p_b) / F.lit(2.0)
 
-    def _nano(c):
-        q = F.floor(F.abs(c) * F.lit(1e9) + F.lit(0.5)).cast("long")
-        return F.when(c < 0, -q).otherwise(q)
-
     terms = both.crossJoin(F.broadcast(totals)).select(
         F.col("_ta"),
         F.col("_tb"),
         F.col("_v"),
-        _nano(p_b * F.log(p_b / p_a)).alias("_kl_ba"),
-        _nano(p_a * F.log(p_a / p_b)).alias("_kl_ab"),
-        _nano(p_a * F.log(p_a / m)).alias("_js_a"),
-        _nano(p_b * F.log(p_b / m)).alias("_js_b"),
+        fixed(p_b * F.log(p_b / p_a), 1e9).alias("_kl_ba"),
+        fixed(p_a * F.log(p_a / p_b), 1e9).alias("_kl_ab"),
+        fixed(p_a * F.log(p_a / m), 1e9).alias("_js_a"),
+        fixed(p_b * F.log(p_b / m), 1e9).alias("_js_b"),
     )
     agg = terms.agg(
         F.first("_v").alias("_v2"),
@@ -434,10 +432,6 @@ def oracle_js_divergence_sql(a_sql: str, b_sql: str, text_col: str) -> str:
     ``a_sql``/``b_sql`` are relation expressions for the two corpus
     snapshots."""
 
-    def nano(expr: str) -> str:
-        q = f"CAST(floor(abs({expr}) * 1000000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{q} ELSE {q} END)"
-
     pa = "((c_a + 1.0) / (ta + v))"
     pb = "((c_b + 1.0) / (tb + v))"
     m = f"(({pa} + {pb}) / 2.0)"
@@ -464,10 +458,14 @@ WITH oa AS (
   FROM j
 ), s AS (
   SELECT max(v) AS v, max(ta) AS ta2, max(tb) AS tb2,
-         CAST(sum({nano(f'{pb} * ln({pb} / {pa})')}) AS BIGINT) AS sba,
-         CAST(sum({nano(f'{pa} * ln({pa} / {pb})')}) AS BIGINT) AS sab,
-         CAST(sum({nano(f'{pa} * ln({pa} / {m})')}) AS BIGINT) AS sja,
-         CAST(sum({nano(f'{pb} * ln({pb} / {m})')}) AS BIGINT) AS sjb
+         CAST(sum({fixed_sql(f'{pb} * ln({pb} / {pa})', 1e9)})
+           AS BIGINT) AS sba,
+         CAST(sum({fixed_sql(f'{pa} * ln({pa} / {pb})', 1e9)})
+           AS BIGINT) AS sab,
+         CAST(sum({fixed_sql(f'{pa} * ln({pa} / {m})', 1e9)})
+           AS BIGINT) AS sja,
+         CAST(sum({fixed_sql(f'{pb} * ln({pb} / {m})', 1e9)})
+           AS BIGINT) AS sjb
   FROM j CROSS JOIN t
 )
 SELECT v, ta2 AS total_a, tb2 AS total_b,

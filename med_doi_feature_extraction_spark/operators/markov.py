@@ -24,13 +24,14 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs_sql,
+    fixed_sql,
+)
 
 
 def transition_matrix(
@@ -89,9 +90,9 @@ def transition_matrix(
         "prev_type",
         "next_type",
         "n",
-        (_micro(p) / 1e6).alias("p"),
-        (_micro(p_next) / 1e6).alias("p_next"),
-        (_micro(lift) / 1e6).alias("lift"),
+        (fixed(p) / 1e6).alias("p"),
+        (fixed(p_next) / 1e6).alias("p_next"),
+        (fixed(lift) / 1e6).alias("lift"),
     )
 
 
@@ -107,10 +108,6 @@ def oracle_transition_sql(
     order = ", ".join(
         [f'"{ts_col}"'] + [f'"{c}"' for c in (tiebreak or [])]
     )
-
-    def micro(expr: str) -> str:
-        m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-        return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
 
     p = "((n)::DOUBLE / (row_n)::DOUBLE)"
     pn = "((col_n)::DOUBLE / (all_n)::DOUBLE)"
@@ -135,9 +132,9 @@ ct AS (SELECT next_type, CAST(sum(n) AS BIGINT) AS col_n
        FROM cells GROUP BY next_type),
 g AS (SELECT CAST(sum(n) AS BIGINT) AS all_n FROM cells)
 SELECT prev_type, next_type, n,
-       {micro(p)} / 1000000.0 AS p,
-       {micro(pn)} / 1000000.0 AS p_next,
-       {micro(lift)} / 1000000.0 AS lift
+       {fixed_sql(p)} / 1000000.0 AS p,
+       {fixed_sql(pn)} / 1000000.0 AS p_next,
+       {fixed_sql(lift)} / 1000000.0 AS lift
 FROM cells
 JOIN rt USING (prev_type)
 JOIN ct USING (next_type)
@@ -215,7 +212,7 @@ def session_paths(
             "n_steps",
             "truncated",
             "n_sessions",
-            (_micro(share) / 1e6).alias("share"),
+            (fixed(share) / 1e6).alias("share"),
         )
         .orderBy(F.desc("n_sessions"), "path")
         .limit(k)
@@ -260,8 +257,8 @@ counted AS (
 ),
 tot AS (SELECT CAST(sum(n_sessions) AS BIGINT) AS t FROM counted)
 SELECT path, n_steps, truncated, n_sessions,
-       CAST(floor(abs((n_sessions)::DOUBLE / (t)::DOUBLE)
-         * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS share
+       {fixed_abs_sql('(n_sessions)::DOUBLE / (t)::DOUBLE')}
+         / 1000000.0 AS share
 FROM counted CROSS JOIN tot
 ORDER BY n_sessions DESC, path
 LIMIT {k}

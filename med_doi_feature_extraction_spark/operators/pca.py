@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed_sql
+
 
 def _quantize(x: np.ndarray, scale: float) -> np.ndarray:
     """floor(|x|·scale + 0.5)·sign(x) as int64 — matches the SQL
@@ -184,15 +186,14 @@ def oracle_embed_cov_sql(
     quantization happens before any product."""
     s = int(scale)
 
-    def q(expr: str) -> str:
-        m = (
-            f"CAST(floor(abs(CAST({expr} AS DOUBLE)) * {s}.0 + 0.5)"
-            " AS BIGINT)"
+    def q(i: str) -> str:
+        """Element ``i`` (0-based) of the vector, quantized."""
+        return fixed_sql(
+            f'CAST("{vec_col}"[CAST({i} + 1 AS INT)] AS DOUBLE)', s
         )
-        return f"(CASE WHEN CAST({expr} AS DOUBLE) < 0 THEN -{m} ELSE {m} END)"
 
-    xi = q(f'"{vec_col}"[CAST(ii + 1 AS INT)]')
-    xj = q(f'"{vec_col}"[CAST(jj + 1 AS INT)]')
+    xi = q("ii")
+    xj = q("jj")
     return f"""
 WITH idx AS (
   SELECT CAST(a.range AS INT) AS ii, CAST(b.range AS INT) AS jj
@@ -207,7 +208,7 @@ moments AS (
 ),
 sums AS (
   SELECT CAST(r.range AS INT) AS k,
-         CAST(sum({q(f'"{vec_col}"[CAST(r.range + 1 AS INT)]')}) AS BIGINT) AS sk
+         CAST(sum({q("r.range")}) AS BIGINT) AS sk
   FROM {rel_sql}, range({dim}) r
   GROUP BY r.range
 ),

@@ -32,6 +32,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed_abs,
+    fixed_abs_sql,
+)
 from pyspark.sql import types as T
 
 _NUMERIC = (
@@ -248,7 +253,7 @@ def column_entropy(
     )
     p = F.col("c").cast("double") / F.col("n_rows").cast("double")
     term = -(p * F.log(p))
-    term_u = F.floor(F.abs(term) * F.lit(1e6) + F.lit(0.5)).cast("long")
+    term_u = fixed_abs(term)
     ent = (
         counts.join(F.broadcast(totals), "column")
         .groupBy("column")
@@ -256,7 +261,7 @@ def column_entropy(
     )
     ent_d = F.col("_ent_u") / 1e6
     norm = ent_d / F.log(F.col("n_distinct").cast("double"))
-    norm_u = F.floor(F.abs(norm) * F.lit(1e6) + F.lit(0.5)).cast("long")
+    norm_u = fixed_abs(norm)
     return (
         totals.join(ent, "column")
         .join(F.broadcast(nulls), "column")
@@ -293,9 +298,10 @@ SELECT '{c}' AS column, * FROM (
     FROM counts
   ),
   ent AS (
-    SELECT CAST(sum(CAST(floor(abs(-((c)::DOUBLE / (n_rows)::DOUBLE)
-             * ln((c)::DOUBLE / (n_rows)::DOUBLE)) * 1000000.0 + 0.5)
-             AS BIGINT)) AS BIGINT) AS ent_u
+    SELECT CAST(sum({fixed_abs_sql(
+             '-((c)::DOUBLE / (n_rows)::DOUBLE)'
+             ' * ln((c)::DOUBLE / (n_rows)::DOUBLE)'
+           )}) AS BIGINT) AS ent_u
     FROM counts, tot
   )
   SELECT tot.n_rows,
@@ -304,9 +310,9 @@ SELECT '{c}' AS column, * FROM (
          tot.n_distinct,
          ent.ent_u / 1000000.0 AS entropy,
          CASE WHEN tot.n_distinct >= 2 THEN
-           CAST(floor(abs((ent.ent_u / 1000000.0)
-             / ln((tot.n_distinct)::DOUBLE)) * 1000000.0 + 0.5)
-             AS BIGINT) / 1000000.0
+           {fixed_abs_sql(
+             '(ent.ent_u / 1000000.0) / ln((tot.n_distinct)::DOUBLE)'
+           )} / 1000000.0
          ELSE NULL END AS entropy_norm
   FROM tot, ent
 )""")
@@ -354,9 +360,7 @@ def group_entropy(
         F.count(F.lit(1)).cast("long").alias("_k"),
     )
     p = F.col("_c").cast("double") / F.col("_n").cast("double")
-    term_u = F.floor(
-        F.abs(-(p * F.log(p))) * F.lit(1e6) + F.lit(0.5)
-    ).cast("long")
+    term_u = fixed_abs(-(p * F.log(p)))
     ent = (
         counts.join(totals, ents)
         .groupBy(*ents)
@@ -368,9 +372,7 @@ def group_entropy(
     )
     ent_d = F.col("_ent_u") / 1e6
     norm = ent_d / F.log(F.col("_k2").cast("double"))
-    norm_u = F.floor(F.abs(norm) * F.lit(1e6) + F.lit(0.5)).cast(
-        "long"
-    )
+    norm_u = fixed_abs(norm)
     px = out_prefix
     return ent.select(
         *ents,
@@ -404,17 +406,16 @@ tot AS (
 ),
 ent AS (
   SELECT {ents}, max(n) AS n, max(k) AS k,
-         CAST(sum(CAST(floor(abs(-((c)::DOUBLE / (n)::DOUBLE)
-           * ln((c)::DOUBLE / (n)::DOUBLE)) * 1000000.0 + 0.5)
-           AS BIGINT)) AS BIGINT) AS ent_u
+         CAST(sum({fixed_abs_sql(
+           '-((c)::DOUBLE / (n)::DOUBLE) * ln((c)::DOUBLE / (n)::DOUBLE)'
+         )}) AS BIGINT) AS ent_u
   FROM counts JOIN tot USING ({ents})
   GROUP BY {ents}
 )
 SELECT {ents}, n AS n_rows, k AS n_distinct,
        ent_u / 1000000.0 AS entropy,
        CASE WHEN k >= 2
-            THEN CAST(floor(abs((ent_u / 1000000.0)
-                   / ln((k)::DOUBLE)) * 1000000.0 + 0.5) AS BIGINT)
+            THEN {fixed_abs_sql('(ent_u / 1000000.0) / ln((k)::DOUBLE)')}
                  / 1000000.0 END AS entropy_norm
 FROM ent
 """
@@ -465,9 +466,7 @@ def uniqueness_audit(
     share = F.col("n_rows_in").cast("double") / F.col("_n").cast(
         "double"
     )
-    share_u = F.floor(F.abs(share) * F.lit(1e6) + F.lit(0.5)).cast(
-        "long"
-    )
+    share_u = fixed_abs(share)
     return (
         sizes.crossJoin(F.broadcast(tot))
         .select(
@@ -499,8 +498,8 @@ sizes AS (
 ),
 tot AS (SELECT CAST(sum(n_rows_in) AS BIGINT) AS n FROM sizes)
 SELECT group_size, n_keys, n_rows_in,
-       CAST(floor(abs((n_rows_in)::DOUBLE / (n)::DOUBLE)
-         * 1000000.0 + 0.5) AS BIGINT) / 1000000.0 AS row_share
+       {fixed_abs_sql('(n_rows_in)::DOUBLE / (n)::DOUBLE')}
+         / 1000000.0 AS row_share
 FROM sizes CROSS JOIN tot
 ORDER BY group_size
 """
@@ -581,8 +580,7 @@ def pattern_census(
             F.col("n_rows") > 0,
             F.col(cnt).cast("double") / F.col("n_rows").cast("double"),
         )
-        m = F.floor(F.abs(s) * F.lit(1e6) + F.lit(0.5)).cast("long")
-        return F.when(s.isNull(), F.lit(None)).otherwise(m / 1e6)
+        return F.when(s.isNull(), F.lit(None)).otherwise(fixed_abs(s) / 1e6)
 
     return per.select(
         "column",
@@ -604,8 +602,8 @@ def oracle_pattern_census_sql(
 
     def share(cnt: str) -> str:
         return (
-            f"CASE WHEN n_rows > 0 THEN CAST(floor(abs(({cnt})::DOUBLE"
-            " / (n_rows)::DOUBLE) * 1000000.0 + 0.5) AS BIGINT)"
+            "CASE WHEN n_rows > 0 THEN "
+            f"{fixed_abs_sql(f'({cnt})::DOUBLE / (n_rows)::DOUBLE')}"
             " / 1000000.0 END"
         )
 

@@ -33,10 +33,11 @@ each engine's ``round()``: the Flesch constants (206.835, 1.015,
 exactly on ``x.xxxx5`` boundaries routinely, where Spark's
 BigDecimal-HALF_UP and DuckDB's float rounding disagree on the same
 double. Both engines (and the pytest reference) therefore use the
-identical IEEE sequence ``sign · floor(|x|·10⁴ + 0.5) / 10⁴ + 0.0``
-(the repo's HALF_UP-emulation idiom, kmeans/lm precedent; the
-``+ 0.0`` normalizes ``-0.0``) — boundary or not, the three
-implementations compute the same double. The gate compares the
+identical IEEE sequence ``sign · floor(|x|·10⁴ + 0.5) / 10⁴``
+(:mod:`~med_doi_feature_extraction_spark.kernels.fixed` at scale
+10⁴; the sign is applied to the integer count, so no ``-0.0``
+arises) — boundary or not, the three implementations compute the
+same double. The gate compares the
 ROUNDED values so both engines commit to the same verdict.
 Empty/NULL text yields all-zero counts, NULL scores, and
 ``readable = false`` (no prose evidence).
@@ -44,8 +45,10 @@ Empty/NULL text yields all-zero counts, NULL scores, and
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
 
 _WORD = "[A-Za-z]+"
 _SENT = "[.!?]+"
@@ -58,22 +61,6 @@ DEFAULT_BOUNDS = {
     "max_fk_grade": 16.0,  # beyond college-graduate grade
     "min_ttr": 0.2,        # template/spam pages repeat their vocab
 }
-
-
-def _round4(c: Column) -> Column:
-    """Portable 4-dp HALF_UP(away-from-zero): identical IEEE op
-    sequence in Spark, DuckDB (:func:`_oracle_round4`) and the pytest
-    reference — immune to the engines' divergent native ``round()``
-    behavior at exact ``x.xxxx5`` boundaries."""
-    m = F.floor(F.abs(c) * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-    return F.when(c < 0, -m).otherwise(m) + F.lit(0.0)
-
-
-def _oracle_round4(expr: str) -> str:
-    m = f"floor(abs({expr}) * 10000.0 + 0.5) / 10000.0"
-    return (
-        f"(CASE WHEN ({expr}) < 0 THEN -({m}) ELSE ({m}) END + 0.0)"
-    )
 
 
 def readability_features(
@@ -136,31 +123,18 @@ def readability_features(
         n_words.alias("n_words"),
         n_sent.alias("n_sentences"),
         n_syll.alias("n_syllables"),
-        F.when(has, _round4(wps)).otherwise(null_d).alias(
-            "words_per_sentence"
-        ),
-        F.when(has, _round4(spw)).otherwise(null_d).alias(
-            "syllables_per_word"
-        ),
-        F.when(has, _round4(total_len.cast("double") / wc))
-        .otherwise(null_d)
-        .alias("mean_word_len"),
-        F.when(has, _round4(long_words.cast("double") / wc))
-        .otherwise(null_d)
-        .alias("long_word_frac"),
-        F.when(has, _round4(ttr)).otherwise(null_d).alias(
-            "type_token_ratio"
-        ),
-        F.when(
-            has, _round4(F.lit(206.835) - 1.015 * wps - 84.6 * spw)
-        )
-        .otherwise(null_d)
-        .alias("flesch"),
-        F.when(
-            has, _round4(0.39 * wps + 11.8 * spw - F.lit(15.59))
-        )
-        .otherwise(null_d)
-        .alias("fk_grade"),
+        *[
+            F.when(has, fixed(x, 1e4) / 1e4).otherwise(null_d).alias(name)
+            for name, x in [
+                ("words_per_sentence", wps),
+                ("syllables_per_word", spw),
+                ("mean_word_len", total_len.cast("double") / wc),
+                ("long_word_frac", long_words.cast("double") / wc),
+                ("type_token_ratio", ttr),
+                ("flesch", F.lit(206.835) - 1.015 * wps - 84.6 * spw),
+                ("fk_grade", 0.39 * wps + 11.8 * spw - F.lit(15.59)),
+            ]
+        ],
     )
 
 
@@ -209,8 +183,8 @@ def oracle_readability_sql(text_expr: str, **bounds) -> dict[str, str]:
 
     def guarded(expr: str) -> str:
         return (
-            f"CASE WHEN ({n_words}) > 0 THEN {_oracle_round4(expr)}"
-            f" ELSE NULL END"
+            f"CASE WHEN ({n_words}) > 0 THEN {fixed_sql(expr, 1e4)}"
+            f" / 10000.0 ELSE NULL END"
         )
 
     stats = {

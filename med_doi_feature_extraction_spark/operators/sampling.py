@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
+
 _U32 = float(2**32)
 
 
@@ -705,7 +707,7 @@ def neyman_allocation(
     """
     if budget < 0:
         raise ValueError("budget must be >= 0")
-    y = _cap_micro_scale(F.col(val_col).cast("double"), val_scale)
+    y = fixed(F.col(val_col).cast("double"), val_scale)
     rows = df.filter(F.col(val_col).isNotNull()).select(
         *stratum_cols, y.alias("_y")
     )
@@ -796,13 +798,6 @@ def neyman_allocation(
     ).orderBy(*stratum_cols)
 
 
-def _cap_micro_scale(c, scale: int):
-    m = F.floor(F.abs(c) * F.lit(float(scale)) + F.lit(0.5)).cast(
-        "long"
-    )
-    return F.when(c < 0, -m).otherwise(m)
-
-
 def oracle_neyman_sql(
     rel_sql: str,
     stratum_cols: list[str],
@@ -817,8 +812,7 @@ def oracle_neyman_sql(
     keys_asc = ", ".join(f'"{c}" ASC' for c in stratum_cols)
     b = int(budget)
     sc = float(val_scale)
-    m = f'CAST(floor(abs("{val_col}") * {sc!r} + 0.5) AS BIGINT)'
-    y = f'(CASE WHEN "{val_col}" < 0 THEN -{m} ELSE {m} END)'
+    y = fixed_sql(f'"{val_col}"', sc)
     var = (
         f"((n_rows * syy - sy * sy)::DOUBLE"
         f" / (n_rows * n_rows)::DOUBLE / {sc * sc!r})"

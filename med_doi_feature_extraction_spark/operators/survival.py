@@ -31,18 +31,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_sql
 
 
 def km_curve(
@@ -94,7 +86,7 @@ def km_curve(
     grid = grid.withColumn("n_risk", n_risk)
     term_u = F.when(
         F.col("n_events") < F.col("n_risk"),
-        _micro(
+        fixed(
             F.log(
                 (
                     F.col("n_risk") - F.col("n_events")
@@ -142,7 +134,7 @@ def oracle_km_sql(
     """DuckDB twin of :func:`km_curve` — identical grid, at-risk
     derivation, and µ-quantized log-space product."""
     ents = ", ".join(f'"{c}"' for c in group_cols)
-    ln_term = _oracle_micro(
+    ln_term = fixed_sql(
         "ln((n_risk - n_events)::DOUBLE / n_risk::DOUBLE)"
     )
     return f"""

@@ -27,13 +27,10 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
+from med_doi_feature_extraction_spark.kernels.fixed import fixed, fixed_abs_sql
 
 
 def table_diff(
@@ -122,7 +119,7 @@ def table_diff_summary(
         .select(
             "status",
             "n",
-            (_micro(share) / 1e6).alias("share"),
+            (fixed(share) / 1e6).alias("share"),
             *[F.col(f"{c}_changed_n") for c in compare_cols],
         )
         .orderBy("status")
@@ -185,8 +182,7 @@ per AS (
 ),
 tot AS (SELECT CAST(sum(n) AS BIGINT) AS t FROM per)
 SELECT status, n,
-       CAST(floor(abs((n)::DOUBLE / (t)::DOUBLE) * 1000000.0 + 0.5)
-         AS BIGINT) / 1000000.0 AS share,
+       {fixed_abs_sql('(n)::DOUBLE / (t)::DOUBLE')} / 1000000.0 AS share,
        {", ".join(f"{c}_changed_n" for c in compare_cols)}
 FROM per CROSS JOIN tot
 ORDER BY status

@@ -35,15 +35,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def _micro(c: Column) -> Column:
-    m = F.floor(F.abs(c) * F.lit(1e6) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
-
-
-def _oracle_micro(expr: str) -> str:
-    m = f"CAST(floor(abs({expr}) * 1000000.0 + 0.5) AS BIGINT)"
-    return f"(CASE WHEN ({expr}) < 0 THEN -{m} ELSE {m} END)"
+from med_doi_feature_extraction_spark.kernels.fixed import (
+    fixed,
+    fixed_abs,
+    fixed_abs_sql,
+    fixed_sql,
+)
 
 
 def trend_features(
@@ -65,7 +62,7 @@ def trend_features(
         - F.lit(int(ref_epoch))
     )
     v = F.col(val_col).cast("double")
-    y = _micro_scale(v, val_scale)
+    y = fixed(v, val_scale)
     rows = df.filter(
         F.col(ts_col).isNotNull() & v.isNotNull()
     ).select(*entity_cols, t.alias("_t"), y.alias("_y"))
@@ -98,15 +95,10 @@ def trend_features(
         *entity_cols,
         n.alias("n_obs"),
         "t_span_sec",
-        (_micro(slope_day) / 1e6).alias("slope_per_day"),
-        (_micro(intercept) / 1e6).alias("intercept"),
-        (_micro(r2) / 1e6).alias("r2"),
+        (fixed(slope_day) / 1e6).alias("slope_per_day"),
+        (fixed(intercept) / 1e6).alias("intercept"),
+        (fixed(r2) / 1e6).alias("r2"),
     )
-
-
-def _micro_scale(c: Column, scale: int) -> Column:
-    m = F.floor(F.abs(c) * F.lit(float(scale)) + F.lit(0.5)).cast("long")
-    return F.when(c < 0, -m).otherwise(m)
 
 
 def oracle_trend_sql(
@@ -120,11 +112,7 @@ def oracle_trend_sql(
     """DuckDB twin of :func:`trend_features`."""
     ents = ", ".join(entity_exprs)
     sc = float(val_scale)
-    y = (
-        f"(CASE WHEN ({val_expr}) < 0 THEN "
-        f"-CAST(floor(abs({val_expr}) * {sc!r} + 0.5) AS BIGINT) ELSE "
-        f"CAST(floor(abs({val_expr}) * {sc!r} + 0.5) AS BIGINT) END)"
-    )
+    y = fixed_sql(val_expr, sc)
     num = "(n * sty - st * sy)::DOUBLE"
     den = "(n * stt - st * st)::DOUBLE"
     deny = "(n * syy - sy * sy)::DOUBLE"
@@ -155,11 +143,11 @@ agg AS (
 )
 SELECT {ents}, n AS n_obs, t_span_sec,
        CASE WHEN {den} > 0 THEN
-         {_oracle_micro(slope)} / 1000000.0 END AS slope_per_day,
+         {fixed_sql(slope)} / 1000000.0 END AS slope_per_day,
        CASE WHEN {den} > 0 THEN
-         {_oracle_micro(intercept)} / 1000000.0 END AS intercept,
+         {fixed_sql(intercept)} / 1000000.0 END AS intercept,
        CASE WHEN {den} > 0 AND {deny} > 0 THEN
-         {_oracle_micro(r2)} / 1000000.0 END AS r2
+         {fixed_sql(r2)} / 1000000.0 END AS r2
 FROM agg
 """
 
@@ -230,10 +218,10 @@ def burstiness(
     return agg.select(
         *entity_cols,
         "n_gaps",
-        (_micro(F.when(n >= 1, mean)) / 1e6).alias("mean_gap_sec"),
-        (_micro(F.when(n >= 2, sd)) / 1e6).alias("std_gap_sec"),
-        (_micro(cv) / 1e6).alias("cv"),
-        (_micro(b) / 1e6).alias("burstiness"),
+        (fixed(F.when(n >= 1, mean)) / 1e6).alias("mean_gap_sec"),
+        (fixed(F.when(n >= 2, sd)) / 1e6).alias("std_gap_sec"),
+        (fixed(cv) / 1e6).alias("cv"),
+        (fixed(b) / 1e6).alias("burstiness"),
     )
 
 
@@ -269,15 +257,15 @@ agg AS (
   FROM g GROUP BY {ents}
 )
 SELECT {ents}, n AS n_gaps,
-       CASE WHEN n >= 1 THEN {_oracle_micro(mean)} / 1000000.0 END
+       CASE WHEN n >= 1 THEN {fixed_sql(mean)} / 1000000.0 END
          AS mean_gap_sec,
-       CASE WHEN n >= 2 THEN {_oracle_micro(sd)} / 1000000.0 END
+       CASE WHEN n >= 2 THEN {fixed_sql(sd)} / 1000000.0 END
          AS std_gap_sec,
        CASE WHEN n >= 2 AND {mean} > 0
-            THEN {_oracle_micro(f'({sd} / {mean})')} / 1000000.0 END
+            THEN {fixed_sql(f'({sd} / {mean})')} / 1000000.0 END
          AS cv,
        CASE WHEN n >= 2 AND {sd} + {mean} > 0
-            THEN {_oracle_micro(f'(({sd} - {mean}) / ({sd} + {mean}))')}
+            THEN {fixed_sql(f'(({sd} - {mean}) / ({sd} + {mean}))')}
                  / 1000000.0 END
          AS burstiness
 FROM agg
@@ -324,7 +312,7 @@ def autocorrelation(
         F.col(c).asc() for c in (tiebreak or [])
     ]
     w = Window.partitionBy(*entity_cols).orderBy(*order)
-    y = _micro_scale(F.col(val_col).cast("double"), val_scale)
+    y = fixed(F.col(val_col).cast("double"), val_scale)
     rows = (
         df.filter(F.col(ts_col).isNotNull())
         .select(
@@ -363,7 +351,7 @@ def autocorrelation(
     return agg.select(
         *entity_cols,
         "n_pairs",
-        (_micro(r) / 1e6).alias("r"),
+        (fixed(r) / 1e6).alias("r"),
     )
 
 
@@ -381,11 +369,7 @@ def oracle_autocorrelation_sql(
     order = ", ".join(
         [f'"{ts_col}"'] + [f'"{c}"' for c in (tiebreak or [])]
     )
-    m = (
-        f"CAST(floor(abs(\"{val_col}\") * {val_scale}.0 + 0.5)"
-        " AS BIGINT)"
-    )
-    y = f'(CASE WHEN "{val_col}" < 0 THEN -{m} ELSE {m} END)'
+    y = fixed_sql(f'"{val_col}"', val_scale)
     rr = "(cov)::DOUBLE / (sqrt((va)::DOUBLE) * sqrt((vb)::DOUBLE))"
     return f"""
 WITH lagged AS (
@@ -414,7 +398,7 @@ fin AS (
 )
 SELECT {ents}, n AS n_pairs,
        CASE WHEN n >= 2 AND va > 0 AND vb > 0
-            THEN {_oracle_micro(rr)} / 1000000.0 END AS r
+            THEN {fixed_sql(rr)} / 1000000.0 END AS r
 FROM fin
 """
 
@@ -470,9 +454,7 @@ def temporal_profile(
             .agg(F.min("_b").cast("int").alias(f"{prefix}_peak"))
         )
         p = F.col("_c").cast("double") / F.col("_n").cast("double")
-        term_u = F.floor(
-            F.abs(-(p * F.log(p))) * F.lit(1e6) + F.lit(0.5)
-        ).cast("long")
+        term_u = fixed_abs(-(p * F.log(p)))
         ent_share = (
             joined.groupBy(*ents)
             .agg(
@@ -490,7 +472,7 @@ def temporal_profile(
 
     def _share(cmax: str, n: str) -> Column:
         s = F.col(cmax).cast("double") / F.col(n).cast("double")
-        return _micro(s) / 1e6
+        return fixed(s) / 1e6
 
     import math
 
@@ -501,7 +483,7 @@ def temporal_profile(
         F.col("h_n").alias("n_events"),
         F.col("h_peak").alias("peak_hour"),
         _share("h_cmax", "h_n").alias("peak_hour_share"),
-        (_micro(hnorm) / 1e6).alias("hour_entropy_norm"),
+        (fixed(hnorm) / 1e6).alias("hour_entropy_norm"),
         F.col("d_peak").alias("peak_dow"),
         _share("d_cmax", "d_n").alias("peak_dow_share"),
     )
@@ -535,15 +517,13 @@ def oracle_temporal_profile_sql(
 ),
 {px}_ent AS (
   SELECT {ents}, max(n) AS n, max(cmax) AS cmax,
-         CAST(sum(CAST(floor(abs({term}) * 1000000.0 + 0.5)
-           AS BIGINT)) AS BIGINT) AS ent_u
+         CAST(sum({fixed_abs_sql(term)}) AS BIGINT) AS ent_u
   FROM {px}_cells JOIN {px}_tot USING ({ents})
   GROUP BY {ents}
 )"""
 
     share = lambda cmax, n: (
-        f"CAST(floor(abs(({cmax})::DOUBLE / ({n})::DOUBLE)"
-        " * 1000000.0 + 0.5) AS BIGINT) / 1000000.0"
+        fixed_abs_sql(f"({cmax})::DOUBLE / ({n})::DOUBLE") + " / 1000000.0"
     )
     hnorm = "((h.ent_u / 1000000.0) / ln(24.0))"
     return f"""
@@ -553,8 +533,7 @@ SELECT {ents},
        h.n AS n_events,
        hp.peak AS peak_hour,
        {share('h.cmax', 'h.n')} AS peak_hour_share,
-       CAST(floor(abs({hnorm}) * 1000000.0 + 0.5) AS BIGINT)
-         / 1000000.0 AS hour_entropy_norm,
+       {fixed_abs_sql(hnorm)} / 1000000.0 AS hour_entropy_norm,
        dp.peak AS peak_dow,
        {share('d.cmax', 'd.n')} AS peak_dow_share
 FROM h_ent h
@@ -613,11 +592,11 @@ def cusum_changepoints(
     d = df.withColumns(
         {
             "_rn": F.row_number().over(w),
-            "_vu": _micro(F.col(val_col)),
+            "_vu": fixed(F.col(val_col)),
         }
     ).withColumn(
         "_bu",
-        _micro(
+        fixed(
             F.avg(
                 F.when(F.col("_rn") <= n_base, F.col(val_col))
             ).over(w_all)
@@ -662,7 +641,7 @@ def oracle_cusum_sql(
     )
     kappa_u = int(round(abs(kappa) * 1e6))
     thr_u = int(round(threshold * 1e6))
-    val_u = _oracle_micro(f'"{val_col}"')
+    val_u = fixed_sql(f'"{val_col}"')
     base = (
         f'avg(CASE WHEN rn <= {n_base} THEN "{val_col}" END)'
         f" OVER (PARTITION BY {ents})"
@@ -674,7 +653,7 @@ WITH numbered AS (
 ),
 based AS (
   SELECT *, {val_u} AS vu,
-         {_oracle_micro(base)} AS bu
+         {fixed_sql(base)} AS bu
   FROM numbered
 ),
 summed AS (

@@ -203,6 +203,27 @@ def test_cli_pages_no_resume_reruns_every_bucket(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "feat")).count() == len(pdf)
 
 
+def test_cli_pages_n_buckets_overrides_config(spark, tmp_path):
+    """``--n-buckets`` overrides the spec's ``execution.n_buckets``."""
+    from med_doi_feature_extraction_spark.manifest import CheckpointManifest
+    from med_doi_feature_extraction_spark.sources.pages import generate_pages
+
+    pdf = generate_pages(n_urls=20, seed=11)
+    spark.createDataFrame(pdf).write.parquet(str(tmp_path / "pages"))
+    res = cli_main(
+        [
+            "pages", "--config", "config/pipelines/pages_features.yaml",
+            "--input", str(tmp_path / "pages"),
+            "--output", str(tmp_path / "feat"),
+            "--manifest", str(tmp_path / "mf"),
+            "--n-buckets", "2",
+        ]
+    )
+    assert res["rows_out"] == len(pdf)
+    done = CheckpointManifest(spark, str(tmp_path / "mf")).done_buckets()
+    assert done == {0, 1}
+
+
 def test_cli_curate_subcommand(spark, tmp_path):
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),

@@ -188,63 +188,10 @@ def test_interleave_exhaustion_semantics(spark):
     assert sum(1 for r in head if r["src"] == "tiny") > 70
 
 
-def test_fit_hashed_dist_pair_parity(spark):
-    """fit_hashed_dist_pair == (fit on filtered target, fit on raw),
-    row-for-row including floor_logp, on a mixed-language corpus."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from med_doi_feature_extraction_spark.operators import dsir
-
-    texts = [
-        ("a b c a", "en"), ("b c d", "en"), ("x y z", "de"),
-        ("a x", "de"), ("", "en"), (None, "de"), ("c c c", "en"),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(texts, columns=["text", "lang"])
-    )
-    dim = 64
-    t2, q2, floors = dsir.fit_hashed_dist_pair(
-        df, "text", F.col("lang") == "en", dim=dim
-    )
-    t1 = dsir.fit_hashed_dist(df.filter(F.col("lang") == "en"), "text", dim=dim)
-    q1 = dsir.fit_hashed_dist(df, "text", dim=dim)
-
-    def rows(d):
-        return sorted(
-            (r["idx"], r["logp"], r["floor_logp"]) for r in d.collect()
-        )
-
-    assert rows(t2) == rows(t1)
-    assert rows(q2) == rows(q1)
-    # floors row == the dists' floor_logp; empty target side -> NULL
-    fr = floors.collect()[0]
-    assert fr["_ft"] == t1.collect()[0]["floor_logp"]
-    assert fr["_fq"] == q1.collect()[0]["floor_logp"]
-    _, _, f_empty = dsir.fit_hashed_dist_pair(
-        df, "text", F.col("lang") == "xx", dim=dim
-    )
-    assert f_empty.collect()[0]["_ft"] is None
-    # scorer parity with the floors frame wired through
-    got = dsir.dsir_logweights(
-        df.withColumn("doc_id", F.monotonically_increasing_id()),
-        "doc_id", "text", t2, q2, dim=dim, floors=floors,
-    )
-    ref = dsir.dsir_logweights(
-        df.withColumn("doc_id", F.monotonically_increasing_id()),
-        "doc_id", "text", t1, q1, dim=dim,
-    )
-    r = lambda d: sorted(
-        (x["doc_id"], x["n_grams"], x["logw"]) for x in d.collect()
-    )
-    assert r(got) == r(ref)
-
-
-
 def test_dsir_logweights_fused_parity(spark):
-    """dsir_logweights_fused == fit_hashed_dist_pair + dsir_logweights
-    == two fits + score, row-for-row, including the empty-target edge
-    (all-NULL llr -> logw coalesced to 0)."""
+    """dsir_logweights_fused == two fits + dsir_logweights, row-for-row,
+    including the empty-target edge (all-NULL llr -> logw coalesced
+    to 0)."""
     import pandas as pd
     from pyspark.sql import functions as F
 

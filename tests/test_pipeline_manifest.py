@@ -114,3 +114,17 @@ def test_kill_resume_on_file_uri(spark, pages_df, dim_df, tmp_path):
     recs = manifest.records()
     assert sum(r["rows_out"] for r in recs) == pages_df.count()
     assert all(r["bytes_out"] > 0 for r in recs)
+
+
+def test_parquet_rows_and_bytes_same_for_path_and_file_uris(spark, tmp_path):
+    """A plain path, a ``file:/`` URI (the form Spark itself reports,
+    e.g. ``spark.sql.warehouse.dir``) and a ``file:///`` URI name the
+    same directory and must report the same (rows, bytes)."""
+    from med_doi_feature_extraction_spark.fsutil import parquet_rows_and_bytes
+
+    d = str(tmp_path / "pq")
+    spark.range(3).coalesce(1).write.parquet(d)
+    plain = parquet_rows_and_bytes(spark, d)
+    assert plain[0] == 3 and plain[1] > 0
+    assert parquet_rows_and_bytes(spark, f"file:{d}") == plain
+    assert parquet_rows_and_bytes(spark, f"file://{d}") == plain
