@@ -4485,9 +4485,9 @@ def _dsir_weights_df(spark, sf_dir):
     )
 
     docs = spread(_read(spark, sf_dir, "documents"))
-    # fused fit+score: one combined per-bucket broadcast, 3 gram-pass
-    # derivations instead of 6 — bit-identical to the compositional
-    # fit+score path (dsir parity tests)
+    # fused fit+score: one combined per-bucket broadcast, 2 gram passes
+    # (counts + scorer) instead of 6 — bit-identical to the
+    # compositional fit+score path (dsir parity tests)
     return dsir_logweights_fused(
         docs, "doc_id", "text", F.col("lang") == "en", dim=_DSIR_DIM
     )

@@ -12,9 +12,10 @@ same integer for every input inside the envelope below,
 
 ``fixed_abs``/``fixed_abs_sql`` omit the sign for inputs that cannot
 be negative (shares, entropy terms). NULL stays NULL. Envelope:
-``|x|·scale`` must stay below 2⁶³ and ``x`` must not be NaN — past
-the range Spark saturates and maps NaN to 0, while DuckDB's BIGINT
-cast raises on both.
+``floor(|x|·scale + 0.5)`` must stay below 2⁶³, so NaN and ±inf are
+outside it. Both engines fail loudly outside: DuckDB's BIGINT cast
+raises, and the Spark builders ``raise_error`` instead of letting
+Spark's cast saturate to ±(2⁶³−1) or map NaN to 0.
 """
 
 from __future__ import annotations
@@ -24,8 +25,13 @@ from pyspark.sql import functions as F
 
 
 def fixed_abs(c: Column, scale: float = 1e6) -> Column:
-    """``floor(|c|·scale + 0.5)`` as a long."""
-    return F.floor(F.abs(c) * F.lit(float(scale)) + F.lit(0.5)).cast("long")
+    """``floor(|c|·scale + 0.5)`` as a long; raises outside the
+    envelope (NaN compares above every double in Spark)."""
+    m = F.abs(c) * F.lit(float(scale)) + F.lit(0.5)
+    err = f"fixed-point overflow: NaN, inf or |x|*{scale:g} >= 2^63"
+    return F.when(m < F.lit(2.0**63), F.floor(m).cast("long")).when(
+        c.isNotNull(), F.raise_error(F.lit(err))
+    )
 
 
 def fixed(c: Column, scale: float = 1e6) -> Column:

@@ -14,20 +14,21 @@ whole design:
   textbook skewed key — and partial aggregation is precisely the
   standard fix, so no salting is needed here.
 - ``tfidf_topk``: per-doc term frequency (keys prefixed by doc id —
-  no hot keys) joined against the df table on token. The df table
-  at web scale is ~vocabulary-sized (millions, not trillions) —
-  far below the corpus but above blind-broadcast comfort; the join
-  is left to AQE, which broadcast-converts it when the (filtered)
-  df side fits. ``min_df`` prunes hapax noise BEFORE the join,
-  shrinking the build side by ~half (Zipf: ~50% of vocabulary
-  occurs once). In the non-broadcast regime the join shuffles on
-  the Zipf-skewed token key — AQE skew-join splits the hot
-  partitions; exercised by ``tests/test_skew.py::
-  test_tfidf_join_skew_non_broadcast`` (dominant token in every
-  doc, auto-broadcast disabled, exact parity with the broadcast
-  plan). For corpora where even that regime strains, raise
-  ``min_df`` (the head of the Zipf curve survives any min_df, so
-  skew is unchanged, but the build side shrinks ~2× per unit).
+  no hot keys) joined against the df table on token — a second
+  aggregate over the same tf exchange, so the text is exploded once.
+  The df table at web scale is ~vocabulary-sized (millions, not
+  trillions) — far below the corpus but above blind-broadcast
+  comfort; the join is left to AQE, which broadcast-converts it when
+  the (filtered) df side fits. ``min_df`` prunes hapax noise BEFORE
+  the join, shrinking the build side by ~half (Zipf: ~50% of
+  vocabulary occurs once). In the non-broadcast regime the join
+  shuffles on the Zipf-skewed token key — AQE skew-join splits the
+  hot partitions; exercised by ``tests/test_skew.py::
+  test_tfidf_join_skew_non_broadcast`` (dominant token in every doc,
+  auto-broadcast disabled, exact parity with the broadcast plan).
+  For corpora where even that regime strains, raise ``min_df`` (the
+  head of the Zipf curve survives any min_df, so skew is unchanged,
+  but the build side shrinks ~2× per unit).
 
 IDF uses the smoothed form ln((N+1)/(df+1)) — deterministic, no
 zero-division, SQL-reproducible.
@@ -78,12 +79,11 @@ def tfidf_topk(
     The corpus size N is a scalar subquery inside the plan, so building
     the operator starts no Spark job. Returns (id, token, tf, df,
     tfidf) with tfidf rounded to 6 dp for cross-engine comparability.
+    ``id_col`` is a key: df counts distinct ids.
     """
     n_docs = docs.select(F.count(F.lit(1))).scalar()
-    # per-doc term frequency: doc-id-prefixed keys, no skew.
-    # tokenization = ngrams_all_col(n=1): the ONE normalization shared
-    # with the dedup tier and document_frequency — tf and df must
-    # never drift apart or the join silently misses tokens
+    # per-doc term frequency (doc-id-prefixed keys, no skew) over the
+    # ONE tokenization shared with the dedup tier and document_frequency
     tf = (
         docs.select(
             F.col(id_col),
@@ -93,7 +93,11 @@ def tfidf_topk(
         .groupBy(id_col, "token")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
-    dfreq = document_frequency(docs, text_col, min_df=min_df)
+    # df = docs with tf ≥ 1: reading tf keeps this copy of the tf
+    # aggregate identical, so its exchange is reused (one explode)
+    dfreq = tf.groupBy("token").agg(F.count_if(F.col("tf") >= 1).alias("df"))
+    if min_df > 1:
+        dfreq = dfreq.filter(F.col("df") >= min_df)
     idf = F.log((n_docs + 1).cast("double") / (F.col("df") + 1).cast("double"))
     scored = tf.join(dfreq, "token").withColumn(
         "tfidf", F.round(F.col("tf") * idf, 6)
@@ -227,19 +231,18 @@ def bm25_score(
     """Okapi BM25 of every document against a bounded query-term set
     (Robertson/Sparck Jones; the Lucene always-positive idf form
     ``ln(1 + (N - df + 0.5)/(df + 0.5))``). Returns
-    ``(id, dl, terms_matched, bm25)`` for ALL documents — zero-match
-    and empty docs score 0.0, a retrieval gate must see them.
+    ``(id, dl, terms_matched, bm25)`` for ALL documents — zero-match,
+    empty and NULL-text docs score 0.0 with ``dl`` 0, a retrieval gate
+    must see them.
 
-    Scale shape: the query set is a plan literal, so the very first
-    operation after the scan is ``array_contains`` pruning — per-term
-    tf rows exist only for query terms (corpus × |Q| worst case, not
-    corpus × doc length). Per-term df and the tf→idf join are
-    |Q|-bounded broadcasts. Doc length comes from the same scan (no
-    second pass over text), and the only corpus-sized exchange is the
-    final per-doc sum, keyed by document id — no skew by
-    construction. The corpus stats N and avgdl come from ONE struct-
-    valued scalar subquery (count + mean doc length together) inside
-    the plan, so building the operator starts no Spark job.
+    Scale shape: the query set is a plan literal, so each doc's
+    per-term tf is an array of |Q| counts built in the scan stage
+    (after ``array_contains`` pruning). N, mean doc length and the |Q|
+    document frequencies are ONE struct-valued scalar subquery (a
+    1-row aggregate) inside the plan, so building the operator starts
+    no Spark job. Two passes over the text — that aggregate and the
+    scoring projection — and no corpus-sized shuffle: one output row
+    per input row, no doc spine to re-join.
     """
     terms = sorted(set(query_terms))
     qarr = F.array(*[F.lit(t) for t in terms])
@@ -250,53 +253,49 @@ def bm25_score(
         ).alias("_toks"),
     ).select(
         id_col,
-        F.size("_toks").alias("dl"),
+        F.coalesce(F.size("_toks"), F.lit(0)).alias("dl"),
         F.filter("_toks", lambda t: F.array_contains(qarr, t)).alias("_q"),
+    ).select(
+        id_col,
+        "dl",
+        F.transform(
+            qarr, lambda q: F.size(F.filter("_q", lambda t: t == q))
+        ).alias("_tf"),
     )
     stats = base.select(
-        F.struct(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("a"))
+        F.struct(
+            F.count(F.lit(1)).alias("n"),
+            F.avg("dl").alias("a"),
+            F.array(
+                *[F.count_if(F.col("_tf")[i] > 0) for i in range(len(terms))]
+            ).alias("df"),
+        )
     ).scalar()
-    tf = (
-        base.select(id_col, "dl", F.explode("_q").alias("token"))
-        .groupBy(id_col, "dl", "token")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    # the |Q|-row df table carries the stats: one subquery in the plan
-    dfreq = (
-        tf.groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .select("token", "df", stats.alias("_st"))
-    )
     n_docs = F.col("_st.n").cast("double")
     avgdl = F.greatest(F.coalesce("_st.a", F.lit(0.0)), F.lit(1e-12))
-    idf = F.log(
-        F.lit(1.0)
-        + (n_docs - F.col("df") + 0.5) / (F.col("df") + 0.5)
-    )
     denom_len = F.lit(k1) * (
         F.lit(1.0 - b)
         + F.lit(b) * F.col("dl").cast("double") / avgdl
     )
-    contrib = idf * (
-        F.col("tf") * (k1 + 1.0) / (F.col("tf") + denom_len)
-    )
-    agg = (
-        tf.join(F.broadcast(dfreq), "token")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("terms_matched"),
-            F.sum(contrib).alias("_s"),
+
+    def contrib(tf, df):  # noqa: ANN001, ANN202
+        idf = F.log(F.lit(1.0) + (n_docs - df + 0.5) / (df + 0.5))
+        return F.when(
+            tf > 0, idf * (tf * (k1 + 1.0) / (tf + denom_len))
         )
-    )
-    return (
-        base.select(id_col, "dl")
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.col("dl").cast("long").alias("dl"),
-            F.coalesce("terms_matched", F.lit(0)).alias("terms_matched"),
-            F.round(F.coalesce("_s", F.lit(0.0)), 6).alias("bm25"),
-        )
+
+    return base.withColumn("_st", stats).select(
+        id_col,
+        "dl",
+        F.filter(
+            F.zip_with("_tf", "_st.df", contrib), lambda c: c.isNotNull()
+        ).alias("_c"),
+    ).select(
+        id_col,
+        F.col("dl").cast("long").alias("dl"),
+        F.size("_c").cast("long").alias("terms_matched"),
+        F.round(F.aggregate("_c", F.lit(0.0), lambda s, c: s + c), 6)
+        .alias("bm25"),
     )
 
 

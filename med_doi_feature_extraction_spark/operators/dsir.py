@@ -35,15 +35,12 @@ All hash/ln expressions have DuckDB twins kept in this module
 (`oracle_*_sql`) so the Spark code and the contract oracle cannot
 drift.
 
-Production note: when the whole chain is composed lazily in ONE job
-(as the contract query does), Spark's lineage recomputes each fit for
-its 1-row floor broadcast unless the identical-subtree ReuseExchange
-rule fires. At corpus scale, PERSIST the fitted distributions first —
-they are ≤ dim-row parquet artifacts, exactly the shape
-`sketches`-family operators already materialize — and every floor/
-dist broadcast becomes a trivial re-agg of a tiny file; the fit cost
-is paid once per corpus snapshot, scoring is then a single corpus
-scan.
+Production note: composed lazily in ONE query (as the contract query
+does), the fused weights read the text twice — the counts, whose
+1-row totals read the same exchange (a ReusedExchange), and the
+scorer. Across queries, PERSIST the fitted table first (a ≤ dim-row
+artifact, the shape `sketches`-family operators materialize): the fit
+is then paid once per corpus snapshot and scoring is one corpus scan.
 """
 
 from __future__ import annotations
@@ -57,6 +54,19 @@ DEFAULT_DIM = 1 << 14
 _U32 = float(1 << 32)
 
 
+def _grams(text_col: str) -> Column:
+    """The unigram+bigram occurrences of each doc (none for blank text)."""
+    unis = F.filter(ngrams_all_col(text_col, 1), lambda x: F.length(x) > 0)
+    return F.concat(unis, ngrams_all_col(text_col, 2))
+
+
+def _bucket(gram: Column, dim: int, salt: str) -> Column:
+    """The engine-portable sha256 bucket of a gram (NULL for NULL)."""
+    tagged = F.concat(gram, F.lit("|" + salt))
+    h = F.conv(F.substring(F.sha2(tagged, 256), 1, 8), 16, 10).cast("long")
+    return F.pmod(h, F.lit(dim))
+
+
 def hashed_grams(
     df: DataFrame,
     text_col: str,
@@ -65,16 +75,14 @@ def hashed_grams(
     salt: str = "dsir",
 ) -> DataFrame:
     """One row per unigram+bigram OCCURRENCE (duplicates kept — the
-    distributions are over occurrences), hashed to ``idx ∈ [0, dim)``
-    with the engine-portable sha256 bucket. Pure scan-stage Column
-    algebra: split/slice/zip_with n-grams (`dedup.ngrams_all_col`) →
-    one explode → hash. Whitespace-only docs contribute nothing."""
-    unis = F.filter(ngrams_all_col(text_col, 1), lambda x: F.length(x) > 0)
-    grams = F.concat(unis, ngrams_all_col(text_col, 2))
-    ex = df.select(*keep, F.explode(grams).alias("_g"))
-    tagged = F.concat(F.col("_g"), F.lit("|" + salt))
-    h = F.conv(F.substring(F.sha2(tagged, 256), 1, 8), 16, 10).cast("long")
-    return ex.select(*keep, F.pmod(h, F.lit(dim)).alias("idx"))
+    distributions are over occurrences), hashed to ``idx ∈ [0, dim)``:
+    scan-stage n-grams (`dedup.ngrams_all_col`) → one explode → hash.
+    Whitespace-only docs contribute nothing. ``idx`` is declared
+    non-null (a gram's sha256 always buckets), so a join on it pushes
+    no inferred ``isnotnull`` under a shared count."""
+    ex = df.select(*keep, F.explode(_grams(text_col)).alias("_g"))
+    idx = F.coalesce(_bucket(F.col("_g"), dim, salt), F.lit(0).cast("long"))
+    return ex.select(*keep, idx.alias("idx"))
 
 
 def fit_hashed_dist(
@@ -121,31 +129,24 @@ def dsir_logweights_fused(
     fit_hashed_dist(corpus, …))`` — parity-pinned — but ONE gram pass
     feeds both counts (a conditional count for the target subset) and
     the scorer joins ONE combined per-bucket broadcast instead of two
-    dists plus two floor rows.
+    dists plus two floor rows. ``id_col`` is a key: one row per id.
 
-    Why this is the cheap shape: every gram the scorer emits was BY
-    CONSTRUCTION counted into the raw distribution (same corpus, same
-    hash), so the raw-side logp always joins and needs no OOV floor;
-    and the target-side floor is a function of the totals row that
-    already rides the combined table, so it folds into a ``when`` on
-    the target count. The lazy diamond then re-derives the gram pass
-    3× (scorer + combined counts + its 1-row totals) instead of 4-6×,
-    and the scoring stage runs one broadcast join instead of four
-    (t, q, 2 floor crossJoins). Empty-target edge: the target logp
-    column goes NULL exactly where the compositional path's
-    NULL-floor coalesce did, and the NULL propagates through the same
+    Every gram the scorer emits was BY CONSTRUCTION counted into the
+    raw distribution, so the raw-side logp needs no OOV floor, and the
+    target-side floor folds into a ``when`` on the target count. The
+    text is read twice: the counts (their 1-row totals reuse the
+    counts exchange) and the scorer, whose OUTER explode keeps a doc
+    without grams as one NULL row, so nothing re-joins a doc spine.
+    Empty target: the target logp goes NULL where the compositional
+    path's NULL floor did and propagates through the same
     sum/round/coalesce ladder."""
-    grams = hashed_grams(
-        corpus.select(
-            F.col(id_col), target_cond.alias("_is_t"), F.col(text_col)
-        ),
+    counts = hashed_grams(
+        corpus.select(target_cond.alias("_is_t"), F.col(text_col)),
         text_col,
-        id_col,
         "_is_t",
         dim=dim,
         salt=salt,
-    )
-    counts = grams.groupBy("idx").agg(
+    ).groupBy("idx").agg(
         F.count(F.lit(1)).alias("_cq"),
         F.count(F.when(F.col("_is_t"), 1)).alias("_ct"),
     )
@@ -168,16 +169,15 @@ def dsir_logweights_fused(
             "_lq"
         ),
     )
-    scored = grams.join(F.broadcast(table), "idx", "left")
-    scores = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_grams"),
+    grams = corpus.select(
+        id_col, F.explode_outer(_grams(text_col)).alias("_g")
+    ).select(id_col, _bucket(F.col("_g"), dim, salt).alias("idx"))
+    scores = grams.join(F.broadcast(table), "idx", "left").groupBy(id_col).agg(
+        F.count("idx").alias("n_grams"),
         F.round(F.sum(F.col("_lt") - F.col("_lq")), 6).alias("logw"),
     )
-    spine = corpus.select(id_col)
-    return spine.join(scores, id_col, "left").select(
-        id_col,
-        F.coalesce(F.col("n_grams"), F.lit(0)).alias("n_grams"),
-        F.coalesce(F.col("logw"), F.lit(0.0)).alias("logw"),
+    return scores.select(
+        id_col, "n_grams", F.coalesce("logw", F.lit(0.0)).alias("logw")
     )
 
 

@@ -250,6 +250,43 @@ def train_bigram_lm(
     return lm.drop("c2")
 
 
+def _units(docs: DataFrame, id_col: str, text_col: str, explode) -> DataFrame:
+    """``(id, gram, token)`` scoring units, one per token occurrence:
+    the first token has no context (``gram`` NULL), every later token
+    carries the bigram of the two non-empty tokens ending at it. Built
+    JVM-side from two aligned slices of the non-empty tokens (no
+    per-doc window), exploded once by ``explode``
+    (``F.explode_outer`` keeps a doc with no tokens as one all-NULL
+    unit)."""
+    toks = F.filter(
+        ngrams_all_col(text_col, 1), lambda t: F.length(t) > 0
+    )
+    first = F.when(
+        F.size(toks) > 0,
+        F.array(
+            F.struct(
+                F.lit(None).cast("string").alias("gram"),
+                F.element_at(toks, 1).alias("token"),
+            )
+        ),
+    ).otherwise(
+        F.array().cast("array<struct<gram:string,token:string>>")
+    )
+    width = F.greatest(F.size(toks) - 1, F.lit(0))
+    rest = F.zip_with(
+        F.slice(toks, 1, width),
+        F.slice(toks, 2, width),
+        lambda p, t: F.struct(
+            F.concat_ws(" ", p, t).alias("gram"), t.alias("token")
+        ),
+    )
+    return docs.select(
+        id_col, explode(F.concat(first, rest)).alias("u")
+    ).select(
+        id_col, F.col("u.gram").alias("gram"), F.col("u.token").alias("token")
+    )
+
+
 def bigram_quality_score(
     docs: DataFrame,
     bigram_lm: DataFrame,
@@ -285,29 +322,7 @@ def bigram_quality_score(
 
     if oov is None:
         oov = oov_logp(unigram_lm)
-    toks = F.filter(
-        ngrams_all_col(text_col, 1), lambda t: F.length(t) > 0
-    )
-    grams = ngrams_all_col(text_col, 2)
-    first = F.when(
-        F.size(toks) > 0,
-        F.array(
-            F.struct(
-                F.lit(None).cast("string").alias("gram"),
-                F.element_at(toks, 1).alias("token"),
-            )
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<gram:string,token:string>>")
-    )
-    rest = F.zip_with(
-        grams,
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda g, t: F.struct(g.alias("gram"), t.alias("token")),
-    )
-    units = docs.select(
-        id_col, F.explode(F.concat(first, rest)).alias("u")
-    ).select(id_col, F.col("u.gram").alias("gram"), F.col("u.token").alias("token"))
+    units = _units(docs, id_col, text_col, F.explode)
     lm2 = bigram_lm.select("gram", "logp2")
     if broadcast_bigrams:
         lm2 = F.broadcast(lm2)
@@ -638,9 +653,19 @@ def train_kn_bigram_lm(
     every other table is vocabulary-bounded algebra on top of it
     (the distributed-LM property that made stupid backoff famous
     holds for KN too: raw counts in, no held-out pass).
+
+    Composed lazily with :func:`kn_quality_score`, that hash-agg runs
+    ONCE per query: every consumer reads the same columns of it, so
+    the others read its exchange as a ``ReusedExchange``. The keys are
+    declared non-null (a gram always holds one space: no inferred
+    ``isnotnull`` is pushed under the aggregate), the joins are LEFT
+    (every key exists by construction), and the continuation count is
+    the textbook ``N1+`` — contexts with ``c2 ≥ 1`` — which reads
+    ``c2``, so column pruning cannot drop the count from that copy.
     """
     if not 0 < discount < 1:
         raise ValueError("discount must be in (0, 1)")
+    parts = F.split(F.col("gram"), " ", 2)
     c2 = (
         corpus.select(
             F.explode(ngrams_all_col(text_col, 2)).alias("gram")
@@ -648,29 +673,33 @@ def train_kn_bigram_lm(
         .filter(F.length("gram") > 1)
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("long").alias("c2"))
+        .select(
+            "gram",
+            "c2",
+            F.coalesce(F.element_at(parts, 1), F.lit("")).alias("_prev"),
+            F.coalesce(F.element_at(parts, 2), F.lit("")).alias("_tok"),
+        )
     )
-    parts = F.split(F.col("gram"), " ", 2)
-    c2 = c2.select(
-        "gram",
-        "c2",
-        F.element_at(parts, 1).alias("_prev"),
-        F.element_at(parts, 2).alias("_tok"),
-    )
+    # n1f before c1: the order in which log_lambda reads them, so the
+    # contexts copy of this aggregate matches the bigrams copy
     ctx = c2.groupBy("_prev").agg(
-        F.sum("c2").cast("long").alias("c1"),
         F.count(F.lit(1)).cast("long").alias("n1f"),
+        F.sum("c2").cast("long").alias("c1"),
     )
     conts_n = c2.groupBy("_tok").agg(
-        F.count(F.lit(1)).cast("long").alias("n1b")
+        F.count_if(F.col("c2") >= 1).cast("long").alias("n1b")
     )
     n1pp = conts_n.agg(
         F.sum("n1b").cast("long").alias("_n1pp")
     )  # 1 row: total distinct bigram types
-    conts = conts_n.crossJoin(F.broadcast(n1pp)).select(
-        F.col("_tok").alias("token"),
-        F.log(
+    pc = conts_n.crossJoin(F.broadcast(n1pp)).select(
+        F.col("_tok"),
+        (
             F.col("n1b").cast("double") / F.col("_n1pp").cast("double")
-        ).alias("log_pcont"),
+        ).alias("_pcont"),
+    )
+    conts = pc.select(
+        F.col("_tok").alias("token"), F.log("_pcont").alias("log_pcont")
     )
     contexts = ctx.select(
         F.col("_prev").alias("prev"),
@@ -680,15 +709,9 @@ def train_kn_bigram_lm(
             / F.col("c1").cast("double")
         ).alias("log_lambda"),
     )
-    pc = conts_n.crossJoin(F.broadcast(n1pp)).select(
-        F.col("_tok"),
-        (
-            F.col("n1b").cast("double") / F.col("_n1pp").cast("double")
-        ).alias("_pcont"),
-    )
     bigrams = (
-        c2.join(ctx, "_prev")
-        .join(pc, "_tok")
+        c2.join(ctx, "_prev", "left")
+        .join(pc, "_tok", "left")
         .select(
             "gram",
             F.log(
@@ -715,7 +738,8 @@ def kn_quality_score(
 ) -> DataFrame:
     """Per-document Kneser–Ney log-prob — same contract as
     :func:`bigram_quality_score` (``id, n_tokens, logp_per_token,
-    ppl``; empty docs NULL) so gates can swap estimators.
+    ppl``; empty docs NULL) so gates can swap estimators. ``id_col``
+    is a key: one row per id.
 
     Scoring, per (prev, token) unit: seen bigram → its interpolated
     ``logp``; unseen bigram with seen context → ``log_lambda(prev) +
@@ -725,44 +749,21 @@ def kn_quality_score(
     a 1-row broadcast aggregate, never a driver constant.
 
     Join shape = :func:`bigram_quality_score`: units built JVM-side
-    from aligned array slices, one explode; conts/contexts are
-    vocabulary-sized (always broadcast); the bigram table broadcasts
-    while it fits (``broadcast_bigrams=False`` shuffles on the gram
-    key and lets AQE absorb hot-transition skew).
+    from aligned array slices, one OUTER explode (a doc with no
+    tokens stays as one NULL unit, so no second scan re-joins the
+    doc spine); conts/contexts are vocabulary-sized (always
+    broadcast); the bigram table broadcasts while it fits
+    (``broadcast_bigrams=False`` shuffles on the gram key and lets
+    AQE absorb hot-transition skew).
     """
-    toks = F.filter(
-        ngrams_all_col(text_col, 1), lambda t: F.length(t) > 0
-    )
-    grams = ngrams_all_col(text_col, 2)
-    first = F.when(
-        F.size(toks) > 0,
-        F.array(
-            F.struct(
-                F.lit(None).cast("string").alias("gram"),
-                F.element_at(toks, 1).alias("token"),
-            )
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<gram:string,token:string>>")
-    )
-    rest = F.zip_with(
-        grams,
-        F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
-        lambda g, t: F.struct(g.alias("gram"), t.alias("token")),
-    )
-    units = docs.select(
-        id_col, F.explode(F.concat(first, rest)).alias("u")
-    ).select(
-        id_col,
-        F.col("u.gram").alias("gram"),
-        F.col("u.token").alias("token"),
-    )
+    units = _units(docs, id_col, text_col, F.explode_outer)
     floor = conts.agg(
         F.log(
             F.lit(1.0)
-            / (F.count(F.lit(1)).cast("double") + F.lit(1.0))
+            / (F.count("log_pcont").cast("double") + F.lit(1.0))
         ).alias("_floor")
-    )  # 1 row; NB count(conts) = |continuation vocab| ≤ N1+(··)
+    )  # 1 row: |continuation vocab| ≤ N1+(··); counting the (never
+    # NULL) log_pcont keeps the shared conts aggregate's count
     lm2 = bigrams.select("gram", "logp")
     if broadcast_bigrams:
         lm2 = F.broadcast(lm2)
@@ -779,7 +780,8 @@ def kn_quality_score(
         .crossJoin(F.broadcast(floor))
         .select(
             id_col,
-            F.when(F.col("logp").isNotNull(), F.col("logp"))
+            F.when(F.col("token").isNull(), F.lit(None))
+            .when(F.col("logp").isNotNull(), F.col("logp"))
             .when(
                 F.col("gram").isNotNull() & F.col("log_lambda").isNotNull(),
                 F.col("log_lambda")
@@ -789,14 +791,11 @@ def kn_quality_score(
             .alias("_s"),
         )
     )
-    agg = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
+    n = F.count("_s")
+    return scored.groupBy(id_col).agg(
+        F.when(n > 0, n).alias("n_tokens"),
         F.round(F.avg("_s"), 6).alias("logp_per_token"),
-    )
-    agg = agg.withColumn(
-        "ppl", F.round(F.exp(-F.col("logp_per_token")), 3)
-    )
-    return docs.select(id_col).join(agg, id_col, "left")
+    ).withColumn("ppl", F.round(F.exp(-F.col("logp_per_token")), 3))
 
 
 def oracle_kn_score_sql(

@@ -61,9 +61,11 @@ def render_template(
     if not parts:
         return F.lit("")
     # python-str.strip-style trim of ASCII whitespace (F.trim strips
-    # spaces only; the reference's .strip() strips \t\n\r\f\v too)
+    # spaces only; the reference's .strip() strips \t\n\r\f\v too).
+    # \z, not $: Java's $ also matches before a final line terminator
+    # such as \x85, which would strip whitespace in front of it
     return F.regexp_replace(
-        F.concat(*parts), r"^[ \t\n\r\f\x0b]+|[ \t\n\r\f\x0b]+$", ""
+        F.concat(*parts), r"^[ \t\n\r\f\x0b]+|[ \t\n\r\f\x0b]+\z", ""
     )
 
 

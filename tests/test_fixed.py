@@ -82,3 +82,22 @@ def test_rule_is_stated_once():
         if pat.search(line)
     ]
     assert hits == []
+
+
+@pytest.mark.parametrize("v", [float("nan"), float("inf"), float("-inf"), 1e12, -1e12])
+def test_both_engines_raise_outside_envelope(spark, v):
+    """NaN, ±inf and |x|·1e9 ≥ 2^63 fail in Spark as they do in DuckDB
+    (no silent 0 or saturated count); NULL passes through both."""
+    df = spark.createDataFrame([(v,), (None,)], "x double")
+    for build in (fixed, fixed_abs):
+        with pytest.raises(Exception, match="fixed-point overflow"):
+            df.select(build(F.col("x"), 1e9)).collect()
+        got = df.filter(F.col("x").isNull()).select(build(F.col("x"), 1e9)).collect()
+        assert [tuple(r) for r in got] == [(None,)]
+    con = duckdb.connect()
+    for sql in (fixed_sql, fixed_abs_sql):
+        with pytest.raises(duckdb.Error):
+            con.execute(f"SELECT {sql('x', 1e9)} FROM (VALUES (?::DOUBLE)) t(x)", [v]).fetchall()
+        assert con.execute(
+            f"SELECT {sql('x', 1e9)} FROM (VALUES (NULL::DOUBLE)) t(x)"
+        ).fetchall() == [(None,)]
