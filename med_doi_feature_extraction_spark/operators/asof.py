@@ -212,11 +212,6 @@ def _gap_secs(match_col: str) -> Column:
     return _secs(F.col("_ts")) - _secs(F.col(match_col)["__match_ts"])
 
 
-def _staleness_secs() -> Column:
-    """Backward-match staleness (kept for the horizons build)."""
-    return _gap_secs("_r_match")
-
-
 def asof_join_horizons(
     left: DataFrame,
     right: DataFrame,
@@ -244,7 +239,7 @@ def asof_join_horizons(
         left, right, on, left_ts, right_ts, value_cols, right_tiebreak,
         carry_match_ts=True,
     )
-    age = _staleness_secs()
+    age = _gap_secs("_r_match")
     out_cols = {
         f"{c}_{name}": F.when(
             age <= F.lit(float(secs)), F.col("_r_match")[c]
@@ -418,7 +413,7 @@ def feature_matrix(
         if tolerance_sec is not None:
             # two-step cast via TIMESTAMP so TIMESTAMP_NTZ inputs
             # work too (Spark disallows NTZ -> double directly; the
-            # _gap_secs idiom at line ~210)
+            # same idiom as _gap_secs)
             fields.append(
                 F.col(ts_col)
                 .cast("timestamp")

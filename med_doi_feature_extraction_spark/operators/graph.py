@@ -31,11 +31,30 @@ and an oracle engine may disagree below ~1e-12 relative; the contract
 harness canonicalizes floats at 6 decimal places and ranks live in
 [1e-4, 1], leaving ≥6 orders of magnitude of slack — hash-exact in
 practice (same argument as operators/lm.lm_quality_score).
+
+Each graph decision is written once, as a private helper every
+operator calls (with its DuckDB twin, ``*_sql``, next to it where an
+oracle spells it out):
+
+- ``_edge_rule`` (``_edge_rule_sql``): both endpoints cast to BIGINT,
+  NULL endpoints and self-loops dropped — the simple-graph operators
+  and the bow-tie adjacency;
+- ``_undirected`` (``_undirected_sql``): the canonical ``(u < v)``
+  distinct edge set, its degree table and the degree-joined edges;
+- ``_symmetric`` (``_symmetric_sql``): the distinct adjacency holding
+  each undirected edge in both directions;
+- ``_closed_wedges``: the degree-oriented wedge join closed against the
+  edge set (triangle census and local clustering);
+- ``_rank_edges``, ``_rank_inputs`` and ``_power_iteration``: the rank
+  family's edge rule (NULL endpoints dropped, self-loops and parallel
+  edges kept), its node / out-edge tables and the power iteration.
+  Each rank operator passes its own float expressions, so its values
+  stay bit-identical to its closed form.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from med_doi_feature_extraction_spark.kernels.fixed import (
@@ -65,6 +84,95 @@ def graph_nodes(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFra
     )
 
 
+def _rank_edges(
+    edges: DataFrame, src: str, dst: str, *cols: Column
+) -> DataFrame:
+    """The rank family's edge rule: ``(src, dst, *cols)`` without the
+    rows that have a NULL endpoint — such a row links nothing, and kept
+    it would add a NULL node that takes a share of the rank mass. Ids
+    keep their type; self-loops and parallel edges are links and stay."""
+    return edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), *cols
+    ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+
+
+def _rank_inputs(
+    e: DataFrame, out: DataFrame, edge_col: str | Column
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """``(nodes, edges_out, has_out)`` of a rank run over ``e``: the node
+    set, every edge joined ONCE with its source's row of the out table
+    ``out`` (``node`` plus the aggregate ``edge_col`` reads) and kept
+    as ``(src, dst, edge_col)``, and the nodes with an out-edge. Both
+    tables are lazily checkpointed — iterations never recompute them."""
+    nodes = graph_nodes(e).localCheckpoint(eager=False)
+    edges_out = e.join(out, e.src == out.node).select(
+        "src", "dst", edge_col
+    ).localCheckpoint(eager=False)
+    return nodes, edges_out, out.select("node")
+
+
+def _power_iteration(
+    *,
+    edges_out: DataFrame,
+    has_out: DataFrame,
+    base: DataFrame,
+    consts: tuple[DataFrame, ...],
+    init: Column,
+    contrib: Column,
+    teleport: Column,
+    dangle: Column,
+    damping: float,
+    n_iter: int,
+) -> DataFrame:
+    """The rank family's power iteration → ``(node, rank)``::
+
+        rank'(v) = teleport(v) + d·(Σ_{u→v} contrib(u→v) + dangle(v))
+
+    ``base`` holds one row per node; the 1-row ``consts`` are
+    broadcast onto it, and ``init`` (the starting rank), ``teleport``
+    and ``dangle`` read the columns of both. ``dangle`` also reads the
+    1-row dangling mass ``_dm`` (Σ rank over the nodes outside
+    ``has_out``); ``contrib`` reads ``rank`` and the ``edges_out``
+    columns. Each caller passes its own float expressions: the same
+    rank reached by a different expression tree differs in the last
+    bit. One shuffle join + one dst hash-agg per round, lineage
+    truncated every round."""
+
+    def _with_consts(df: DataFrame, *rows: DataFrame) -> DataFrame:
+        for c in rows:
+            df = df.crossJoin(F.broadcast(c))
+        return df
+
+    ranks = _with_consts(base, *consts).select("node", init.alias("rank"))
+    for _ in range(n_iter):
+        contribs = (
+            edges_out.join(ranks, edges_out.src == ranks.node)
+            .groupBy("dst")
+            .agg(F.sum(contrib).alias("contrib"))
+        )
+        dangling = (
+            ranks.join(has_out, "node", "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
+        )  # 1 row
+        ranks = (
+            _with_consts(
+                base.join(contribs, base.node == contribs.dst, "left"),
+                *consts,
+                dangling,
+            )
+            .select(
+                "node",
+                (
+                    teleport
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dangle)
+                ).alias("rank"),
+            )
+            .localCheckpoint(eager=False)  # truncate per-iteration lineage
+        )
+    return ranks
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -83,9 +191,12 @@ def pagerank(
     where ``dangling = Σ rank(u) over nodes with outdeg 0``. Every
     quantity is a DataFrame: N and the dangling mass are 1-row
     aggregates broadcast back onto the node table — the driver never
-    sees a row. Self-loops and parallel edges are taken as given
-    (parallel edges weight the contribution, like a link repeated on
-    a page); callers wanting simple-graph semantics distinct() first.
+    sees a row. Rows with a NULL endpoint are dropped before the
+    out-degrees are counted (they link nothing), as in
+    :func:`pagerank_weighted`. Self-loops and parallel edges are taken
+    as given (parallel edges weight the contribution, like a link
+    repeated on a page); callers wanting simple-graph semantics
+    distinct() first.
 
     n_iter is fixed rather than convergence-tested so the job graph
     is static and the result engine-portable (an oracle can unroll the
@@ -94,47 +205,21 @@ def pagerank(
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = graph_nodes(e).localCheckpoint(eager=False)
-    deg = out_degrees(e)
-    # one up-front join: every edge carries its source's out-degree
-    edges_deg = e.join(deg, e.src == deg.node).select(
-        "src", "dst", "out_deg"
-    ).localCheckpoint(eager=False)
+    e = _rank_edges(edges, src, dst)
+    nodes, edges_deg, has_out = _rank_inputs(e, out_degrees(e), "out_deg")
     n_total = nodes.agg(F.count(F.lit(1)).alias("_n"))  # 1 row
-
-    ranks = nodes.crossJoin(F.broadcast(n_total)).select(
-        "node", (F.lit(1.0) / F.col("_n")).alias("rank")
+    return _power_iteration(
+        edges_out=edges_deg,
+        has_out=has_out,
+        base=nodes,
+        consts=(n_total,),
+        init=F.lit(1.0) / F.col("_n"),
+        contrib=F.col("rank") / F.col("out_deg"),
+        teleport=F.lit(1.0 - damping) / F.col("_n"),
+        dangle=F.col("_dm") / F.col("_n"),
+        damping=damping,
+        n_iter=n_iter,
     )
-    has_out = deg.select("node")
-    for _ in range(n_iter):
-        contribs = (
-            edges_deg.join(ranks, edges_deg.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("contrib"))
-        )
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-        )  # 1 row
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(n_total))
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) / F.col("_n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("_dm") / F.col("_n")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)  # truncate per-iteration lineage
-        )
-    return ranks
 
 
 def trustrank(
@@ -154,20 +239,17 @@ def trustrank(
 
     ``rank'(v) = (1-d)·tv(v) + d·(Σ_{u→v} rank(u)/outdeg(u)
                  + dangling·tv(v))`` with ``tv`` = 1/|S| on seeds, 0
-    elsewhere; ranks start AT ``tv``. Same distributed shape as
-    :func:`pagerank` — slim node/edge tables, 1-row aggregates
-    broadcast, per-iteration lineage truncation; the seed table is
-    assumed ⊆ the graph's nodes (a seed outside the graph would leak
-    its teleport share).
+    elsewhere; ranks start AT ``tv``. Same distributed shape and edge
+    rule as :func:`pagerank` (rows with a NULL endpoint are dropped
+    before the out-degrees are counted) — slim node/edge tables, 1-row
+    aggregates broadcast, per-iteration lineage truncation; the seed
+    table is assumed ⊆ the graph's nodes (a seed outside the graph
+    would leak its teleport share).
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = graph_nodes(e).localCheckpoint(eager=False)
-    deg = out_degrees(e)
-    edges_deg = e.join(deg, e.src == deg.node).select(
-        "src", "dst", "out_deg"
-    ).localCheckpoint(eager=False)
+    e = _rank_edges(edges, src, dst)
+    nodes, edges_deg, has_out = _rank_inputs(e, out_degrees(e), "out_deg")
     s = seeds.select("node").distinct()
     ns = s.agg(F.count(F.lit(1)).cast("double").alias("_ns"))  # 1 row
     tv = (
@@ -179,35 +261,18 @@ def trustrank(
         )
         .localCheckpoint(eager=False)
     )
-    ranks = tv.select("node", F.col("tv").alias("rank"))
-    has_out = deg.select("node")
-    for _ in range(n_iter):
-        contribs = (
-            edges_deg.join(ranks, edges_deg.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("contrib"))
-        )
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-        )  # 1 row
-        ranks = (
-            tv.join(contribs, tv.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) * F.col("tv")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("_dm") * F.col("tv")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    return _power_iteration(
+        edges_out=edges_deg,
+        has_out=has_out,
+        base=tv,
+        consts=(),
+        init=F.col("tv"),
+        contrib=F.col("rank") / F.col("out_deg"),
+        teleport=F.lit(1.0 - damping) * F.col("tv"),
+        dangle=F.col("_dm") * F.col("tv"),
+        damping=damping,
+        n_iter=n_iter,
+    )
 
 
 def degree_join(
@@ -251,7 +316,7 @@ def score_propagation(
     per-page quality with host/link structure, built from the same
     join shape as :func:`pagerank` (one edges⋈scores shuffle join +
     one dst-keyed hash-agg per iteration, lineage truncated per
-    round). Fixed ``n_iter`` and ra single final round-6 keep it
+    round). Fixed ``n_iter`` and a single final round-6 keep it
     CTE-unrollable by an oracle. (Intermediate values are NOT rounded:
     rounding each iteration parks half the degree-2 nodes exactly on
     the 5e-7 rounding grid — the mean of two 6-dp values — where
@@ -359,6 +424,127 @@ def hits(
     )
 
 
+def _edge_rule(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The simple-graph edge rule: ``(_f, _t)`` with both endpoints
+    cast to BIGINT, rows with a NULL endpoint and self-loops dropped.
+    Edge direction is kept; callers canonicalize, symmetrize or dedup."""
+    return edges.select(
+        F.col(src).cast("long").alias("_f"),
+        F.col(dst).cast("long").alias("_t"),
+    ).filter(
+        F.col("_f").isNotNull()
+        & F.col("_t").isNotNull()
+        & (F.col("_f") != F.col("_t"))
+    )
+
+
+def _edge_rule_sql(src: str, dst: str) -> str:
+    """DuckDB twin of :func:`_edge_rule`: the WHERE clause over the raw
+    edge rows."""
+    return f"""  WHERE "{src}" IS NOT NULL AND "{dst}" IS NOT NULL
+    AND CAST("{src}" AS BIGINT) != CAST("{dst}" AS BIGINT)"""
+
+
+def _undirected(
+    edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The undirected simple graph on :func:`_edge_rule` →
+    ``(e, deg, ed)``: the canonical distinct edge set ``e`` = ``(_u,
+    _v)`` with ``_u < _v``, its degree table ``deg`` = ``(_n, _d)``
+    (BIGINT) and ``ed`` = ``e`` joined with both end degrees ``(_du,
+    _dv)``."""
+    e = (
+        _edge_rule(edges, src, dst)
+        .select(
+            F.least("_f", "_t").alias("_u"),
+            F.greatest("_f", "_t").alias("_v"),
+        )
+        .distinct()
+    )
+    deg = (
+        e.select(F.col("_u").alias("_n"))
+        .unionAll(e.select(F.col("_v").alias("_n")))
+        .groupBy("_n")
+        .agg(F.count(F.lit(1)).cast("long").alias("_d"))
+    )
+    ed = e.join(
+        deg.select(F.col("_n").alias("_u"), F.col("_d").alias("_du")),
+        "_u",
+    ).join(
+        deg.select(F.col("_n").alias("_v"), F.col("_d").alias("_dv")),
+        "_v",
+    )
+    return e, deg, ed
+
+
+def _undirected_sql(edges_sql: str, src: str, dst: str) -> str:
+    """DuckDB twin of :func:`_undirected`: the ``e`` (u, v) and ``deg``
+    (n, d) CTEs."""
+    return f"""e AS (
+  SELECT DISTINCT least(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS u,
+         greatest(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS v
+  FROM {edges_sql}
+{_edge_rule_sql(src, dst)}
+),
+deg AS (
+  SELECT n, CAST(count(*) AS BIGINT) AS d
+  FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY n
+)"""
+
+
+def _closed_wedges(e: DataFrame, ed: DataFrame, how: str) -> DataFrame:
+    """The degree-oriented wedge join over :func:`_undirected`'s ``e``
+    and ``ed``: orient every edge from its lower-(degree, id) endpoint
+    to the higher, self-join the oriented edges on the apex into wedges
+    ``(_apex, _x, _y)`` with ``_x < _y``, and join each wedge against
+    the closing edge in ``e`` with ``how`` (``left_semi`` keeps one row
+    per triangle, ``inner`` the same rows for callers that read the
+    corners)."""
+    u_first = (F.col("_du") < F.col("_dv")) | (
+        (F.col("_du") == F.col("_dv")) & (F.col("_u") < F.col("_v"))
+    )
+    oriented = ed.select(
+        F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
+        F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
+    )
+    w1 = oriented.select(
+        F.col("_s").alias("_apex"), F.col("_t").alias("_x")
+    )
+    w2 = oriented.select(
+        F.col("_s").alias("_apex"), F.col("_t").alias("_y")
+    )
+    wedges = w1.join(w2, "_apex").filter(F.col("_x") < F.col("_y"))
+    # wedge legs carry x < y, and the undirected edge set e is
+    # already canonical (u < v), so closure is ONE equi-join
+    closure = e.select(
+        F.col("_u").alias("_x"), F.col("_v").alias("_y")
+    )
+    return wedges.join(closure, ["_x", "_y"], how)
+
+
+def _symmetric(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct symmetric adjacency ``(_f, _t)`` on
+    :func:`_edge_rule`: every undirected edge once in each direction."""
+    adj = _edge_rule(edges, src, dst)
+    return adj.unionAll(
+        adj.select(F.col("_t").alias("_f"), F.col("_f").alias("_t"))
+    ).distinct()
+
+
+def _symmetric_sql(name: str, edges_sql: str, src: str, dst: str) -> str:
+    """DuckDB twin of :func:`_symmetric`: the CTE ``name`` (f, t)."""
+    return f"""{name} AS (
+  SELECT f, t FROM (
+    SELECT CAST("{src}" AS BIGINT) AS f, CAST("{dst}" AS BIGINT) AS t
+    FROM {edges_sql}
+    UNION
+    SELECT CAST("{dst}" AS BIGINT), CAST("{src}" AS BIGINT)
+    FROM {edges_sql}
+  )
+  WHERE f IS NOT NULL AND t IS NOT NULL AND f != t
+)"""
+
+
 def triangle_count(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
@@ -386,56 +572,8 @@ def triangle_count(
     edge set. Three hash-aggs + two equi-joins total; no windows,
     no iteration.
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("_a"),
-            F.col(dst).cast("long").alias("_b"),
-        )
-        .filter(
-            F.col("_a").isNotNull()
-            & F.col("_b").isNotNull()
-            & (F.col("_a") != F.col("_b"))
-        )
-        .select(
-            F.least("_a", "_b").alias("_u"),
-            F.greatest("_a", "_b").alias("_v"),
-        )
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("_u").alias("_n"))
-        .unionAll(e.select(F.col("_v").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).cast("long").alias("_d"))
-    )
-    du = deg.select(
-        F.col("_n").alias("_u"), F.col("_d").alias("_du")
-    )
-    dv = deg.select(
-        F.col("_n").alias("_v"), F.col("_d").alias("_dv")
-    )
-    ed = e.join(du, "_u").join(dv, "_v")
-    # orient from lower (degree, id) to higher
-    u_first = (F.col("_du") < F.col("_dv")) | (
-        (F.col("_du") == F.col("_dv")) & (F.col("_u") < F.col("_v"))
-    )
-    oriented = ed.select(
-        F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
-        F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
-    )
-    w1 = oriented.select(
-        F.col("_s").alias("_apex"), F.col("_t").alias("_x")
-    )
-    w2 = oriented.select(
-        F.col("_s").alias("_apex"), F.col("_t").alias("_y")
-    )
-    wedges = w1.join(w2, "_apex").filter(F.col("_x") < F.col("_y"))
-    # wedge legs carry x < y, and the undirected edge set e is
-    # already canonical (u < v), so closure is ONE equi semi-join
-    closure = e.select(
-        F.col("_u").alias("_x"), F.col("_v").alias("_y")
-    )
-    tri_ab = wedges.join(closure, ["_x", "_y"], "left_semi")
+    e, deg, ed = _undirected(edges, src, dst)
+    tri_ab = _closed_wedges(e, ed, "left_semi")
     tri_row = tri_ab.agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
     )
@@ -476,18 +614,7 @@ def oracle_triangle_sql(
     to the degree-oriented plan; orientation is a physical-plan
     optimization, not a semantic one)."""
     return f"""
-WITH e AS (
-  SELECT DISTINCT least(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS u,
-         greatest(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS v
-  FROM {edges_sql}
-  WHERE "{src}" IS NOT NULL AND "{dst}" IS NOT NULL
-    AND CAST("{src}" AS BIGINT) != CAST("{dst}" AS BIGINT)
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d
-  FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e)
-  GROUP BY n
-),
+WITH {_undirected_sql(edges_sql, src, dst)},
 tri AS (
   SELECT CAST(count(*) AS BIGINT) AS n_triangles
   FROM e e1
@@ -529,35 +656,7 @@ def degree_assortativity(
     ONE 1-row BIGINT-moment aggregate. Envelope: Σd² over edges
     < 2⁶³ (``2m·d_max² < 2⁶³``).
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("_a"),
-            F.col(dst).cast("long").alias("_b"),
-        )
-        .filter(
-            F.col("_a").isNotNull()
-            & F.col("_b").isNotNull()
-            & (F.col("_a") != F.col("_b"))
-        )
-        .select(
-            F.least("_a", "_b").alias("_u"),
-            F.greatest("_a", "_b").alias("_v"),
-        )
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("_u").alias("_n"))
-        .unionAll(e.select(F.col("_v").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).cast("long").alias("_d"))
-    )
-    ed = e.join(
-        deg.select(F.col("_n").alias("_u"), F.col("_d").alias("_du")),
-        "_u",
-    ).join(
-        deg.select(F.col("_n").alias("_v"), F.col("_d").alias("_dv")),
-        "_v",
-    )
+    _, _, ed = _undirected(edges, src, dst)
     # double cover: (du, dv) and (dv, du)
     pairs = ed.select(
         F.col("_du").alias("_x"), F.col("_dv").alias("_y")
@@ -597,17 +696,7 @@ def oracle_assortativity_sql(
     """DuckDB twin of :func:`degree_assortativity`."""
     rr = "(cov)::DOUBLE / (sqrt((vx)::DOUBLE) * sqrt((vy)::DOUBLE))"
     return f"""
-WITH e AS (
-  SELECT DISTINCT least(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS u,
-         greatest(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS v
-  FROM {edges_sql}
-  WHERE "{src}" IS NOT NULL AND "{dst}" IS NOT NULL
-    AND CAST("{src}" AS BIGINT) != CAST("{dst}" AS BIGINT)
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d
-  FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY n
-),
+WITH {_undirected_sql(edges_sql, src, dst)},
 ed AS (
   SELECT du.d AS du, dv.d AS dv
   FROM e JOIN deg du ON du.n = e.u JOIN deg dv ON dv.n = e.v
@@ -657,53 +746,8 @@ def local_clustering(
     triangle — bounded by 3T, not by degree²), then ONE hash-agg per
     node and a left join back onto the degree table.
     """
-    e = (
-        edges.select(
-            F.col(src).cast("long").alias("_a"),
-            F.col(dst).cast("long").alias("_b"),
-        )
-        .filter(
-            F.col("_a").isNotNull()
-            & F.col("_b").isNotNull()
-            & (F.col("_a") != F.col("_b"))
-        )
-        .select(
-            F.least("_a", "_b").alias("_u"),
-            F.greatest("_a", "_b").alias("_v"),
-        )
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("_u").alias("_n"))
-        .unionAll(e.select(F.col("_v").alias("_n")))
-        .groupBy("_n")
-        .agg(F.count(F.lit(1)).cast("long").alias("_d"))
-    )
-    ed = e.join(
-        deg.select(F.col("_n").alias("_u"), F.col("_d").alias("_du")),
-        "_u",
-    ).join(
-        deg.select(F.col("_n").alias("_v"), F.col("_d").alias("_dv")),
-        "_v",
-    )
-    u_first = (F.col("_du") < F.col("_dv")) | (
-        (F.col("_du") == F.col("_dv")) & (F.col("_u") < F.col("_v"))
-    )
-    oriented = ed.select(
-        F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
-        F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
-    )
-    w1 = oriented.select(
-        F.col("_s").alias("_apex"), F.col("_t").alias("_x")
-    )
-    w2 = oriented.select(
-        F.col("_s").alias("_apex"), F.col("_t").alias("_y")
-    )
-    wedges = w1.join(w2, "_apex").filter(F.col("_x") < F.col("_y"))
-    closure = e.select(
-        F.col("_u").alias("_x"), F.col("_v").alias("_y")
-    )
-    triples = wedges.join(closure, ["_x", "_y"], "inner")
+    e, deg, ed = _undirected(edges, src, dst)
+    triples = _closed_wedges(e, ed, "inner")
     corners = (
         triples.select(F.col("_apex").alias("_n"))
         .unionAll(triples.select(F.col("_x").alias("_n")))
@@ -740,17 +784,7 @@ def oracle_local_clustering_sql(
     """DuckDB twin of :func:`local_clustering` — the closed-form
     u<v<w triple join exploded to corners."""
     return f"""
-WITH e AS (
-  SELECT DISTINCT least(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS u,
-         greatest(CAST("{src}" AS BIGINT), CAST("{dst}" AS BIGINT)) AS v
-  FROM {edges_sql}
-  WHERE "{src}" IS NOT NULL AND "{dst}" IS NOT NULL
-    AND CAST("{src}" AS BIGINT) != CAST("{dst}" AS BIGINT)
-),
-deg AS (
-  SELECT n, CAST(count(*) AS BIGINT) AS d
-  FROM (SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY n
-),
+WITH {_undirected_sql(edges_sql, src, dst)},
 triples AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM e e1
@@ -802,20 +836,7 @@ def k_hop_reach(
     """
     if k < 0:
         raise ValueError("k must be >= 0")
-    adj = (
-        edges.select(
-            F.col(src).cast("long").alias("_f"),
-            F.col(dst).cast("long").alias("_t"),
-        )
-        .filter(
-            F.col("_f").isNotNull()
-            & F.col("_t").isNotNull()
-            & (F.col("_f") != F.col("_t"))
-        )
-    )
-    adj = adj.unionAll(
-        adj.select(F.col("_t").alias("_f"), F.col("_f").alias("_t"))
-    ).distinct()
+    adj = _symmetric(edges, src, dst)
     visited = seeds.select(
         F.col(node).cast("long").alias("node")
     ).distinct().withColumn("min_hops", F.lit(0).cast("long"))
@@ -845,16 +866,7 @@ def oracle_k_hop_sql(
     nested CTEs (v_i = visited after round i, f_i = round-i
     frontier)."""
     parts = [f"""
-adj AS (
-  SELECT f, t FROM (
-    SELECT CAST("{src}" AS BIGINT) AS f, CAST("{dst}" AS BIGINT) AS t
-    FROM {edges_sql}
-    UNION
-    SELECT CAST("{dst}" AS BIGINT), CAST("{src}" AS BIGINT)
-    FROM {edges_sql}
-  )
-  WHERE f IS NOT NULL AND t IS NOT NULL AND f != t
-),
+{_symmetric_sql("adj", edges_sql, src, dst)},
 v0 AS (
   SELECT DISTINCT CAST("{node}" AS BIGINT) AS node,
          CAST(0 AS BIGINT) AS min_hops
@@ -912,24 +924,7 @@ def k_core(
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    live = (
-        edges.select(
-            F.col(src).cast("long").alias("_f"),
-            F.col(dst).cast("long").alias("_t"),
-        )
-        .filter(
-            F.col("_f").isNotNull()
-            & F.col("_t").isNotNull()
-            & (F.col("_f") != F.col("_t"))
-        )
-    )
-    live = (
-        live.unionAll(
-            live.select(F.col("_t").alias("_f"), F.col("_f").alias("_t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    live = _symmetric(edges, src, dst).localCheckpoint(eager=False)
     for _ in range(rounds):
         keep = (
             live.groupBy("_f")
@@ -958,17 +953,7 @@ def oracle_k_core_sql(
 ) -> str:
     """DuckDB twin of :func:`k_core` — the same peel unrolled as
     nested CTEs (e_i = live edges after round i)."""
-    parts = [f"""
-e0 AS (
-  SELECT f, t FROM (
-    SELECT CAST("{src}" AS BIGINT) AS f, CAST("{dst}" AS BIGINT) AS t
-    FROM {edges_sql}
-    UNION
-    SELECT CAST("{dst}" AS BIGINT), CAST("{src}" AS BIGINT)
-    FROM {edges_sql}
-  )
-  WHERE f IS NOT NULL AND t IS NOT NULL AND f != t
-)"""]
+    parts = ["\n" + _symmetric_sql("e0", edges_sql, src, dst)]
     for i in range(1, rounds + 1):
         parts.append(f"""
 k{i} AS (
@@ -1017,19 +1002,7 @@ def label_communities(
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = edges.select(
-        F.col(src).cast("long").alias("_f"),
-        F.col(dst).cast("long").alias("_t"),
-    ).filter(
-        F.col("_f").isNotNull()
-        & F.col("_t").isNotNull()
-        & (F.col("_f") != F.col("_t"))
-    )
-    sym = (
-        e.unionAll(e.select(F.col("_t").alias("_f"), F.col("_f").alias("_t")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=False)
     nodes = sym.select(F.col("_f").alias("node")).distinct()
     voters = sym.unionAll(
         nodes.select(F.col("node").alias("_f"), F.col("node").alias("_t"))
@@ -1070,16 +1043,7 @@ def oracle_label_communities_sql(
     max-count filter + ``min(label)`` (mathematically identical to
     the Spark side's ``min(struct(-cnt, label))``)."""
     parts = [f"""
-e0 AS (
-  SELECT f, t FROM (
-    SELECT CAST("{src}" AS BIGINT) AS f, CAST("{dst}" AS BIGINT) AS t
-    FROM {edges_sql}
-    UNION
-    SELECT CAST("{dst}" AS BIGINT), CAST("{src}" AS BIGINT)
-    FROM {edges_sql}
-  )
-  WHERE f IS NOT NULL AND t IS NOT NULL AND f != t
-),
+{_symmetric_sql("e0", edges_sql, src, dst)},
 nodes AS (SELECT DISTINCT f AS node FROM e0),
 v AS (
   SELECT f, t FROM e0
@@ -1162,20 +1126,7 @@ def link_prediction(
         raise ValueError("hub_cap must be >= 2")
     if min_common < 1:
         raise ValueError("min_common must be >= 1")
-    adj = (
-        edges.select(
-            F.col(src).cast("long").alias("_f"),
-            F.col(dst).cast("long").alias("_t"),
-        )
-        .filter(
-            F.col("_f").isNotNull()
-            & F.col("_t").isNotNull()
-            & (F.col("_f") != F.col("_t"))
-        )
-    )
-    adj = adj.unionAll(
-        adj.select(F.col("_t").alias("_f"), F.col("_f").alias("_t"))
-    ).distinct()
+    adj = _symmetric(edges, src, dst)
     deg = adj.groupBy(F.col("_f").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -1255,16 +1206,7 @@ def oracle_link_prediction_sql(
         for d, w in sorted(wmap.items())
     ) + " END"
     return f"""
-WITH adj AS (
-  SELECT f, t FROM (
-    SELECT CAST("{src}" AS BIGINT) AS f, CAST("{dst}" AS BIGINT) AS t
-    FROM {edges_sql}
-    UNION
-    SELECT CAST("{dst}" AS BIGINT), CAST("{src}" AS BIGINT)
-    FROM {edges_sql}
-  )
-  WHERE f IS NOT NULL AND t IS NOT NULL AND f != t
-),
+WITH {_symmetric_sql("adj", edges_sql, src, dst)},
 deg AS (SELECT f AS node, count(*) AS deg FROM adj GROUP BY f),
 wedge AS (
   SELECT a.f AS z, a.t AS nbr, {case} AS w_nano
@@ -1366,16 +1308,7 @@ def bowtie_census(
     # and must be labeled 'other'); null ids cannot be graph nodes
     nodes = graph_nodes(e).filter(F.col("node").isNotNull())
     # adjacency built ONCE, shared by both BFS directions
-    adj = (
-        e.select(F.col("src").alias("_f"), F.col("dst").alias("_t"))
-        .filter(
-            F.col("_f").isNotNull()
-            & F.col("_t").isNotNull()
-            & (F.col("_f") != F.col("_t"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    adj = _edge_rule(edges, src, dst).distinct().localCheckpoint(eager=False)
     fwd = _directed_reach(adj, seeds, k).withColumn("_fw", F.lit(1))
     bwd = _directed_reach(adj, seeds, k, reverse=True).withColumn(
         "_bw", F.lit(1)
@@ -1407,8 +1340,7 @@ adj AS (
   SELECT DISTINCT CAST("{src}" AS BIGINT) AS f,
          CAST("{dst}" AS BIGINT) AS t
   FROM {edges_sql}
-  WHERE "{src}" IS NOT NULL AND "{dst}" IS NOT NULL
-    AND CAST("{src}" AS BIGINT) != CAST("{dst}" AS BIGINT)
+{_edge_rule_sql(src, dst)}
 ),
 nodes AS (
   -- node universe from the RAW edges (Spark parity: a
@@ -1472,55 +1404,28 @@ def pagerank_weighted(
     """
     if n_iter < 1:
         raise ValueError("n_iter must be >= 1")
-    e = edges.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("double").alias("w"),
-    ).filter(
-        F.col("src").isNotNull()
-        & F.col("dst").isNotNull()
-        & (F.col("w") > 0)
-    )
-    nodes = graph_nodes(e).localCheckpoint(eager=False)
+    e = _rank_edges(
+        edges, src, dst, F.col(weight).cast("double").alias("w")
+    ).filter(F.col("w") > 0)
     wout = e.groupBy(F.col("src").alias("node")).agg(
         F.sum("w").alias("w_out")
     )
-    edges_w = e.join(wout, e.src == wout.node).select(
-        "src", "dst", (F.col("w") / F.col("w_out")).alias("share")
-    ).localCheckpoint(eager=False)
-    n_total = nodes.agg(F.count(F.lit(1)).alias("_n"))  # 1 row
-    ranks = nodes.crossJoin(F.broadcast(n_total)).select(
-        "node", (F.lit(1.0) / F.col("_n")).alias("rank")
+    nodes, edges_w, has_out = _rank_inputs(
+        e, wout, (F.col("w") / F.col("w_out")).alias("share")
     )
-    has_out = wout.select("node")
-    for _ in range(n_iter):
-        contribs = (
-            edges_w.join(ranks, edges_w.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("share")).alias("contrib"))
-        )
-        dangling = (
-            ranks.join(has_out, "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm"))
-        )  # 1 row
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .crossJoin(F.broadcast(n_total))
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit(1.0 - damping) / F.col("_n")
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("contrib"), F.lit(0.0))
-                        + F.col("_dm") / F.col("_n")
-                    )
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    return ranks
+    n_total = nodes.agg(F.count(F.lit(1)).alias("_n"))  # 1 row
+    return _power_iteration(
+        edges_out=edges_w,
+        has_out=has_out,
+        base=nodes,
+        consts=(n_total,),
+        init=F.lit(1.0) / F.col("_n"),
+        contrib=F.col("rank") * F.col("share"),
+        teleport=F.lit(1.0 - damping) / F.col("_n"),
+        dangle=F.col("_dm") / F.col("_n"),
+        damping=damping,
+        n_iter=n_iter,
+    )
 
 
 def oracle_pagerank_weighted_sql(

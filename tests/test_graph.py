@@ -84,6 +84,26 @@ def test_pagerank_rejects_zero_iterations(spark, edges_df):
         pagerank(edges_df, n_iter=0)
 
 
+def test_rank_family_drops_null_endpoints(spark, edges_df):
+    from med_doi_feature_extraction_spark.operators.graph import trustrank
+
+    nulls = spark.createDataFrame(
+        EDGES + [(1, None), (None, 2)], "src long, dst long"
+    )
+    got = {r["node"]: r["rank"] for r in pagerank(nulls, n_iter=3).collect()}
+    want = {
+        r["node"]: r["rank"] for r in pagerank(edges_df, n_iter=3).collect()
+    }
+    assert set(got) == set(want)
+    for k in want:
+        assert got[k] == pytest.approx(want[k], abs=1e-12)
+    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+    seeds = spark.createDataFrame([(1,)], "node long")
+    trust = trustrank(nulls, seeds, n_iter=3).collect()
+    assert None not in {r["node"] for r in trust}
+    assert sum(r["rank"] for r in trust) == pytest.approx(1.0, abs=1e-9)
+
+
 class TestScorePropagation:
     def test_hand_computed_two_rounds(self, spark):
         from med_doi_feature_extraction_spark.operators.graph import (
@@ -195,12 +215,6 @@ class TestTriangleCount:
         assert r["n_triangles"] == 0
         assert r["n_wedges"] == 10
         assert r["global_clustering"] == 0.0
-
-    def test_dedup_selfloop_direction_invariance(self, spark):
-        # duplicates, reversed copies and self-loops must not count
-        edges = [(1, 2), (2, 1), (1, 2), (2, 3), (3, 1), (2, 2)]
-        r = self._count(spark, edges)
-        assert r["n_edges"] == 3 and r["n_triangles"] == 1
 
     def test_matches_brute_force_random(self, spark):
         import itertools
@@ -767,3 +781,38 @@ class TestPagerankWeighted:
         # not part of the graph at all (documented contract)
         assert set(got) == {0, 1}
         assert got[1] > 0
+
+
+# One edge rule for every undirected operator: NULL endpoints,
+# self-loops, duplicates and reversed copies never change the result.
+SIMPLE_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (6, 4), (2, 5)]
+EDGE_NOISE = [(None, 1), (4, None), (None, None), (2, 2), (1, 2), (2, 1)]
+
+
+def _undirected_cases():
+    from med_doi_feature_extraction_spark.operators import graph as g
+
+    def k_hop(df):
+        seeds = df.sparkSession.createDataFrame([(1,)], "node long")
+        return g.k_hop_reach(df, seeds, k=2)
+
+    return {
+        "triangle_count": g.triangle_count,
+        "degree_assortativity": g.degree_assortativity,
+        "local_clustering": g.local_clustering,
+        "k_hop_reach": k_hop,
+        "k_core": lambda df: g.k_core(df, k=2),
+        "label_communities": lambda df: g.label_communities(df, n_iter=3),
+        "link_prediction": lambda df: g.link_prediction(df, min_common=1),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_undirected_cases()))
+def test_dedup_selfloop_direction_invariance(spark, op):
+    run = _undirected_cases()[op]
+    schema = "src long, dst long"
+    clean = run(spark.createDataFrame(SIMPLE_EDGES, schema)).collect()
+    noisy = run(
+        spark.createDataFrame(SIMPLE_EDGES + EDGE_NOISE, schema)
+    ).collect()
+    assert clean and sorted(noisy) == sorted(clean)
