@@ -67,51 +67,10 @@ def _segs(u: F.Column) -> F.Column:
     return F.filter(F.split(path, "/"), lambda s: F.length(s) > 0)
 
 
-def trap_score_col(url: F.Column) -> F.Column:
-    """The :func:`trap_features` score as a single reusable Column —
-    the admission pipeline's gate input (same formula, one codegen
-    expression)."""
+def _trap_battery(url: F.Column) -> dict[str, F.Column]:
+    """Every :func:`trap_features` column but ``url``, in output order,
+    built once so the score and its parts cannot drift apart."""
     u = _norm(url)
-    seg = _segs(u)
-    n = F.size(seg)
-    repeat_seg = F.when(
-        n >= 2,
-        F.exists(
-            F.sequence(F.lit(2), n),
-            lambda i: F.element_at(seg, i) == F.element_at(seg, i - 1),
-        ),
-    ).otherwise(F.lit(False))
-    q = F.regexp_extract(u, _QUERY_RE, 1)
-    n_params = F.when(F.length(q) == 0, F.lit(0)).otherwise(
-        F.size(F.split(q, "&"))
-    )
-    pct = F.regexp_count(u, F.lit("%[0-9a-f]{2}"))
-    return (
-        repeat_seg.cast("int")
-        + u.rlike(_CAL_RE).cast("int")
-        + u.rlike(_NUM_RE).cast("int")
-        + u.rlike(rf"[?&](?:{_SESS_ALT})=[a-z0-9]{{8,}}").cast("int")
-        + (n > 8).cast("int")
-        + (n_params > 6).cast("int")
-        + (pct >= 5).cast("int")
-    ).cast("int")
-
-
-def trap_features(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Per-URL crawler-trap battery:
-
-    ``depth`` (path segments), ``n_params``, ``repeat_seg`` (adjacent
-    identical path segments — ``/cat/cat/``), ``calendar_path``
-    (``/2023/07[/15]/`` archive shapes), ``long_numeric`` (8+ digit
-    segment), ``session_param`` (session-id query key with a long
-    value), ``pct_encoded`` (count of %-escapes), and
-    ``trap_score`` = flags + deep-path + param-spray penalties.
-
-    The adjacent-repeat probe is array-lambda algebra (``exists`` over
-    positions 2..n), NOT a regex backreference — RE2 (the oracle
-    engine) has none, and at 10^12 rows the array form is codegen'd.
-    """
-    u = _norm(F.col(url_col))
     seg = _segs(u)
     n = F.size(seg)
     repeat_seg = F.when(
@@ -138,16 +97,45 @@ def trap_features(df: DataFrame, url_col: str = "url") -> DataFrame:
         + (n_params > 6).cast("int")
         + (pct >= 5).cast("int")
     )
+    return {
+        "depth": n.cast("int"),
+        "n_params": n_params.cast("int"),
+        "repeat_seg": repeat_seg,
+        "calendar_path": calendar,
+        "long_numeric": numeric,
+        "session_param": sess,
+        "pct_encoded": pct.cast("int"),
+        "trap_score": score.cast("int"),
+    }
+
+
+def trap_score_col(url: F.Column) -> F.Column:
+    """The :func:`trap_features` score as a single reusable Column —
+    the admission pipeline's gate input (same formula, one codegen
+    expression)."""
+    return _trap_battery(url)["trap_score"]
+
+
+def trap_features(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Per-URL crawler-trap battery:
+
+    ``depth`` (path segments), ``n_params``, ``repeat_seg`` (adjacent
+    identical path segments — ``/cat/cat/``), ``calendar_path``
+    (``/2023/07[/15]/`` archive shapes), ``long_numeric`` (8+ digit
+    segment), ``session_param`` (session-id query key with a long
+    value), ``pct_encoded`` (count of %-escapes), and
+    ``trap_score`` = flags + deep-path + param-spray penalties.
+
+    The adjacent-repeat probe is array-lambda algebra (``exists`` over
+    positions 2..n), NOT a regex backreference — RE2 (the oracle
+    engine) has none, and at 10^12 rows the array form is codegen'd.
+    """
     return df.select(
         F.col(url_col).alias("url"),
-        n.cast("int").alias("depth"),
-        n_params.cast("int").alias("n_params"),
-        repeat_seg.alias("repeat_seg"),
-        calendar.alias("calendar_path"),
-        numeric.alias("long_numeric"),
-        sess.alias("session_param"),
-        pct.cast("int").alias("pct_encoded"),
-        score.cast("int").alias("trap_score"),
+        *(
+            c.alias(name)
+            for name, c in _trap_battery(F.col(url_col)).items()
+        ),
     )
 
 

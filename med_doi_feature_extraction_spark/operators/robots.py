@@ -113,6 +113,8 @@ def oracle_robots_sql(
     a window."""
     ids = ", ".join(f'"{c}"' for c in id_cols)
     ids_u = ", ".join(f'u."{c}"' for c in id_cols)
+    # the url column may itself be the id — emit once (Spark parity)
+    url_out = "" if "url" in id_cols else ", u.url"
     return f"""
 WITH u AS (
   SELECT {ids}, "{url_col}" AS url,
@@ -136,7 +138,7 @@ m AS (
   WHERE starts_with(u.path, r.path_prefix)
 ),
 best AS (SELECT * FROM m WHERE rn = 1)
-SELECT {ids_u}, u.url,
+SELECT {ids_u}{url_out},
        best.rtype AS robots_type,
        best.rprefix AS robots_prefix,
        CAST(CASE WHEN best.rtype IS NULL THEN 1

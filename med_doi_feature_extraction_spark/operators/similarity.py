@@ -56,6 +56,23 @@ def cosine_col(a, b):
     return F.when(denom > 0, _dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """Shared tail of every top-k search: rank candidates on unrounded
+    cosine (deterministic neighbor_id tiebreak), keep top-k, round for
+    output. ``hard_negatives`` ranks on the rounded cosine instead, so
+    it keeps its own tail."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
+        )
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -79,16 +96,7 @@ def cosine_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", cosine_col(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def _projection_udf(n_bits: int, seed: int, dim: int | None = None):
@@ -126,21 +134,6 @@ def with_lsh_bucket(
     """``dim`` is optional and only a cross-check: when None the udf
     infers it from the data. Never runs a job at plan time."""
     return df.withColumn(out, _projection_udf(n_bits, seed, dim)(vec_col))
-
-
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Shared tail: rank candidates on unrounded cosine (deterministic
-    neighbor_id tiebreak), keep top-k, round for output."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
-    )
 
 
 def lsh_topk_from_buckets(
@@ -520,19 +513,7 @@ def sq_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("cosine", cosine_col(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def sq_rerank_topk(
@@ -570,19 +551,7 @@ def sq_rerank_topk(
         .join(F.broadcast(q), "query_id")
         .withColumn("cosine", cosine_col(F.col("_qv"), F.col("_cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def hard_negatives(

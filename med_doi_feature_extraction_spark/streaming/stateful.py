@@ -1,28 +1,44 @@
-"""Custom stateful streaming operator: per-row session assignment with
-cross-microbatch state (``applyInPandasWithState``).
+"""Custom stateful streaming operators (``applyInPandasWithState``):
+the streaming twins of the per-entity temporal features — per-row
+sessionization, EWMA, change rate and running distinct — plus
+Misra–Gries heavy hitters.
 
 ``session_window`` aggregates per session; training pipelines usually
-need the session id ON EVERY EVENT ROW (it's a feature). This operator
-keeps (last_ts, session_id, snap_rank) per entity in group state and
-assigns ids incrementally as microbatches arrive — the streaming twin
-of ``operators.windows.sessionize`` with identical semantics (new
-session when gap > threshold, strictly; gaps compared on FLOORED epoch
-seconds exactly like the batch operator's ``_epoch_seconds``, so
-sub-second timestamps session identically in both modes).
+need the session id ON EVERY EVENT ROW (it's a feature).
+``sessionize_stateful`` keeps (last_ts, session_id, snap_rank) per
+entity in group state and assigns ids incrementally as microbatches
+arrive — the streaming twin of ``operators.windows.sessionize`` with
+identical semantics (new session when gap > threshold, strictly; gaps
+compared on FLOORED epoch seconds exactly like the batch operator's
+``_epoch_seconds``, so sub-second timestamps session identically in
+both modes).
+
+The four event-time operators share one driver, ``_event_time_fold``,
+which owns the protocol that decides when a row is final: it casts
+``ts`` and applies the watermark, picks the timeout, unpacks the
+pending rows from state, converts timestamps to µs, splits rows into
+ready and pending against ``getCurrentWatermarkMs()`` (stable sort by
+ts, buffered rows ahead of new ones), writes the pending rows back
+and re-arms the timeout. Each operator supplies only its own parts:
+its initial carry (the state fields ahead of the pending arrays), the
+conversion of its payload column (none for sessionize), and a fold
+that turns the carry and the ready rows, in ts order, into the new
+carry and the emitted columns. ``topk_stateful`` has no event time
+and no buffer, so it does not use the driver.
 
 Two delivery modes:
 
-- ``buffer_late=False`` (default): rows are assigned ids immediately,
+- ``buffer_late=False`` (default): rows are processed immediately,
   assuming non-decreasing ts per entity across batches (sorted source).
-  A row arriving after a later row has been processed gets a WRONG id —
-  this failure mode is pinned by a test.
+  A row arriving after a later row has been processed gets a WRONG
+  result — this failure mode is pinned by a test.
 - ``buffer_late=True``: rows are held in group state until the event
   watermark passes them, then finalized in ts order — out-of-order
-  arrival within the watermark yields exactly the batch ids (append
-  semantics: rows newer than the final watermark stay buffered, same
-  contract as ``session_window`` append mode). Uses EventTimeTimeout
-  so buffered rows flush on no-data microbatches as the watermark
-  advances.
+  arrival within the watermark yields exactly the batch result (rows
+  newer than the final watermark stay buffered, same contract as
+  ``session_window`` append mode). Uses EventTimeTimeout so buffered
+  rows flush on no-data microbatches as the watermark advances. Ties
+  at equal ts finalize in arrival order (stable sort).
 
 State size is O(entities) (+O(buffered rows) in buffered mode — bounded
 by rows-per-watermark-window); at 10^12-doc scale key the stream by
@@ -31,7 +47,9 @@ url-bucket shards and use the rocksdb state store on a real cluster.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import bisect
+import math
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -40,27 +58,95 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("session_id", T.LongType()),
-        T.StructField("session_seq", T.LongType()),
-        T.StructField("snap_rank", T.LongType()),
-        T.StructField("pending_ts_us", T.ArrayType(T.LongType())),
-    ]
+_LONG, _DOUBLE, _STR, _TS = (
+    T.LongType(), T.DoubleType(), T.StringType(), T.TimestampType()
 )
 
 
-def _output_schema(entity: str, ts: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(entity, T.LongType()),
-            T.StructField(ts, T.TimestampType()),
-            T.StructField("session_id", T.LongType()),
-            T.StructField("session_seq", T.LongType()),
-            T.StructField("snap_rank", T.LongType()),
-        ]
+def _struct(*fields: tuple[str, T.DataType]) -> T.StructType:
+    return T.StructType([T.StructField(name, dtype) for name, dtype in fields])
+
+
+def _event_time_fold(
+    events: DataFrame,
+    entity: str,
+    ts: str,
+    watermark: str,
+    buffer_late: bool,
+    state_schema: T.StructType,
+    output_schema: T.StructType,
+    output_mode: str,
+    init: tuple,
+    fold: Callable,
+    payload: Callable[[pd.DataFrame], list] | None = None,
+) -> DataFrame:
+    """The event-time protocol of the four stateful twins.
+
+    ``state_schema`` is the carry fields (``init`` gives their values
+    for a new entity) followed by the pending arrays: ts in µs, then
+    the payload values when ``payload`` converts a column.
+    ``fold(carry, ts_us[, values])`` receives the ready rows in ts
+    order and returns ``(carry, columns)``; when any row was ready,
+    ``columns`` is emitted with the entity key in front.
+    """
+    n_carry = len(init)
+    n_pending = 1 if payload is None else 2
+
+    def step(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
+        stored = state.get if state.exists else (*init, *[None] * n_pending)
+        carry = tuple(stored[:n_carry])
+        rows = [list(a or []) for a in stored[n_carry:]]
+        if not state.hasTimedOut:
+            for pdf in pdf_iter:
+                # one vectorized ns→µs conversion per batch (floor
+                # division matches pd.Timestamp(t).value // 1000)
+                rows[0].extend(
+                    (pdf[ts].to_numpy(dtype="datetime64[ns]").astype("int64") // 1000).tolist()
+                )
+                if payload is not None:
+                    rows[1].extend(payload(pdf))
+
+        # stable: buffered rows sit ahead of new ones at equal ts
+        order = sorted(range(len(rows[0])), key=rows[0].__getitem__)
+        rows = [[col[i] for i in order] for col in rows]
+        if buffer_late:
+            wm_ms = state.getCurrentWatermarkMs()
+            n_ready = bisect.bisect_right(rows[0], wm_ms * 1000)
+        else:
+            n_ready = len(order)
+        carry, columns = fold(carry, *(col[:n_ready] for col in rows))
+        pending = [col[n_ready:] for col in rows]
+
+        state.update((*carry, *pending))
+        if buffer_late and pending[0]:
+            # re-arm: fire as soon as the watermark can finalize the
+            # earliest buffered row (must be strictly > current wm)
+            state.setTimeoutTimestamp(max(pending[0][0] // 1000, wm_ms + 1))
+        if n_ready:
+            yield pd.DataFrame({entity: key[0], **columns})
+
+    timeout = (
+        GroupStateTimeout.EventTimeTimeout
+        if buffer_late
+        else GroupStateTimeout.NoTimeout
     )
+    return (
+        events.withColumn(ts, F.col(ts).cast("timestamp"))
+        .withWatermark(ts, watermark)
+        .groupBy(entity)
+        .applyInPandasWithState(
+            step, output_schema, state_schema, output_mode, timeout
+        )
+    )
+
+
+STATE_SCHEMA = _struct(
+    ("last_ts_us", _LONG),
+    ("session_id", _LONG),
+    ("session_seq", _LONG),
+    ("snap_rank", _LONG),
+    ("pending_ts_us", T.ArrayType(_LONG)),
+)
 
 
 def sessionize_stateful(
@@ -71,41 +157,16 @@ def sessionize_stateful(
     watermark: str = "1 hour",
     buffer_late: bool = False,
 ) -> DataFrame:
-    """Streaming per-row sessionization. Input may be a streaming or
-    batch DataFrame grouped by ``entity`` (``buffer_late`` requires a
-    streaming input — it finalizes on watermark advance)."""
+    """Streaming per-row sessionization grouped by ``entity``. The
+    input must be a streaming DataFrame: Spark rejects
+    ``applyInPandasWithState`` on a batch one."""
 
-    def assign(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            last_ts_us, session_id, session_seq, snap_rank, pending = state.get
-            pending = list(pending or [])
-        else:
-            last_ts_us, session_id, session_seq, snap_rank = None, 0, 0, 0
-            pending = []
-
-        new_ts: list[int] = []
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                # one vectorized ns→µs conversion per batch (floor
-                # division matches pd.Timestamp(t).value // 1000)
-                new_ts.extend(
-                    (pdf[ts].to_numpy(dtype="datetime64[ns]").astype("int64") // 1000).tolist()
-                )
-
-        if buffer_late:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            pending = sorted(pending + new_ts)
-            ready = [t for t in pending if t <= wm_us]
-            pending = [t for t in pending if t > wm_us]
-        else:
-            ready = sorted(new_ts)
-
-        # the state transitions themselves are inherently sequential
-        # per entity (each row's session depends on the previous one);
-        # only plain ints flow through the loop — timestamp object
-        # construction happens vectorized below
-        out_rows = []
-        for t_us in ready:
+    def fold(carry, ts_us):
+        last_ts_us, session_id, session_seq, snap_rank = carry
+        # each row's session depends on the previous one, so the state
+        # transitions are a sequential loop over plain ints
+        ids, seqs, ranks = [], [], []
+        for t_us in ts_us:
             t_s = t_us // 1_000_000
             if last_ts_us is None or t_s - (last_ts_us // 1_000_000) > gap_seconds:
                 session_id += 1
@@ -113,66 +174,39 @@ def sessionize_stateful(
             last_ts_us = t_us
             session_seq += 1
             snap_rank += 1
-            out_rows.append((t_us, session_id, session_seq, snap_rank))
+            ids.append(session_id)
+            seqs.append(session_seq)
+            ranks.append(snap_rank)
+        return (last_ts_us, session_id, session_seq, snap_rank), {
+            ts: pd.to_datetime(ts_us, unit="us"),
+            "session_id": ids,
+            "session_seq": seqs,
+            "snap_rank": ranks,
+        }
 
-        state.update((last_ts_us, session_id, session_seq, snap_rank, pending))
-        if buffer_late and pending:
-            # re-arm: fire as soon as the watermark can finalize the
-            # earliest buffered row (must be strictly > current wm)
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(min(pending) // 1000, wm_ms + 1))
-        if out_rows:
-            cols = pd.DataFrame(
-                out_rows,
-                columns=["_us", "session_id", "session_seq", "snap_rank"],
-            )
-            yield pd.DataFrame(
-                {
-                    entity: key[0],
-                    ts: pd.to_datetime(cols["_us"], unit="us"),
-                    "session_id": cols["session_id"],
-                    "session_seq": cols["session_seq"],
-                    "snap_rank": cols["snap_rank"],
-                }
-            )
-
-    events = events.withColumn(ts, F.col(ts).cast("timestamp"))
-    if events.isStreaming:
-        events = events.withWatermark(ts, watermark)
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if buffer_late
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(entity).applyInPandasWithState(
-        assign,
-        _output_schema(entity, ts),
+    return _event_time_fold(
+        events, entity, ts, watermark, buffer_late,
         STATE_SCHEMA,
+        _struct(
+            (entity, _LONG),
+            (ts, _TS),
+            ("session_id", _LONG),
+            ("session_seq", _LONG),
+            ("snap_rank", _LONG),
+        ),
         "append",
-        timeout,
+        init=(None, 0, 0, 0),
+        fold=fold,
     )
 
 
-EWMA_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("num", T.DoubleType()),
-        T.StructField("den", T.DoubleType()),
-        T.StructField("pending_ts_us", T.ArrayType(T.LongType())),
-        T.StructField("pending_val", T.ArrayType(T.DoubleType())),
-    ]
+EWMA_STATE_SCHEMA = _struct(
+    ("last_ts_us", _LONG),
+    ("num", _DOUBLE),
+    ("den", _DOUBLE),
+    ("pending_ts_us", T.ArrayType(_LONG)),
+    ("pending_val", T.ArrayType(_DOUBLE)),
 )
-
-
-def _ewma_output_schema(entity: str, ts: str, value: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(entity, T.LongType()),
-            T.StructField(ts, T.TimestampType()),
-            T.StructField(value, T.DoubleType()),
-            T.StructField(f"{value}_ewma", T.DoubleType()),
-        ]
-    )
 
 
 def ewma_stateful(
@@ -195,121 +229,57 @@ def ewma_stateful(
     history length — the streaming-native form of a feature whose
     batch recursion needs the whole history in order.
 
-    Same delivery contract as :func:`sessionize_stateful`: default
-    mode assumes per-entity non-decreasing ts across microbatches;
-    ``buffer_late=True`` holds rows in state until the event watermark
-    passes them and finalizes in ts order (append semantics). Ties at
-    equal ts finalize in arrival order (stable sort), matching the
-    batch operator's stable mergesort when no tiebreak is given.
+    Delivery contract as in the module docstring (append semantics);
+    the arrival-order tie rule matches the batch operator's stable
+    mergesort when no tiebreak is given.
     """
     if not 0.0 < alpha <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {alpha}")
     r = 1.0 - alpha
 
-    def step(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            last_ts_us, num, den, p_ts, p_val = state.get
-            pending = list(zip(p_ts or [], p_val or []))
-        else:
-            last_ts_us, num, den = None, 0.0, 0.0
-            pending = []
-
-        new_rows: list[tuple[int, float]] = []
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                ts_us = (
-                    pdf[ts].to_numpy(dtype="datetime64[ns]").astype("int64")
-                    // 1000
-                )
-                vals = pdf[value].to_numpy(dtype="float64")
-                new_rows.extend(zip(ts_us.tolist(), vals.tolist()))
-
-        if buffer_late:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            pending = sorted(pending + new_rows, key=lambda p: p[0])
-            ready = [p for p in pending if p[0] <= wm_us]
-            pending = [p for p in pending if p[0] > wm_us]
-        else:
-            ready = sorted(new_rows, key=lambda p: p[0])
-            pending = []
-
-        out_rows = []
-        for t_us, x in ready:
+    def fold(carry, ts_us, xs):
+        last_ts_us, num, den = carry
+        means = []
+        for t_us, x in zip(ts_us, xs):
             num *= r
             den *= r
             if x == x:  # non-NaN
                 num += x
                 den += 1.0
             last_ts_us = t_us
-            out_rows.append((t_us, x, (num / den) if den > 0 else None))
+            means.append((num / den) if den > 0 else None)
+        return (last_ts_us, num, den), {
+            ts: pd.to_datetime(ts_us, unit="us"),
+            value: xs,
+            f"{value}_ewma": means,
+        }
 
-        state.update(
-            (
-                last_ts_us,
-                num,
-                den,
-                [p[0] for p in pending],
-                [p[1] for p in pending],
-            )
-        )
-        if buffer_late and pending:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(min(p[0] for p in pending) // 1000, wm_ms + 1)
-            )
-        if out_rows:
-            cols = pd.DataFrame(out_rows, columns=["_us", value, f"{value}_ewma"])
-            yield pd.DataFrame(
-                {
-                    entity: key[0],
-                    ts: pd.to_datetime(cols["_us"], unit="us"),
-                    value: cols[value],
-                    f"{value}_ewma": cols[f"{value}_ewma"],
-                }
-            )
-
-    events = events.withColumn(ts, F.col(ts).cast("timestamp"))
-    if events.isStreaming:
-        events = events.withWatermark(ts, watermark)
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if buffer_late
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(entity).applyInPandasWithState(
-        step,
-        _ewma_output_schema(entity, ts, value),
+    return _event_time_fold(
+        events, entity, ts, watermark, buffer_late,
         EWMA_STATE_SCHEMA,
+        _struct(
+            (entity, _LONG),
+            (ts, _TS),
+            (value, _DOUBLE),
+            (f"{value}_ewma", _DOUBLE),
+        ),
         "append",
-        timeout,
+        init=(None, 0.0, 0.0),
+        fold=fold,
+        payload=lambda pdf: pdf[value].to_numpy(dtype="float64").tolist(),
     )
 
 
-CHANGE_RATE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("prev_c", T.StringType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("changes", T.LongType()),
-        T.StructField("gap_sum", T.DoubleType()),
-        T.StructField("last_change_us", T.LongType()),
-        T.StructField("p_ts", T.ArrayType(T.LongType())),
-        T.StructField("p_c", T.ArrayType(T.StringType())),
-    ]
+CHANGE_RATE_STATE_SCHEMA = _struct(
+    ("last_ts_us", _LONG),
+    ("prev_c", _STR),
+    ("n", _LONG),
+    ("changes", _LONG),
+    ("gap_sum", _DOUBLE),
+    ("last_change_us", _LONG),
+    ("p_ts", T.ArrayType(_LONG)),
+    ("p_c", T.ArrayType(_STR)),
 )
-
-
-def _change_rate_output_schema(entity: str, ts: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(entity, T.LongType()),
-            T.StructField("n_snapshots", T.LongType()),
-            T.StructField("n_changes", T.LongType()),
-            T.StructField("change_rate", T.DoubleType()),
-            T.StructField("mean_gap_sec", T.DoubleType()),
-            T.StructField("last_change_ts", T.TimestampType()),
-        ]
-    )
 
 
 def change_rate_stateful(
@@ -327,16 +297,12 @@ def change_rate_stateful(
     entity's RUNNING feature row (update semantics — pair with
     ``outputMode("update")``); after the final batch the last emission
     per entity equals the batch operator's aggregate exactly (pinned
-    in tests).
+    in tests, in both delivery modes).
 
-    Same delivery contract as the other stateful ops here: default
-    mode assumes per-entity non-decreasing ts across microbatches;
-    ``buffer_late=True`` holds rows in state until the event watermark
-    passes them, so bounded out-of-order arrival still yields the
-    batch answer. Null-safe change semantics match the batch op:
-    NULL→NULL is no change, NULL↔value is a change, the first snapshot
-    never counts. Gap seconds use the same whole-second floor as the
-    batch epoch cast.
+    Delivery contract as in the module docstring. Null-safe change
+    semantics match the batch op: NULL→NULL is no change, NULL↔value
+    is a change, the first snapshot never counts. Gap seconds use the
+    same whole-second floor as the batch epoch cast.
     """
     NULL_MARK = "\x00<null>"
 
@@ -344,43 +310,11 @@ def change_rate_stateful(
         # Spark's round() is HALF_UP; Python's is banker's — they
         # diverge at exact 5e-7 tails (e.g. 1/128), so replicate
         # HALF_UP for non-negative inputs
-        import math
-
         return math.floor(x * 1e6 + 0.5) / 1e6
 
-    def step(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (last_ts_us, prev_c, n, changes, gap_sum, last_change_us,
-             p_ts, p_c) = state.get
-            pending = list(zip(p_ts or [], p_c or []))
-        else:
-            last_ts_us, prev_c = None, None
-            n, changes, gap_sum, last_change_us = 0, 0, 0.0, None
-            pending = []
-
-        new_rows: list[tuple[int, str]] = []
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                ts_us = (
-                    pdf[ts].to_numpy(dtype="datetime64[ns]").astype("int64")
-                    // 1000
-                )
-                cs = [
-                    NULL_MARK if c is None or c != c else str(c)
-                    for c in pdf[content].tolist()
-                ]
-                new_rows.extend(zip(ts_us.tolist(), cs))
-
-        if buffer_late:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            pending = sorted(pending + new_rows, key=lambda p: p[0])
-            ready = [p for p in pending if p[0] <= wm_us]
-            pending = [p for p in pending if p[0] > wm_us]
-        else:
-            ready = sorted(new_rows, key=lambda p: p[0])
-            pending = []
-
-        for t_us, c in ready:
+    def fold(carry, ts_us, cs):
+        last_ts_us, prev_c, n, changes, gap_sum, last_change_us = carry
+        for t_us, c in zip(ts_us, cs):
             if n > 0:
                 # whole-second gap (batch op floors via epoch cast)
                 gap_sum += float(t_us // 1_000_000 - last_ts_us // 1_000_000)
@@ -390,77 +324,46 @@ def change_rate_stateful(
             n += 1
             last_ts_us = t_us
             prev_c = c
+        return (last_ts_us, prev_c, n, changes, gap_sum, last_change_us), {
+            "n_snapshots": [n],
+            "n_changes": [changes],
+            "change_rate": [_r6(changes / (n - 1)) if n > 1 else None],
+            "mean_gap_sec": [_r6(gap_sum / (n - 1)) if n > 1 else None],
+            "last_change_ts": [
+                pd.to_datetime(last_change_us, unit="us")
+                if last_change_us is not None
+                else pd.NaT
+            ],
+        }
 
-        state.update(
-            (
-                last_ts_us, prev_c, n, changes, gap_sum, last_change_us,
-                [p[0] for p in pending], [p[1] for p in pending],
-            )
-        )
-        if buffer_late and pending:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(min(p[0] for p in pending) // 1000, wm_ms + 1)
-            )
-        if ready:
-            yield pd.DataFrame(
-                {
-                    entity: [key[0]],
-                    "n_snapshots": [n],
-                    "n_changes": [changes],
-                    "change_rate": [
-                        _r6(changes / (n - 1)) if n > 1 else None
-                    ],
-                    "mean_gap_sec": [
-                        _r6(gap_sum / (n - 1)) if n > 1 else None
-                    ],
-                    "last_change_ts": [
-                        pd.to_datetime(last_change_us, unit="us")
-                        if last_change_us is not None
-                        else pd.NaT
-                    ],
-                }
-            )
-
-    events = events.withColumn(ts, F.col(ts).cast("timestamp"))
-    if events.isStreaming:
-        events = events.withWatermark(ts, watermark)
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if buffer_late
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(entity).applyInPandasWithState(
-        step,
-        _change_rate_output_schema(entity, ts),
+    return _event_time_fold(
+        events, entity, ts, watermark, buffer_late,
         CHANGE_RATE_STATE_SCHEMA,
+        _struct(
+            (entity, _LONG),
+            ("n_snapshots", _LONG),
+            ("n_changes", _LONG),
+            ("change_rate", _DOUBLE),
+            ("mean_gap_sec", _DOUBLE),
+            ("last_change_ts", _TS),
+        ),
         "update",
-        timeout,
+        init=(None, None, 0, 0, 0.0, None),
+        fold=fold,
+        payload=lambda pdf: [
+            NULL_MARK if c is None or c != c else str(c)
+            for c in pdf[content].tolist()
+        ],
     )
 
 
-CUM_DISTINCT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_ts_us", T.LongType()),
-        T.StructField("seen", T.ArrayType(T.StringType())),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("p_ts", T.ArrayType(T.LongType())),
-        T.StructField("p_v", T.ArrayType(T.StringType())),
-    ]
+CUM_DISTINCT_STATE_SCHEMA = _struct(
+    ("last_ts_us", _LONG),
+    ("seen", T.ArrayType(_STR)),
+    ("n_seen", _LONG),
+    ("p_ts", T.ArrayType(_LONG)),
+    ("p_v", T.ArrayType(_STR)),
 )
-
-
-def _cum_distinct_output_schema(
-    entity: str, ts: str, val: str
-) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(entity, T.LongType()),
-            T.StructField(ts, T.TimestampType()),
-            T.StructField(val, T.StringType()),
-            T.StructField("n_distinct_seen", T.LongType()),
-        ]
-    )
 
 
 def cumulative_distinct_stateful(
@@ -484,116 +387,50 @@ def cumulative_distinct_stateful(
     right streaming shape for unbounded-cardinality values (hash to
     a fixed sketch upstream, or use an HLL variant, if so).
 
-    Delivery contract identical to :func:`ewma_stateful`: default
-    mode assumes per-entity non-decreasing ts across microbatches;
-    ``buffer_late=True`` holds rows until the event watermark passes
-    them and finalizes in ts order (append semantics). Ties at equal
-    ts finalize in arrival order (stable sort) — the batch twin with
-    a tiebreak column may order equal-ts rows differently; the FINAL
-    count after the tie group is identical either way (set union is
-    order-free).
+    Delivery contract as in the module docstring (append semantics).
+    The batch twin with a tiebreak column may order equal-ts rows
+    differently from arrival order; the FINAL count after the tie
+    group is identical either way (set union is order-free).
     """
 
-    def step(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            last_ts_us, seen_arr, n_seen, p_ts, p_v = state.get
-            seen = set(seen_arr or [])
-            pending = list(zip(p_ts or [], p_v or []))
-        else:
-            last_ts_us, seen, pending = None, set(), []
-
-        new_rows: list[tuple[int, object]] = []
-        if not state.hasTimedOut:
-            for pdf in pdf_iter:
-                ts_us = (
-                    pdf[ts].to_numpy(dtype="datetime64[ns]").astype("int64")
-                    // 1000
-                )
-                vals = pdf[val].astype(object).where(
-                    pdf[val].notna(), None
-                )
-                new_rows.extend(zip(ts_us.tolist(), vals.tolist()))
-
-        if buffer_late:
-            wm_us = state.getCurrentWatermarkMs() * 1000
-            pending = sorted(pending + new_rows, key=lambda p: p[0])
-            ready = [p for p in pending if p[0] <= wm_us]
-            pending = [p for p in pending if p[0] > wm_us]
-        else:
-            ready = sorted(new_rows, key=lambda p: p[0])
-            pending = []
-
-        out_rows = []
-        for t_us, v in ready:
+    def fold(carry, ts_us, vs):
+        last_ts_us, seen, _ = carry
+        seen = set(seen or [])
+        counts = []
+        for t_us, v in zip(ts_us, vs):
             if v is not None:
                 seen.add(v)
             last_ts_us = t_us
-            out_rows.append((t_us, v, len(seen)))
+            counts.append(len(seen))
+        return (last_ts_us, sorted(seen), len(seen)), {
+            ts: pd.to_datetime(ts_us, unit="us"),
+            val: vs,
+            "n_distinct_seen": counts,
+        }
 
-        state.update(
-            (
-                last_ts_us,
-                sorted(seen),
-                len(seen),
-                [p[0] for p in pending],
-                [p[1] for p in pending],
-            )
-        )
-        if buffer_late and pending:
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-                max(min(p[0] for p in pending) // 1000, wm_ms + 1)
-            )
-        if out_rows:
-            cols = pd.DataFrame(
-                out_rows, columns=["_us", val, "n_distinct_seen"]
-            )
-            yield pd.DataFrame(
-                {
-                    entity: key[0],
-                    ts: pd.to_datetime(cols["_us"], unit="us"),
-                    val: cols[val],
-                    "n_distinct_seen": cols["n_distinct_seen"].astype(
-                        "int64"
-                    ),
-                }
-            )
-
-    events = events.withColumn(ts, F.col(ts).cast("timestamp"))
-    if events.isStreaming:
-        events = events.withWatermark(ts, watermark)
-    timeout = (
-        GroupStateTimeout.EventTimeTimeout
-        if buffer_late
-        else GroupStateTimeout.NoTimeout
-    )
-    return events.groupBy(entity).applyInPandasWithState(
-        step,
-        _cum_distinct_output_schema(entity, ts, val),
+    return _event_time_fold(
+        events, entity, ts, watermark, buffer_late,
         CUM_DISTINCT_STATE_SCHEMA,
+        _struct(
+            (entity, _LONG),
+            (ts, _TS),
+            (val, _STR),
+            ("n_distinct_seen", _LONG),
+        ),
         "append",
-        timeout,
+        init=(None, [], 0),
+        fold=fold,
+        payload=lambda pdf: pdf[val].astype(object).where(
+            pdf[val].notna(), None
+        ).tolist(),
     )
 
 
-TOPK_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("items", T.ArrayType(T.StringType())),
-        T.StructField("counts", T.ArrayType(T.LongType())),
-        T.StructField("n_processed", T.LongType()),
-    ]
+TOPK_STATE_SCHEMA = _struct(
+    ("items", T.ArrayType(_STR)),
+    ("counts", T.ArrayType(_LONG)),
+    ("n_processed", _LONG),
 )
-
-
-def _topk_output_schema(group: str, item: str) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField(group, T.StringType()),
-            T.StructField(item, T.StringType()),
-            T.StructField("mg_count", T.LongType()),
-            T.StructField("n_processed", T.LongType()),
-        ]
-    )
 
 
 def topk_stateful(
@@ -670,7 +507,12 @@ def topk_stateful(
 
     return events.groupBy(group).applyInPandasWithState(
         step,
-        _topk_output_schema(group, item),
+        _struct(
+            (group, _STR),
+            (item, _STR),
+            ("mg_count", _LONG),
+            ("n_processed", _LONG),
+        ),
         TOPK_STATE_SCHEMA,
         "append",
         GroupStateTimeout.NoTimeout,

@@ -95,6 +95,50 @@ class TestApplyRobots:
         got = _run(spark, urls, rules)
         assert got[0][2] == 1 and got[1][2] == 0
 
+    def test_duckdb_twin_with_url_as_id(self, spark):
+        """At apply_robots' default ``id_cols=("url",)`` the DuckDB
+        twin returns Spark's columns (url once) and rows."""
+        import duckdb
+
+        from med_doi_feature_extraction_spark.operators.robots import (
+            apply_robots,
+            oracle_robots_sql,
+        )
+
+        urls = [
+            "https://a.com/cat/7/x",
+            "https://a.com/cat/1",
+            "HTTPS://A.com:443/p",
+            "https://a.com/zzz",
+            "https://other.com/cat/",
+        ]
+        rules = [
+            ("a.com", "disallow", "/cat/"),
+            ("a.com", "allow", "/cat/7/"),
+            ("a.com", "disallow", "/p"),
+        ]
+        out = apply_robots(
+            spark.createDataFrame([(u,) for u in urls], "url string"),
+            spark.createDataFrame(
+                rules, "host string, rule string, path_prefix string"
+            ),
+        )
+        values = lambda rows: ", ".join(
+            "(" + ", ".join(f"'{v}'" for v in r) + ")" for r in rows
+        )
+        res = duckdb.connect().execute(
+            oracle_robots_sql(
+                f"(VALUES {values([(u,) for u in urls])}) t(url)",
+                f"SELECT * FROM (VALUES {values(rules)})"
+                " r(host, rule, path_prefix)",
+                ("url",),
+            )
+        )
+        assert [d[0] for d in res.description] == out.columns
+        assert sorted(res.fetchall(), key=str) == sorted(
+            (tuple(r) for r in out.collect()), key=str
+        )
+
 
 class TestParseRobots:
     def test_group_semantics(self, spark):

@@ -604,6 +604,93 @@ def test_stateful_change_rate_matches_batch(spark, tmp_path):
     ).all()
 
 
+def test_stateful_change_rate_out_of_order_buffered(spark, tmp_path):
+    """buffer_late=True: snapshots arriving out of order across
+    microbatches (within the watermark) are finalized in ts order, so
+    each entity's last update-mode emission equals the batch
+    windows.change_rate_features aggregate, NULL content included."""
+    import os
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from med_doi_feature_extraction_spark.operators.windows import (
+        change_rate_features,
+    )
+    from med_doi_feature_extraction_spark.streaming.stateful import (
+        change_rate_stateful,
+    )
+
+    base = pd.Timestamp("2024-01-01 00:00:00")
+    mk = lambda rows: pd.DataFrame(
+        {
+            "user_id": [u for u, _, _ in rows],
+            "ts": [base + pd.Timedelta(seconds=s) for _, s, _ in rows],
+            "event_type": [c for _, _, c in rows],
+        }
+    ).astype({"ts": "datetime64[us]", "event_type": "object"})
+    src = tmp_path / "cr_ooo"
+    src.mkdir()
+    # f1 delivers ts=100 / ts=20 AFTER later snapshots of the same
+    # entity were already seen; uid=99 advances the watermark far
+    # enough to finalize everything else
+    batches = [
+        mk([(1, 0, "a"), (1, 5000, "b"), (2, 50, "x"), (2, 3000, "y")]),
+        mk([(1, 100, "b"), (1, 5100, None), (2, 20, "x")]),
+        mk([(99, 100000, "z")]),
+    ]
+    for i, pdf in enumerate(batches):
+        p = str(src / f"f{i}.parquet")
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), p)
+        os.utime(p, (1700000000 + i * 10, 1700000000 + i * 10))
+
+    schema = spark.createDataFrame(batches[0]).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    out = change_rate_stateful(
+        stream, "user_id", "ts", "event_type",
+        watermark="1000 seconds", buffer_late=True,
+    )
+    q = (
+        out.writeStream.outputMode("update").format("memory")
+        .queryName("cr_ooo").trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    emitted = spark.sql("SELECT * FROM cr_ooo WHERE user_id != 99").toPandas()
+    last = (
+        emitted.sort_values("n_snapshots")
+        .groupby("user_id", as_index=False)
+        .last()
+        .sort_values("user_id")
+        .reset_index(drop=True)
+    )
+    batch = (
+        change_rate_features(
+            spark.createDataFrame(
+                pd.concat(batches[:2]), schema
+            ),
+            "user_id", "ts", "event_type",
+        )
+        .toPandas()
+        .sort_values("user_id")
+        .reset_index(drop=True)
+    )
+    assert last.user_id.tolist() == batch.user_id.tolist() == [1, 2]
+    assert last.n_snapshots.tolist() == [4, 3]
+    for col in ["n_snapshots", "n_changes"]:
+        assert (last[col].to_numpy() == batch[col].to_numpy()).all(), col
+    for col in ["change_rate", "mean_gap_sec"]:
+        a = last[col].astype(float).to_numpy()
+        b = batch[col].astype(float).to_numpy()
+        assert ((a == b) | (np.isnan(a) & np.isnan(b))).all(), col
+    assert (
+        pd.to_datetime(last["last_change_ts"]).to_numpy()
+        == pd.to_datetime(batch["last_change_ts"]).to_numpy()
+    ).all()
+
+
 def test_stateful_cum_distinct_matches_batch(spark, tmp_path):
     """Streaming running-distinct == the batch
     windows.cumulative_distinct for every row (ts totally orders
