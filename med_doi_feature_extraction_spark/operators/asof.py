@@ -10,10 +10,16 @@ right row get nulls. Matches ``pandas.merge_asof(direction=
 
 Two independent builds (cross-checked against each other in tests):
 
-1. ``asof_join_window`` — pure DataFrame composition: tag + unionByName
-   + one Window per key ordered by (ts, side) + ``last(ignorenulls)``,
-   then keep left rows. No theta join, no O(n²): one shuffle on key,
-   one sort. This is the pure-SQL cross-check build (SURVEY.md J5a).
+1. The union-and-window build, written once in ``_asof_core``: tag +
+   unionByName of the spine and N named sources, one Window per key
+   ordered by (ts, side), one ``last(ignorenulls)`` match struct per
+   source and direction, keep the spine rows. No theta join, no O(n²):
+   one shuffle on key, one sort per direction. This is the pure-SQL
+   cross-check build (SURVEY.md J5a). ``asof_join_window`` supplies one
+   tie-deduped source and reads it backward, forward or nearest;
+   ``asof_join_horizons`` the same source read backward through N
+   freshness predicates; ``feature_matrix`` one source per feature with
+   ``<name>__ts`` provenance. ``_age`` is the one staleness rule.
 
 2. ``asof_join_sorted`` — ``applyInPandas`` over hash buckets of keys
    running a vectorized ``pd.merge_asof`` per bucket (SURVEY.md J5b).
@@ -37,6 +43,101 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from med_doi_feature_extraction_spark.operators.windows import _epoch_seconds
+
+
+def _asof_core(
+    spine: DataFrame,
+    on: str,
+    spine_ts: str,
+    sources: dict[str, tuple[DataFrame, str, list[Column]]],
+    carry_ts: bool,
+    backward: bool = True,
+    forward: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """The one union-and-window as-of match: spine rows with a
+    ``_b_<name>`` (greatest ``ts <=`` spine ts) and/or ``_f_<name>``
+    (least ``ts >=``) match struct per source, plus the temp columns
+    to drop. A source's ``fields`` (and its raw ``ts`` as
+    ``__match_ts`` when ``carry_ts``) ride in ONE struct, so a matched
+    row with a NULL value field stays the match (the struct is
+    non-null) instead of that field falling back to an older row. The
+    forward window re-sorts the partition descending (no extra
+    shuffle)."""
+    out = spine.withColumns({"_ts": F.col(spine_ts), "_side": F.lit(1)})
+    for name, (df, ts, fields) in sources.items():
+        if carry_ts:
+            fields = [*fields, F.col(ts).alias("__match_ts")]
+        out = out.unionByName(
+            df.select(
+                F.col(on),
+                F.col(ts).alias("_ts"),
+                F.lit(0).alias("_side"),
+                F.struct(*fields).alias(f"_s_{name}"),
+            ),
+            allowMissingColumns=True,
+        )
+    temps = ["_ts", "_side", *(f"_s_{n}" for n in sources)]
+    # Source rows sort BEFORE spine rows at equal ts (side 0 < 1) in
+    # both directions, so an observation at exactly the spine ts is in
+    # the frame (<= backward, >= forward: exact matches allowed).
+    orders = [("_b", F.col("_ts").asc())] if backward else []
+    if forward:
+        orders.append(("_f", F.col("_ts").desc()))
+    for tag, ts_order in orders:
+        w = (
+            Window.partitionBy(on)
+            .orderBy(ts_order, F.col("_side").asc())
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        for name in sources:
+            out = out.withColumn(
+                f"{tag}_{name}",
+                F.last(f"_s_{name}", ignorenulls=True).over(w),
+            )
+            temps.append(f"{tag}_{name}")
+    return out.filter(F.col("_side") == 1), temps
+
+
+def _age(match: Column) -> Column:
+    """Spine ts minus the match's ``__match_ts`` in fractional seconds
+    (positive for a backward match, negative for a forward one; NULL
+    when there is no match).
+
+    TIMESTAMP_NTZ has no direct double cast; go via TIMESTAMP
+    (session TZ pinned UTC, value preserved) keeping fractional
+    seconds. Numeric ts types pass through both casts unchanged."""
+
+    def secs(c: Column) -> Column:
+        return c.cast("timestamp").cast("double")
+
+    return secs(F.col("_ts")) - secs(match["__match_ts"])
+
+
+def _tie_deduped(
+    right: DataFrame,
+    on: str,
+    right_ts: str,
+    value_cols: Sequence[str],
+    right_tiebreak: Sequence[str] | None,
+) -> dict[str, tuple[DataFrame, str, list[Column]]]:
+    """The one source of the single-table builds. Its ties at equal
+    ``(on, right_ts)`` are resolved by ``right_tiebreak`` DESC BEFORE the
+    union with a row_number window on the RIGHT side only — that
+    exchange moves the (small) dim side, keeping the big union
+    window's sort keys to exactly ``(_ts, _side)``. (Folding the
+    tiebreak into the union window's sort order was measured 13%
+    slower on the 7.7M-row scaling table: it widens the large sort
+    with a string key to spare a small-side shuffle.)"""
+    tb = [F.col(c).desc() for c in (right_tiebreak or [])]
+    w_tie = Window.partitionBy(on, right_ts).orderBy(*(tb or [F.lit(1)]))
+    deduped = (
+        right.withColumn("_rn", F.row_number().over(w_tie))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+    return {"r": (deduped, right_ts, [F.col(c) for c in value_cols])}
 
 
 def asof_join_window(
@@ -66,150 +167,36 @@ def asof_join_window(
     direction. Timestamps compare via a fractional-seconds double
     cast, so sub-second tolerances work.
 
-    Right-side ties at equal ``ts_right`` are resolved BEFORE the
-    union with a row_number window on the RIGHT side only — that
-    exchange moves the (small) dim side, keeping the big union
-    window's sort keys to exactly ``(_ts, _side)``. (Folding the
-    tiebreak into the union window's sort order was measured 13%
-    slower on the 7.7M-row scaling table: it widens the large sort
-    with a string key to spare a small-side shuffle.)
-
-    All value columns ride in ONE struct per right row, so a single
-    ``last(ignorenulls)`` attaches the columns of the SAME
-    best-matching right row — a right row with a legitimately-NULL
-    value column stays the match (the struct itself is non-null)
-    instead of that one column falling back to an older row.
+    Right-side ties at equal ``ts_right`` are resolved before the
+    union (``_tie_deduped``); the value columns all come from the SAME
+    best-matching right row, a NULL value included (``_asof_core``).
     """
     if direction not in ("backward", "forward", "nearest"):
         raise ValueError(f"unknown as-of direction: {direction!r}")
-    need_b = direction in ("backward", "nearest")
-    need_f = direction in ("forward", "nearest")
-    filled = _asof_filled(
-        left, right, on, left_ts, right_ts, value_cols, right_tiebreak,
-        carry_match_ts=(tolerance_sec is not None) or direction == "nearest",
-        need_backward=need_b,
-        need_forward=need_f,
+    out, temps = _asof_core(
+        left, on, left_ts,
+        _tie_deduped(right, on, right_ts, value_cols, right_tiebreak),
+        carry_ts=(tolerance_sec is not None) or direction == "nearest",
+        backward=direction != "forward",
+        forward=direction != "backward",
     )
+    b, f = F.col("_b_r"), F.col("_f_r")
+    tol = None if tolerance_sec is None else F.lit(float(tolerance_sec))
     if direction == "nearest":
-        bgap = _gap_secs("_r_match")
-        fgap = -_gap_secs("_r_fwd")
-        if tolerance_sec is not None:
-            tol = F.lit(float(tolerance_sec))
-            bok = bgap.isNotNull() & (bgap <= tol)
-            fok = fgap.isNotNull() & (fgap <= tol)
-        else:
-            bok = bgap.isNotNull()
-            fok = fgap.isNotNull()
+        bgap, fgap = _age(b), -_age(f)
+        bok, fok = bgap.isNotNull(), fgap.isNotNull()
+        if tol is not None:
+            bok, fok = bok & (bgap <= tol), fok & (fgap <= tol)
         # tie (bgap == fgap) prefers backward — pandas' nearest rule
         use_b = bok & (~fok | (bgap <= fgap))
-        filled = filled.withColumns(
-            {
-                c: F.when(use_b, F.col("_r_match")[c]).when(
-                    fok, F.col("_r_fwd")[c]
-                )
-                for c in value_cols
-            }
-        )
+        vals = {c: F.when(use_b, b[c]).when(fok, f[c]) for c in value_cols}
     else:
-        src = "_r_match" if direction == "backward" else "_r_fwd"
-        if tolerance_sec is None:
-            filled = filled.withColumns(
-                {c: F.col(src)[c] for c in value_cols}
-            )
-        else:
-            gap = _gap_secs(src) if direction == "backward" else -_gap_secs(src)
-            fresh = gap <= F.lit(float(tolerance_sec))
-            filled = filled.withColumns(
-                {c: F.when(fresh, F.col(src)[c]) for c in value_cols}
-            )
-    return (
-        filled.filter(F.col("_side") == 1)
-        .drop("_ts", "_side", "_r_vals", "_r_match", "_r_fwd")
-    )
-
-
-def _asof_filled(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: Sequence[str],
-    right_tiebreak: Sequence[str] | None,
-    carry_match_ts: bool,
-    need_backward: bool = True,
-    need_forward: bool = False,
-) -> DataFrame:
-    """Shared union-and-window build: returns the unioned frame with
-    ``_r_match`` (best backward match's value struct) and/or
-    ``_r_fwd`` (best forward match's) attached to every row, sides
-    still mixed (``_side`` 1 = left). Both windows share the single
-    exchange on ``on``; the forward window re-sorts the partition
-    descending (one extra in-partition sort, no extra shuffle)."""
-    tb = [F.col(c).desc() for c in (right_tiebreak or [])]
-    w_tie = Window.partitionBy(on, right_ts).orderBy(*(tb or [F.lit(1)]))
-    right_dedup = (
-        right.withColumn("_rn", F.row_number().over(w_tie))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-    l = left.withColumn("_ts", F.col(left_ts)).withColumn("_side", F.lit(1))
-    struct_fields = [F.col(c) for c in value_cols]
-    if carry_match_ts:
-        # carry the matched right ts inside the SAME struct so the
-        # staleness test sees the row last(ignorenulls) actually chose
-        struct_fields.append(F.col(right_ts).alias("__match_ts"))
-    r = right_dedup.select(
-        F.col(on),
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        F.struct(*struct_fields).alias("_r_vals"),
-    )
-    # Align schemas: left gets a null right-struct, right gets null
-    # left cols; allowMissingColumns handles both directions.
-    unioned = l.unionByName(r, allowMissingColumns=True)
-
-    out = unioned
-    if need_backward:
-        # Right rows sort BEFORE left rows at equal ts (side 0 < 1) so
-        # a right observation at exactly ts_left is visible (<=).
-        wb = (
-            Window.partitionBy(on)
-            .orderBy(F.col("_ts").asc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        out = out.withColumn(
-            "_r_match", F.last("_r_vals", ignorenulls=True).over(wb)
-        )
-    if need_forward:
-        # Descending ts: "preceding" rows are those with ts >= ts_left;
-        # side asc again puts the equal-ts right row inside the frame
-        # (>= semantics / allow_exact_matches).
-        wf = (
-            Window.partitionBy(on)
-            .orderBy(F.col("_ts").desc(), F.col("_side").asc())
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        out = out.withColumn(
-            "_r_fwd", F.last("_r_vals", ignorenulls=True).over(wf)
-        )
-    return out
-
-
-def _gap_secs(match_col: str) -> Column:
-    """``left_ts - matched right_ts`` in fractional seconds (positive
-    for a backward match, negative for a forward one; NULL when there
-    is no match).
-
-    TIMESTAMP_NTZ has no direct double cast; go via TIMESTAMP
-    (session TZ pinned UTC, value preserved) keeping fractional
-    seconds. Numeric ts types pass through both casts unchanged."""
-
-    def _secs(c):
-        return c.cast("timestamp").cast("double")
-
-    return _secs(F.col("_ts")) - _secs(F.col(match_col)["__match_ts"])
+        m, gap = (b, _age(b)) if direction == "backward" else (f, -_age(f))
+        vals = {
+            c: m[c] if tol is None else F.when(gap <= tol, m[c])
+            for c in value_cols
+        }
+    return out.withColumns(vals).drop(*temps)
 
 
 def asof_join_horizons(
@@ -235,23 +222,19 @@ def asof_join_horizons(
     """
     if not horizons:
         raise ValueError("horizons must be a non-empty {name: seconds} map")
-    filled = _asof_filled(
-        left, right, on, left_ts, right_ts, value_cols, right_tiebreak,
-        carry_match_ts=True,
+    out, temps = _asof_core(
+        left, on, left_ts,
+        _tie_deduped(right, on, right_ts, value_cols, right_tiebreak),
+        carry_ts=True,
     )
-    age = _gap_secs("_r_match")
-    out_cols = {
-        f"{c}_{name}": F.when(
-            age <= F.lit(float(secs)), F.col("_r_match")[c]
-        )
-        for name, secs in horizons.items()
-        for c in value_cols
-    }
-    return (
-        filled.withColumns(out_cols)
-        .filter(F.col("_side") == 1)
-        .drop("_ts", "_side", "_r_vals", "_r_match")
-    )
+    m = F.col("_b_r")
+    return out.withColumns(
+        {
+            f"{c}_{name}": F.when(_age(m) <= F.lit(float(secs)), m[c])
+            for name, secs in horizons.items()
+            for c in value_cols
+        }
+    ).drop(*temps)
 
 
 def asof_join_sorted(
@@ -367,8 +350,8 @@ def feature_matrix(
     feature-store pattern built on the union-and-window as-of engine.
 
     ``emit_match_ts=True`` adds a ``<name>__ts`` provenance column per
-    feature (the timestamp of the matched observation, NULL when the
-    value is NULL) so downstream audits can PROVE the leakage contract
+    feature (the timestamp of the matched observation, NULL when there
+    is no fresh match) so downstream audits can PROVE the leakage contract
     on the materialized matrix (``leakage_audit``) instead of trusting
     the join.
 
@@ -379,89 +362,43 @@ def feature_matrix(
     temporal leakage by construction, the same contract as
     ``asof_join_window``. ``tolerance_sec`` bounds staleness per
     feature (a match older than ``label_ts − tolerance`` reverts to
-    NULL), compared on fractional-second doubles like the single-table
-    build.
+    NULL, its provenance too), compared on fractional-second doubles
+    like the single-table build.
 
     Why not N ``asof_join_window`` calls: each call shuffles the spine
     on the entity key again — N feature tables cost N+1 exchanges and
     N sorts of the (large) label spine. Here every feature table is
-    tagged into ONE union, so the whole matrix costs a single exchange
-    on ``on`` and a single sort of ``(_ts, _side)``, with one
+    one source of ONE union, so the whole matrix costs a single
+    exchange on ``on`` and a single sort of ``(_ts, _side)``, with one
     ``last(ignorenulls)`` per feature running over the same sorted
-    partition — the per-feature cost is a column, not a shuffle.
-
-    Each feature rides its OWN struct column (null on rows of other
-    sources), so features with different dtypes coexist and a feature
-    row whose value is legitimately NULL still wins its as-of match
-    (the struct is non-null — same rule as the single-table build).
+    partition — the per-feature cost is a column, not a shuffle. A
+    feature row whose value is NULL still wins its as-of match.
 
     Ties: rows of the SAME feature at equal ``(on, ts)`` are not
     disambiguated here — pre-dedupe with ``windows.dedupe_latest``
     (the contract fixture aggregates to unique (entity, ts) first).
-    Feature rows always sort BEFORE label rows at equal ts (side
-    0 < 1) so an observation stamped exactly at ``label_ts`` is
-    visible.
     """
     if not features:
         raise ValueError("feature_matrix needs at least one feature")
-    l = labels.withColumn("_ts", F.col(label_ts)).withColumn(
-        "_side", F.lit(1)
+    out, temps = _asof_core(
+        labels, on, label_ts,
+        {
+            name: (fdf, ts_col, [F.col(val_col).alias("v")])
+            for name, (fdf, ts_col, val_col) in features.items()
+        },
+        carry_ts=tolerance_sec is not None or emit_match_ts,
     )
-    unioned = l
-    for name, (fdf, ts_col, val_col) in features.items():
-        fields = [F.col(val_col).alias("v")]
-        if tolerance_sec is not None:
-            # two-step cast via TIMESTAMP so TIMESTAMP_NTZ inputs
-            # work too (Spark disallows NTZ -> double directly; the
-            # same idiom as _gap_secs)
-            fields.append(
-                F.col(ts_col)
-                .cast("timestamp")
-                .cast("double")
-                .alias("__match_ts")
-            )
-        if emit_match_ts:
-            fields.append(F.col(ts_col).alias("__obs_ts"))
-        r = fdf.select(
-            F.col(on),
-            F.col(ts_col).alias("_ts"),
-            F.lit(0).alias("_side"),
-            F.struct(*fields).alias(f"_f_{name}"),
-        )
-        unioned = unioned.unionByName(r, allowMissingColumns=True)
-    wb = (
-        Window.partitionBy(on)
-        .orderBy(F.col("_ts").asc(), F.col("_side").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = unioned
-    for name in features:
-        out = out.withColumn(
-            f"_m_{name}",
-            F.last(f"_f_{name}", ignorenulls=True).over(wb),
-        )
     keep = {}
     for name in features:
-        m = F.col(f"_m_{name}")
-        if tolerance_sec is None:
-            keep[name] = m["v"]
-            if emit_match_ts:
-                keep[f"{name}__ts"] = m["__obs_ts"]
-        else:
-            fresh = (
-                F.col("_ts").cast("timestamp").cast("double")
-                - m["__match_ts"]
-            ) <= F.lit(float(tolerance_sec))
-            keep[name] = F.when(fresh, m["v"])
-            if emit_match_ts:
-                keep[f"{name}__ts"] = F.when(fresh, m["__obs_ts"])
-    out = out.filter(F.col("_side") == 1).withColumns(keep)
-    drop = (
-        ["_ts", "_side"]
-        + [f"_f_{n}" for n in features]
-        + [f"_m_{n}" for n in features]
-    )
-    return out.drop(*drop)
+        m = F.col(f"_b_{name}")
+        cols = {name: m["v"]}
+        if emit_match_ts:
+            cols[f"{name}__ts"] = m["__match_ts"]
+        if tolerance_sec is not None:
+            fresh = _age(m) <= F.lit(float(tolerance_sec))
+            cols = {k: F.when(fresh, c) for k, c in cols.items()}
+        keep.update(cols)
+    return out.withColumns(keep).drop(*temps)
 
 
 def leakage_audit(
@@ -494,12 +431,7 @@ def leakage_audit(
         ),
     )
     leak = F.col("_ots") > F.col("_lts")
-    # TIMESTAMP_NTZ needs the two-step epoch cast (session TZ pinned
-    # UTC, so the value is preserved — same as windows._epoch_seconds)
-    lead_sec = (
-        F.col("_ots").cast("timestamp").cast("long")
-        - F.col("_lts").cast("timestamp").cast("long")
-    )
+    lead_sec = _epoch_seconds(F.col("_ots")) - _epoch_seconds(F.col("_lts"))
     return melted.groupBy("feature").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("_ots").alias("n_matched"),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.operators.windows import _epoch_seconds
+
 
 def crawl_priority(
     churn: DataFrame,
@@ -46,13 +48,7 @@ def crawl_priority(
     )
     j = churn.join(pr, entity, "left")
     lam = F.col("change_rate") / F.col("mean_gap_sec")
-    from med_doi_feature_extraction_spark.operators.windows import (
-        _epoch_seconds,
-    )
-
-    age = F.lit(as_of).cast("timestamp").cast("long") - _epoch_seconds(
-        F.col("last_change_ts")
-    )
+    age = _epoch_seconds(F.lit(as_of)) - _epoch_seconds(F.col("last_change_ts"))
     p_changed = F.lit(1.0) - F.exp(-lam * age)
     return j.select(
         F.col(entity),

@@ -183,6 +183,9 @@ def fingerprint_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def tokens_col(text_col: str) -> F.Column:
+    """Whitespace token SET of lower(trim(text)) — the engine-portable
+    tokenization of the Jaccard operators and their oracles (DuckDB
+    twin: ``list_distinct(string_split_regex(lower(trim(x)), '\\s+'))``)."""
     return F.array_distinct(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     )

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from med_doi_feature_extraction_spark.operators.windows import entity_window
+
 
 def ewma(
     df: DataFrame,
@@ -102,11 +104,8 @@ def time_target_encode(
     exactly the prior. Plan shape: one window shuffle on ``key``, one
     1-row aggregate broadcast-joined back.
     """
-    order = [F.col(ts).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
-    w = (
-        Window.partitionBy(key)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, -1)
+    w = entity_window(key, ts, tiebreak).rowsBetween(
+        Window.unboundedPreceding, -1
     )
     prior = df.agg(F.avg(target).alias("_prior"))
     hist_sum = F.coalesce(F.sum(target).over(w), F.lit(0.0))

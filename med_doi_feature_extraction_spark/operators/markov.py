@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from med_doi_feature_extraction_spark.kernels.fixed import (
@@ -32,6 +32,7 @@ from med_doi_feature_extraction_spark.kernels.fixed import (
     fixed_abs_sql,
     fixed_sql,
 )
+from med_doi_feature_extraction_spark.operators.windows import entity_window
 
 
 def transition_matrix(
@@ -49,10 +50,7 @@ def transition_matrix(
     rate). Transitions never cross entities; NULL-typed events break
     the chain (neither side of a pair).
     """
-    order = [F.col(ts_col).asc()] + [
-        F.col(c).asc() for c in (tiebreak or [])
-    ]
-    w = Window.partitionBy(*entity_cols).orderBy(*order)
+    w = entity_window(entity_cols, ts_col, tiebreak)
     pairs = (
         df.filter(F.col(ts_col).isNotNull())
         .select(

@@ -50,23 +50,21 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.operators.windows import _epoch_seconds
+
 DEFAULT_BUCKET_SEC = 3600
-
-
-def _epoch_sec(col: Column) -> Column:
-    """Seconds since epoch, truncated — safe for bucket coverage
-    because the exact predicate re-checks full-resolution timestamps."""
-    return col.cast("timestamp").cast("long")
 
 
 def _bucketed_intervals(
     intervals: DataFrame, start_ts: str, end_ts: str, bucket_sec: int
 ) -> DataFrame:
-    sb = F.floor(_epoch_sec(F.col(start_ts)) / bucket_sec)
-    eb = F.floor(_epoch_sec(F.col(end_ts)) / bucket_sec)
+    # whole seconds: truncation is safe for bucket coverage because the
+    # exact predicate re-checks full-resolution timestamps
+    sb = F.floor(_epoch_seconds(F.col(start_ts)) / bucket_sec)
+    eb = F.floor(_epoch_seconds(F.col(end_ts)) / bucket_sec)
     # empty/inverted intervals ([s, e) with e <= s) match nothing; drop
     # them before the explode so sequence() never sees eb < sb
     return (
@@ -98,7 +96,7 @@ def interval_join(
     """
     on = list(on or [])
     pb = points.withColumn(
-        "_ij_bucket", F.floor(_epoch_sec(F.col(point_ts)) / bucket_sec)
+        "_ij_bucket", F.floor(_epoch_seconds(F.col(point_ts)) / bucket_sec)
     )
     ib = _bucketed_intervals(intervals, start_ts, end_ts, bucket_sec)
     joined = pb.join(ib, on + ["_ij_bucket"], "inner").filter(
@@ -130,8 +128,8 @@ def overlap_join(
     lb = _bucketed_intervals(left, left_start, left_end, bucket_sec)
     rb = _bucketed_intervals(right, right_start, right_end, bucket_sec)
     canonical = F.greatest(
-        F.floor(_epoch_sec(F.col(left_start)) / bucket_sec),
-        F.floor(_epoch_sec(F.col(right_start)) / bucket_sec),
+        F.floor(_epoch_seconds(F.col(left_start)) / bucket_sec),
+        F.floor(_epoch_seconds(F.col(right_start)) / bucket_sec),
     )
     joined = (
         lb.join(rb, on + ["_ij_bucket"], "inner")

@@ -47,6 +47,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.operators.windows import _epoch_seconds
+
 
 def resample(
     df: DataFrame,
@@ -67,7 +69,7 @@ def resample(
     gaps into ``<name>_ffill`` (backward-looking only).
     ``cell_col``: name of the emitted grid-cell timestamp column.
     """
-    epoch = F.col(ts).cast("timestamp").cast("long")
+    epoch = _epoch_seconds(F.col(ts))
     cell_sec = (F.floor(epoch / freq_sec) * freq_sec).cast("long")
     binned = (
         df.withColumn("_cell_sec", cell_sec)

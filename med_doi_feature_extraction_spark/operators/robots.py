@@ -54,6 +54,29 @@ def apply_robots(
     Output: ``*id_cols, url, robots_type, robots_prefix,
     robots_allowed`` (BIGINT 0/1; 1 when no rule matches).
     """
+    return _rep_verdict(
+        df, rules, url_col, id_cols, host_col, type_col, prefix_col,
+        F.col("_path").startswith(F.col("_prefix")),
+    )
+
+
+def _rep_verdict(
+    df: DataFrame,
+    rules: DataFrame,
+    url_col: str,
+    id_cols: Sequence[str],
+    host_col: str,
+    type_col: str,
+    prefix_col: str,
+    match: F.Column,
+    *rule_cols: F.Column,
+) -> DataFrame:
+    """The REP verdict shared by :func:`apply_robots` and
+    :func:`apply_robots_wildcards`, which differ only in ``match`` —
+    the predicate over ``_path`` and the broadcast rule row (``_host``,
+    ``_type``, ``_prefix`` plus any ``rule_cols`` computed once per
+    rule row). Winner per URL: ``max(struct(len, is_allow, prefix,
+    type))`` — longest rule, allow beats disallow on ties."""
     ids = list(id_cols)
     # the url column may itself be the id (the common corpus key case:
     # id_cols=("url",)) — emit it once, not twice
@@ -70,10 +93,11 @@ def apply_robots(
         F.col(host_col).alias("_host"),
         F.col(type_col).alias("_type"),
         F.col(prefix_col).alias("_prefix"),
+        *rule_cols,
     )
     matched = (
         u.join(F.broadcast(r), "_host")
-        .filter(F.col("_path").startswith(F.col("_prefix")))
+        .filter(match)
         .groupBy(*ids)
         .agg(
             F.max(
@@ -398,50 +422,10 @@ def apply_robots_wildcards(
     column pattern (non-codegen, bounded by matching-host rule
     fan-out — rules-per-host is small by nature).
     """
-    ids = list(id_cols)
-    extra_url = [] if "url" in ids else [F.col(url_col).alias("url")]
-    u = df.select(
-        *ids,
-        *extra_url,
-        url_host(F.col(url_col)).alias("_host"),
-        F.coalesce(
-            F.nullif(url_path(F.col(url_col)), F.lit("")), F.lit("/")
-        ).alias("_path"),
-    )
-    r = rules.select(
-        F.col(host_col).alias("_host"),
-        F.col(type_col).alias("_type"),
-        F.col(prefix_col).alias("_prefix"),
+    return _rep_verdict(
+        df, rules, url_col, id_cols, host_col, type_col, prefix_col,
+        F.regexp_like(F.col("_path"), F.col("_re")),
         rule_regex_col(F.col(prefix_col)).alias("_re"),
-    )
-    matched = (
-        u.join(F.broadcast(r), "_host")
-        .filter(F.regexp_like(F.col("_path"), F.col("_re")))
-        .groupBy(*ids)
-        .agg(
-            F.max(
-                F.struct(
-                    F.length("_prefix").alias("len"),
-                    (F.col("_type") == "allow")
-                    .cast("int")
-                    .alias("is_allow"),
-                    F.col("_prefix").alias("prefix"),
-                    F.col("_type").alias("type"),
-                )
-            ).alias("_best")
-        )
-    )
-    out = u.join(matched, ids, "left")
-    return out.select(
-        *ids,
-        *([] if "url" in ids else ["url"]),
-        F.col("_best.type").alias("robots_type"),
-        F.col("_best.prefix").alias("robots_prefix"),
-        F.when(F.col("_best").isNull(), F.lit(1))
-        .when(F.col("_best.is_allow") == 1, F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("robots_allowed"),
     )
 
 

@@ -42,11 +42,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _entity_window(entity: str | Sequence[str], ts: str, tiebreak: Sequence[str] | None):
-    part = [entity] if isinstance(entity, str) else list(entity)
-    order = [F.col(ts).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
-    return Window.partitionBy(*part).orderBy(*order)
+from med_doi_feature_extraction_spark.operators.windows import (
+    _entity_keys,
+    entity_window,
+)
 
 
 def scd2(
@@ -62,7 +61,7 @@ def scd2(
     entity: adds ``valid_from`` (= ``ts``) and ``valid_to`` (= next
     ``ts``, half-open; NULL — or ``end_of_time`` if given — for the
     current row)."""
-    w = _entity_window(entity, ts, tiebreak)
+    w = entity_window(entity, ts, tiebreak)
     out = df.withColumn(from_col, F.col(ts)).withColumn(
         to_col, F.lead(ts).over(w)
     )
@@ -94,8 +93,8 @@ def collapse_runs(
     timeline from its first snapshot with no gaps or overlaps.
     NULL-safe comparison: a NULL attribute equal to the predecessor's
     NULL does not break the run."""
-    part = [entity] if isinstance(entity, str) else list(entity)
-    w = _entity_window(entity, ts, tiebreak)
+    part = _entity_keys(entity)
+    w = entity_window(entity, ts, tiebreak)
 
     changed: Column = F.lit(False)
     for c in tracked:

@@ -41,6 +41,10 @@ from med_doi_feature_extraction_spark.kernels.fixed import (
     fixed_abs_sql,
     fixed_sql,
 )
+from med_doi_feature_extraction_spark.operators.windows import (
+    _epoch_seconds,
+    entity_window,
+)
 
 
 def trend_features(
@@ -57,10 +61,7 @@ def trend_features(
     ``ref_epoch``), ``r2`` (6 dp each; slope/intercept NULL when all
     observations share one timestamp, r2 additionally NULL when the
     value is constant). NULL ts/value rows dropped."""
-    t = (
-        F.col(ts_col).cast("timestamp").cast("long")
-        - F.lit(int(ref_epoch))
-    )
+    t = _epoch_seconds(F.col(ts_col)) - F.lit(int(ref_epoch))
     v = F.col(val_col).cast("double")
     y = fixed(v, val_scale)
     rows = df.filter(
@@ -183,13 +184,8 @@ def burstiness(
     integer minutes upstream). Every output is one fixed-order
     double expression, micro-rounded.
     """
-    from pyspark.sql.window import Window
-
-    order = [F.col(ts_col).asc()] + [
-        F.col(c).asc() for c in (tiebreak or [])
-    ]
-    w = Window.partitionBy(*entity_cols).orderBy(*order)
-    t = F.col(ts_col).cast("timestamp").cast("long")
+    w = entity_window(entity_cols, ts_col, tiebreak)
+    t = _epoch_seconds(F.col(ts_col))
     gap = (t - F.lag(t).over(w)).cast("long")
     rows = df.filter(F.col(ts_col).isNotNull()).select(
         *entity_cols, gap.alias("_g")
@@ -304,14 +300,9 @@ def autocorrelation(
     exact; envelope ``n·max|y·scale|² < 2⁶³``. The correlation is
     ONE fixed-order double expression, micro-rounded.
     """
-    from pyspark.sql.window import Window
-
     if lag < 1:
         raise ValueError("lag must be >= 1")
-    order = [F.col(ts_col).asc()] + [
-        F.col(c).asc() for c in (tiebreak or [])
-    ]
-    w = Window.partitionBy(*entity_cols).orderBy(*order)
+    w = entity_window(entity_cols, ts_col, tiebreak)
     y = fixed(F.col(val_col).cast("double"), val_scale)
     rows = (
         df.filter(F.col(ts_col).isNotNull())
@@ -581,8 +572,7 @@ def cusum_changepoints(
     if n_base < 1:
         raise ValueError("n_base must be >= 1")
     ents = list(entity_cols)
-    order = [F.col(ts_col).asc(), *[F.col(t).asc() for t in tiebreak]]
-    w = Window.partitionBy(*ents).orderBy(*order)
+    w = entity_window(ents, ts_col, tiebreak)
     w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
 

@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from med_doi_feature_extraction_spark.operators.dedup import tokens_col
+
 
 def _order_cols(ts: str, tiebreak: Sequence[str] | None) -> list[Column]:
     return [F.col(ts).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
@@ -40,9 +42,13 @@ def _epoch_seconds(col: Column) -> Column:
     return col.cast("timestamp").cast("long")
 
 
+def _entity_keys(entity: str | Sequence[str]) -> list[str]:
+    return [entity] if isinstance(entity, str) else list(entity)
+
+
 def entity_window(entity: str | Sequence[str], ts: str, tiebreak: Sequence[str] | None = None):
-    part = [entity] if isinstance(entity, str) else list(entity)
-    return Window.partitionBy(*part).orderBy(*_order_cols(ts, tiebreak))
+    """Partition by the entity key(s), order by ``(ts, *tiebreak)`` asc."""
+    return Window.partitionBy(*_entity_keys(entity)).orderBy(*_order_cols(ts, tiebreak))
 
 
 def with_lag_lead(
@@ -116,7 +122,7 @@ def sessionize(
         }
     )
     df = df.withColumn("session_id", F.sum("_new_session").over(wcum).cast("long"))
-    w_sess = entity_window([entity, "session_id"] if isinstance(entity, str) else [*entity, "session_id"], ts, tiebreak)
+    w_sess = entity_window([*_entity_keys(entity), "session_id"], ts, tiebreak)
     return df.withColumn("session_seq", F.row_number().over(w_sess)).drop("_new_session")
 
 
@@ -168,7 +174,7 @@ def rolling(
         tag = f"r{n_rows}"
     else:
         w = (
-            Window.partitionBy(*( [entity] if isinstance(entity, str) else list(entity)))
+            Window.partitionBy(*_entity_keys(entity))
             .orderBy(_epoch_seconds(F.col(ts)))
             .rangeBetween(-range_seconds, 0)
         )
@@ -199,11 +205,20 @@ def dedupe_latest(
     )
 
 
-def _tokens_col(text: str) -> Column:
-    """Whitespace token SET of lower(trim(text)) — the engine-portable
-    tokenization shared with dedup.jaccard oracles (DuckDB twin:
-    ``list_distinct(string_split_regex(lower(trim(x)), '\\s+'))``)."""
-    return F.array_distinct(F.split(F.lower(F.trim(F.col(text))), r"\s+"))
+def _prev_jaccard(
+    df: DataFrame, entity: str, ts: str, text: str, tiebreak: Sequence[str] | None
+) -> tuple[DataFrame, Column]:
+    """Stage ``(entity, ts, _toks, *tiebreak)`` and return it with the
+    token-set Jaccard to the entity's previous snapshot (NULL for the
+    first) as a Column over the staged frame."""
+    staged = df.select(
+        F.col(entity), F.col(ts), tokens_col(text).alias("_toks"),
+        *[F.col(c) for c in (tiebreak or [])],
+    )
+    prev = F.lag(F.col("_toks")).over(entity_window(entity, ts, tiebreak))
+    inter = F.size(F.array_intersect(prev, F.col("_toks")))
+    union = F.size(prev) + F.size(F.col("_toks")) - inter
+    return staged, inter.cast("double") / union
 
 
 def snapshot_drift(
@@ -235,16 +250,7 @@ def snapshot_drift(
     UDF, no second pass over the text. Hot entities are bounded by
     snapshots-per-url exactly like every window here.
     """
-    w = entity_window(entity, ts, tiebreak)
-    toks = _tokens_col(text)
-    staged = df.select(
-        F.col(entity), F.col(ts), toks.alias("_toks"),
-        *[F.col(c) for c in (tiebreak or [])],
-    )
-    prev = F.lag(F.col("_toks")).over(w)
-    inter = F.size(F.array_intersect(prev, F.col("_toks")))
-    union = F.size(prev) + F.size(F.col("_toks")) - inter
-    j = inter.cast("double") / union
+    staged, j = _prev_jaccard(df, entity, ts, text, tiebreak)
     return staged.select(
         F.col(entity),
         F.col(ts),
@@ -274,16 +280,8 @@ def drift_summary(
     all keyed on the entity — one exchange shared by all three
     (windows sort once; AQE handles hot hosts).
     """
-    w = entity_window(entity, ts, tiebreak)
-    toks = _tokens_col(text)
-    staged = df.select(
-        F.col(entity), F.col(ts), toks.alias("_toks"),
-        *[F.col(c) for c in (tiebreak or [])],
-    )
-    prev = F.lag(F.col("_toks")).over(w)
-    inter = F.size(F.array_intersect(prev, F.col("_toks")))
-    union = F.size(prev) + F.size(F.col("_toks")) - inter
-    drift = F.lit(1.0) - inter.cast("double") / union
+    staged, j = _prev_jaccard(df, entity, ts, text, tiebreak)
+    drift = F.lit(1.0) - j
     rows = staged.select(
         F.col(entity), F.col(ts), drift.alias("_d"),
         F.round(drift, 6).alias("_d6"),
@@ -393,13 +391,9 @@ def cumulative_distinct(
     per-entity history is the only sort state. No joins, no UDF,
     no per-row collections.
     """
-    part = [entity] if isinstance(entity, str) else list(entity)
-    order = _order_cols(ts, tiebreak)
-    w_first = Window.partitionBy(*part, val_col).orderBy(*order)
-    w_cum = (
-        Window.partitionBy(*part)
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
+    w_first = entity_window([*_entity_keys(entity), val_col], ts, tiebreak)
+    w_cum = entity_window(entity, ts, tiebreak).rowsBetween(
+        Window.unboundedPreceding, 0
     )
     flag = F.when(
         F.col(val_col).isNotNull()

@@ -8,8 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from med_doi_feature_extraction_spark.operators.asof import (
+    asof_join_horizons,
     asof_join_sorted,
     asof_join_window,
+    feature_matrix,
 )
 from med_doi_feature_extraction_spark.sources.pages import domain_of_url
 
@@ -305,6 +307,30 @@ class TestFeatureMatrix:
         # 1800s → fresh (<=). exact-ts match always fresh.
         assert got[(1, "2024-01-01 10:00:00")] == (None, 7.0)
         assert got[(1, "2024-01-01 12:00:00")] == (20.0, None)
+        # with provenance: a stale match drops the value AND its ts, a
+        # fresh one keeps both
+        out = feature_matrix(
+            labels,
+            {"a": (fa, "ts", "v"), "b": (fb, "ts", "v")},
+            "uid",
+            "ts",
+            tolerance_sec=1800,
+            emit_match_ts=True,
+        )
+        got = {
+            (r["uid"], str(r["ts"])): tuple(
+                None if r[c] is None else str(r[c])
+                for c in ("a", "a__ts", "b", "b__ts")
+            )
+            for r in out.collect()
+        }
+        assert got[(1, "2024-01-01 10:00:00")] == (
+            None, None, "7.0", "2024-01-01 09:30:00"
+        )
+        assert got[(1, "2024-01-01 12:00:00")] == (
+            "20.0", "2024-01-01 12:00:00", None, None
+        )
+        assert got[(2, "2024-01-01 10:00:00")] == (None,) * 4
 
     def test_matches_n_single_asof_joins(self, spark):
         """Matrix == composing asof_join_window once per feature."""
@@ -344,22 +370,89 @@ class TestFeatureMatrix:
         b = sorted(map(tuple, ref.select(*key).collect()))
         assert a == b
 
-    def test_single_exchange(self, spark):
-        """N features cost ONE shuffle of the spine, not N+1."""
-        from med_doi_feature_extraction_spark.operators.asof import (
-            feature_matrix,
+
+@pytest.mark.parametrize(
+    "build, n_exchanges",
+    [
+        ("backward", 2),
+        ("forward", 2),
+        ("nearest", 2),
+        ("horizons", 2),
+        ("feature_matrix", 1),
+    ],
+)
+def test_spine_exchange_pin(spark, build, n_exchanges):
+    """Executed-plan pin of the union-and-window builds: the spine is
+    shuffled ONCE on the key whatever the direction, the number of
+    horizons or of feature tables (N features cost one exchange, not
+    N+1); the single-table builds add one small-side exchange for the
+    right-side tie dedup."""
+    labels, fa, fb = TestFeatureMatrix()._inputs(spark)
+    if build == "feature_matrix":
+        out = feature_matrix(
+            labels, {"a": (fa, "ts", "v"), "b": (fb, "ts", "v")}, "uid", "ts"
+        )
+    elif build == "horizons":
+        out = asof_join_horizons(
+            labels, fa, "uid", "ts", "ts", ["v"], {"h": 3600.0, "d": 86400.0}
+        )
+    else:
+        out = asof_join_window(
+            labels, fa, "uid", "ts", "ts", ["v"], direction=build
+        )
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == n_exchanges, plan
+
+
+_NULL_RIGHT = [
+    (1, "2024-01-01 09:00:00", 1.0),
+    (1, "2024-01-01 10:00:00", None),
+    (1, "2024-01-01 11:00:00", 3.0),
+]
+
+
+@pytest.mark.parametrize(
+    "build, probe, control, control_v",
+    [
+        ("backward", "10:30", "09:30", 1.0),
+        ("forward", "09:30", "10:30", 3.0),
+        ("nearest", "10:05", "10:50", 3.0),
+        ("horizons", "10:30", "09:30", 1.0),
+        ("feature_matrix", "10:30", "09:30", 1.0),
+    ],
+)
+def test_null_valued_match_is_the_answer(
+    spark, build, probe, control, control_v
+):
+    """When the best-matching right row's value is NULL, that NULL is
+    the answer: no fallback to an older (or later) non-NULL row. The
+    control row's match is non-NULL, so a fallback cannot hide."""
+
+    def frame(rows, schema):
+        return spark.createDataFrame(rows, schema).withColumn(
+            "ts", F.to_timestamp("ts")
         )
 
-        labels, fa, fb = self._inputs(spark)
-        out = feature_matrix(
-            labels,
-            {"a": (fa, "ts", "v"), "b": (fb, "ts", "v")},
-            "uid",
-            "ts",
+    right = frame(_NULL_RIGHT, "uid: long, ts: string, v: double")
+    left = frame(
+        [
+            (1, f"2024-01-01 {probe}:00", "probe"),
+            (1, f"2024-01-01 {control}:00", "control"),
+        ],
+        "uid: long, ts: string, tag: string",
+    )
+    if build == "horizons":
+        out = asof_join_horizons(
+            left, right, "uid", "ts", "ts", ["v"], {"h": 7200.0}
+        ).withColumnRenamed("v_h", "v")
+    elif build == "feature_matrix":
+        out = feature_matrix(left, {"v": (right, "ts", "v")}, "uid", "ts")
+    else:
+        out = asof_join_window(
+            left, right, "uid", "ts", "ts", ["v"], direction=build
         )
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        n_shuffles = plan.count("Exchange hashpartitioning")
-        assert n_shuffles == 1, plan
+    got = {r["tag"]: r["v"] for r in out.collect()}
+    assert got == {"probe": None, "control": control_v}
 
 
 class TestLeakageAudit:
